@@ -1,17 +1,28 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
+Stateless protocol: the 20 headline entries run in PASSES round-robin
+passes whose order alternates, so no entry runs twice in a row. Every
+timed run is honest-cold: tracked persists are released after it,
+outside the timed region. An entry's official time is the median of its
+runs. The extras run once each, cold. Nothing from earlier runs is read.
+
 Prints ONE JSON line:
-{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": "headline_queries_total_wall", "value": <sum of medians>,
+ "unit": "sec", "queries": {name: median}, "sf": ..., "load_avg_start": ...,
+ "load_avg_end": ..., "retried": {}, "first_attempt_total": <pass-1 sum>,
+ "spread": {name: max - min over the passes}}
+and writes the per-run samples plus the extras to a sidecar JSON file.
 """
 
 from __future__ import annotations
 
-import hashlib
+import functools
 import json
 import os
-import re
+import statistics
 import sys
 import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -21,14 +32,7 @@ from open_ftth_relational_projector_spark.cache import (  # noqa: E402
     release_tracked_persists,
 )
 
-# A warm floor older than this many days no longer min-carries on a
-# SPARK_GRAFT_WARM_BEST3 refresh (r12 verdict #8): floors stamped in a
-# faster epoch of the host would otherwise keep the retry trigger firing
-# forever. The floor is REPLACED by the refresh pass's own best (still
-# min'd with that run's cold), not dropped.
-_FLOOR_MAX_AGE_DAYS = 10
-
-_LOAD_AVG_START: float | None = None  # stamped at main() entry for the sidecar
+PASSES = 3
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -158,8 +162,7 @@ EXTRA_QUERIES = [
     "emb_lsh_twin_agreement",
     "knn_lsh_twin_agreement",
     "knn_ivf_twin_agreement",
-    # round-8 classifier/rule-induction family (cold tracked; warm floors
-    # measured on the next idle SPARK_GRAFT_WARM_BEST3=1 run)
+    # round-8 classifier/rule-induction family
     "logreg_lang_classifier",
     "logreg_score_histogram",
     "logreg_crossval_kfold",
@@ -168,15 +171,13 @@ EXTRA_QUERIES = [
     "tree2_quality_rules",
     "woe_feature_audit",
     "logreg_per_source",
-    # round-9: boosted-stump rule list (cold tracked; warm floors measured
-    # on the next idle SPARK_GRAFT_WARM_BEST3=1 run)
+    # round-9: boosted-stump rule list
     "adaboost_quality_rounds",
     "adaboost_margin_report",
     "logreg_isotonic_calibration",
     "adaboost_per_source_rounds",
     "adaboost_per_source_margins",
-    # round-10: bucketed Naive Bayes (cold tracked; warm floors measured
-    # on the next idle SPARK_GRAFT_WARM_BEST3=1 run)
+    # round-10: bucketed Naive Bayes
     "naive_bayes_quality",
     "naive_bayes_bucket_likelihoods",
 ]
@@ -260,129 +261,57 @@ def bench_streaming_catchup(spark, scale: int = 20) -> tuple[str, float]:
                 persist_full=False,
             )
         elapsed = time.perf_counter() - t0
-    # r13: drop the envelope cache once drained — a leaked env cache made
-    # every re-run of this bench (retry, floors) read a warm local
-    # relation via CacheManager plan-dedupe ("Block rdd_* already exists")
+    # drop the envelope cache once drained — a leaked env cache made every
+    # later pass of this bench read a warm local relation via CacheManager
+    # plan-dedupe ("Block rdd_* already exists")
     env.unpersist(False)
     return "streaming_catchup_4batches", elapsed
 
 
-def _plan_signature(df) -> str:
-    """Stable fingerprint of a query's OPTIMIZED plan, used to invalidate
-    carried-forward warm_best3 numbers when the query is rewritten (r7
-    advisor: a pre-rewrite warm floor silently posed as the regression
-    baseline until someone re-ran SPARK_GRAFT_WARM_BEST3=1). Session-
-    varying tokens (expression ids ``#123``, plan ids, object addresses)
-    are normalized away so the signature changes exactly when the plan
-    SHAPE/expressions change. Over-invalidation on cosmetic plan-text
-    drift is fine — a nulled warm number just gets re-measured."""
-    # r12: compute the optimized half by running the optimizer DIRECTLY on
-    # the analyzed plan, bypassing CacheManager substitution. The previous
-    # leaf-level canonicalization (kept below as defense) closed the
-    # single-leaf case but not MULTI-NODE cache-covered subtrees: another
-    # query's persist of scattered(documents) covers repartition+scan, so
-    # in-protocol the InMemoryRelation replaced TWO lines with one and
-    # simhash_near_dups' sig still flapped fresh-session vs in-protocol
-    # (verified both ways this round). With no cache substitution the sig
-    # is order-invariant by construction.
-    jqe = df._jdf.queryExecution()  # noqa: SLF001
+def run_passes(
+    thunks: dict[str, Callable[[], float]],
+    release: Callable[[], object],
+) -> dict[str, list[float]]:
+    """Run every thunk PASSES times, round-robin; returns each entry's
+    seconds in pass order. Odd passes run the order reversed (rotated by
+    one where a pass would otherwise start with the entry the previous pass
+    ended on), so no entry runs twice in a row and each sees different
+    neighbours. ``release`` runs after every timed run."""
+    names = list(thunks)
+    samples: dict[str, list[float]] = {name: [] for name in names}
+    last = None
+    for p in range(PASSES):
+        order = names if p % 2 == 0 else names[::-1]
+        if order[0] == last:
+            order = order[1:] + order[:1]
+        for name in order:
+            samples[name].append(thunks[name]())
+            release()
+        last = order[-1]
+    return samples
+
+
+def summarize(samples: dict[str, list[float]]) -> dict:
+    """Official per-entry medians, their total, the pass-1 total and the
+    per-entry spread (max - min) of ``run_passes`` samples."""
+    queries = {n: round(statistics.median(s), 3) for n, s in samples.items()}
+    return {
+        "value": round(sum(queries.values()), 3),
+        "queries": queries,
+        "first_attempt_total": round(sum(s[0] for s in samples.values()), 3),
+        "spread": {n: round(max(s) - min(s), 3) for n, s in samples.items()},
+    }
+
+
+def _load_avg() -> float | None:
     try:
-        txt = (
-            df.sparkSession._jsparkSession.sessionState()  # noqa: SLF001
-            .optimizer()
-            .execute(jqe.analyzed())
-            .toString()
-        )
-    except Exception:  # pragma: no cover — py4j surface drift
-        txt = jqe.optimizedPlan().toString()
-    # A persist()-cached subtree prints under its InMemoryRelation node
-    # whatever EXECUTION STATE / CACHE SUBSTITUTION it happens to hold
-    # when the sig is computed: unexecuted = isFinalPlan=false + the
-    # initial subtree; executed = isFinalPlan=true + a duplicated
-    # "== Final Plan ==" / "== Initial Plan ==" pair wrapped in
-    # {Result,Shuffle,TableCache,Broadcast}QueryStage nodes — and
-    # CacheManager dedupes cached frames session-wide, so the embedded
-    # tree can even swap between cache-over-cache and cache-over-scan
-    # forms depending on what ran earlier in the session (measured r10:
-    # THREE distinct sigs for byte-identical curation_decisions code —
-    # fresh-session, in-protocol, post-warm-rerun). None of that is plan
-    # shape. Canonicalize by PRUNING every subtree below an
-    # InMemoryRelation line (its output schema stays in the sig): cached
-    # frames then fingerprint like localCheckpoint'd ones already do
-    # (LogicalRDD leaves carry no embedded plan). The cost is symmetric
-    # with the checkpoint convention: a rewrite that only changes how a
-    # cached/checkpointed intermediate is COMPUTED no longer invalidates
-    # floors — min-carry keeps them honest for speedups; document slower
-    # upstream rewrites in BENCH_NOTES when making them.
-    pruned: list[str] = []
-    skip_indent: int | None = None
-    for line in txt.splitlines():
-        stripped = re.sub(r"^[\s:+\-*]+", "", line)
-        if not stripped:
-            continue
-        indent = len(line) - len(stripped)
-        if skip_indent is not None:
-            if indent > skip_indent:
-                continue
-            skip_indent = None
-        if "InMemoryRelation" in stripped:
-            skip_indent = indent
-            # r12 (closing the r11 residual note): a scan COVERED BY ANOTHER
-            # QUERY'S persist fingerprints as an InMemoryRelation line
-            # in-protocol but as a parquet Relation line in a fresh session
-            # (observed: dsir_doc_weights' documents scan) — the sig was
-            # cache-POSITION-dependent, so a bench reorder would have
-            # invalidated its floor. Canonicalize BOTH leaf forms to one
-            # token; the analyzed half below (computed before CacheManager
-            # substitution) still disambiguates what is actually computed.
-            stripped = re.sub(
-                r"^InMemoryRelation \[([^\]]*)\].*", r"Relation [\1] <scan>",
-                stripped,
-            )
-        else:
-            stripped = re.sub(
-                r"^Relation \[([^\]]*)\] parquet$", r"Relation [\1] <scan>",
-                stripped,
-            )
-        pruned.append(stripped)
-    txt = "\n".join(pruned)
-    # The pruning above makes the OPTIMIZED-plan half of the signature
-    # blind to rewrites of how a cached intermediate is COMPUTED (r10
-    # advisor): a slower upstream rewrite would carry the stale faster
-    # floor as its regression baseline, guarded only by a BENCH_NOTES
-    # convention. Close the hole by mixing in the ANALYZED logical plan
-    # — computed BEFORE CacheManager substitution, so it carries every
-    # cached intermediate's full unexecuted subtree (exactly the text
-    # the pruning drops) while holding none of the execution state
-    # (QueryStage / isFinalPlan / cache-over-cache forms) that made the
-    # raw optimized text flap. localCheckpoint'd intermediates remain
-    # LogicalRDD leaves in BOTH halves — the documented checkpoint
-    # convention is unchanged.
-    ana = df._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
-    txt = txt + "\n== analyzed ==\n" + ana
-    # ONE normalization pass over the concatenated halves (r11 review:
-    # the exprId/lambda regexes were previously applied to each half
-    # separately — duplicated patterns that could drift apart):
-    # expression ids ``#123``; higher-order-function lambda variables,
-    # whose SESSION-GLOBAL counter (lambda x_20#) #-stripping misses —
-    # registering new catalog entries shifted the counter and flapped
-    # curation_decisions' signature between identical-code runs (r9);
-    # and the session/plan-varying tokens below.
-    txt = re.sub(r"#\d+[L]?", "#", txt)
-    txt = re.sub(r"(lambda [A-Za-z]+)_\d+", r"\1_", txt)
-    txt = re.sub(r"isFinalPlan=\w+", "isFinalPlan=", txt)
-    txt = re.sub(r"\*\(\d+\)", "*", txt)
-    txt = re.sub(r"plan_id=\d+", "plan_id=", txt)
-    txt = re.sub(r"@[0-9a-f]{6,}", "@", txt)
-    return hashlib.md5(txt.encode()).hexdigest()[:12]
+        return round(os.getloadavg()[0], 2)
+    except OSError:
+        return None
 
 
 def main() -> None:
-    global _LOAD_AVG_START
-    try:
-        _LOAD_AVG_START = round(os.getloadavg()[0], 2)
-    except OSError:
-        _LOAD_AVG_START = None
+    load_avg_start = _load_avg()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     # console progress bars write stage-fragment lines that can share a
@@ -417,12 +346,39 @@ def main() -> None:
     spark.range(1_000).mapInPandas(lambda it: it, "id long").count()
     bench_domain_projection(spark, scale=2)
     bench_streaming_catchup(spark, scale=2)
-    release_tracked_persists(spark)  # warm-up caches must not leak (r13)
+    release_tracked_persists(spark)  # warm-up caches must not leak
 
-    # r13: non-default scale factors keep their own sidecar (floors are
-    # per-SF numbers; an sf1 evidence run must not overwrite — or feed the
-    # retry rule of — the driver's sf0.1 floor set). The driver contract
-    # path (sf0.1) is byte-identical to before.
+    def timed(fn) -> Callable[[], float]:
+        def run() -> float:
+            t0 = time.perf_counter()
+            # noop sink, not count(): count() lets Catalyst prune unused
+            # output columns (and even eliminate a trailing unique-key outer
+            # join entirely); the noop writer forces full evaluation of
+            # every output column with no sink cost
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return time.perf_counter() - t0
+
+        return run
+
+    thunks = {name: timed(SPARK_QUERIES[name]) for name in BENCH_QUERIES}
+    thunks["domain_projection_8tables"] = lambda: bench_domain_projection(spark)[1]
+    thunks["streaming_catchup_4batches"] = lambda: bench_streaming_catchup(spark)[1]
+    # outside the timed region: query-scoped catalog caches and the composed
+    # benches' project_all/dehydrate caches die here, so the next run is cold
+    release = functools.partial(release_tracked_persists, spark)
+    samples = run_passes(thunks, release)
+    summary = summarize(samples)
+
+    extra: dict[str, float] = {}
+    for name in EXTRA_QUERIES:
+        extra[name] = round(timed(SPARK_QUERIES[name])(), 3)
+        release()
+
+    load_avg_end = _load_avg()
+    # A final line carrying every extra outgrows a tail capture of stdout;
+    # the extras and the per-pass samples go to a sidecar file so the
+    # printed line stays compact (~2 KB). Non-default scale factors keep
+    # their own sidecar, so an sf1 run never overwrites the sf0.1 record.
     sidecar_name = (
         "BENCH_EXTRA.json" if abs(sf - 0.1) < 1e-12
         else f"BENCH_EXTRA_sf{sf:g}.json"
@@ -430,301 +386,36 @@ def main() -> None:
     sidecar = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), sidecar_name
     )
-    try:
-        with open(sidecar) as f:
-            prior_sidecar = json.load(f)
-    except (OSError, ValueError):
-        prior_sidecar = {}
-
-    # Load-robust headline retry (round-11 verdict #3): two driver lines in
-    # a row read 1.7-2.4x the true floor purely from host load. Any headline
-    # query whose in-sequence cold measures >1.5x its stamped warm floor
-    # (same plan signature) is re-run ONCE in-process and the min kept as
-    # the official number — bounded at <=1 extra execution per headline
-    # entry, fires only under load, and the first-attempt number is
-    # preserved in the printed line's "retried" map. Floors come from the
-    # committed sidecar's headline_queries section (stamped on idle
-    # SPARK_GRAFT_WARM_BEST3=1 runs, min-carried like the extras).
-    # r13 (r12 verdict #1): the retry is now HONEST-COLD — every timed
-    # run (first attempt, retry, floor passes) is followed by a
-    # release_tracked_persists() outside the timed region, so a rerun can
-    # never read persisted intermediates the previous attempt left behind
-    # (catalog persists are tracked session-wide since r13; the composed
-    # benches' project_all/dehydrate caches and the catch-up env cache
-    # are released/unpersisted the same way). min(first, retry) is
-    # therefore two same-methodology cold measurements; the first attempt
-    # is additionally preserved in "retried" and the official line now
-    # carries first_attempt_total for a methodology-stable series.
-    headline_floor: dict[str, tuple[float, str | None]] = {}
-    for qname, rec in prior_sidecar.get("headline_queries", {}).items():
-        if isinstance(rec, dict) and rec.get("warm_best3") is not None:
-            headline_floor[qname] = (rec["warm_best3"], rec.get("plan_sig"))
-
-    timings: dict[str, float] = {}
-    retried: dict[str, float] = {}
-    headline_sig: dict[str, str | None] = {}
-
-    def _retry_min(name: str, first: float, sig, rerun) -> float:
-        floor = headline_floor.get(name)
-        if floor is None or floor[1] != sig or first <= 1.5 * floor[0]:
-            return first
-        retried[name] = first
-        return min(first, rerun())
-
-    for name in BENCH_QUERIES:
-        fn = SPARK_QUERIES[name]
-
-        def _run(fn=fn):
-            t0 = time.perf_counter()
-            # noop sink since r5: count() let Catalyst prune unused output
-            # columns, so map-only queries (simhash_fingerprints: the whole
-            # fingerprint expression; running_value_per_user: the window)
-            # were partially skipped. The noop writer forces every output
-            # column to evaluate with no sink cost — honest wall clock,
-            # one-time step change documented with a dual measurement in
-            # BENCH_NOTES (r1-r4 totals remain comparable to each other
-            # under the old protocol).
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            # outside the timed region: query-scoped catalog caches die
-            # here so the NEXT measurement (retry or next query) is cold
-            release_tracked_persists(spark)
-            return dt
-
-        first = _run()
-        headline_sig[name] = _plan_signature(fn(spark, sf_dir))
-        release_tracked_persists(spark)  # sig construction may persist too
-        timings[name] = round(
-            _retry_min(name, first, headline_sig[name], _run), 3
-        )
-
-    # the two composed benches carry no single plan; their floors key on
-    # plan_sig None (a code rewrite cannot auto-invalidate them — worst
-    # case is one spurious or missed retry, bounded and documented)
-    def _run_composed(fn_b):
-        sec = fn_b()
-        release_tracked_persists(spark)  # honest-cold rerun (r13)
-        return sec
-
-    pname = "domain_projection_8tables"
-    psec = _run_composed(lambda: bench_domain_projection(spark)[1])
-    headline_sig[pname] = None
-    timings[pname] = round(
-        _retry_min(
-            pname, psec, None,
-            lambda: _run_composed(lambda: bench_domain_projection(spark)[1]),
-        ),
-        3,
-    )
-    sname = "streaming_catchup_4batches"
-    ssec = _run_composed(lambda: bench_streaming_catchup(spark)[1])
-    headline_sig[sname] = None
-    timings[sname] = round(
-        _retry_min(
-            sname, ssec, None,
-            lambda: _run_composed(lambda: bench_streaming_catchup(spark)[1]),
-        ),
-        3,
-    )
-
-    total = round(sum(timings.values()), 3)
-
-    extra: dict[str, float] = {}
-    plan_sig: dict[str, str] = {}
-    for name in EXTRA_QUERIES:
-        fn = SPARK_QUERIES[name]
-        t0 = time.perf_counter()
-        # noop sink, not count(): count() lets Catalyst prune every column
-        # and even eliminate a trailing unique-key outer join entirely
-        # (dup_substring_spans timed as a bare table count) — the noop
-        # writer forces full evaluation of every output column with no
-        # sink cost. The headline set switched too (same session).
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        extra[name] = round(time.perf_counter() - t0, 3)
-        plan_sig[name] = _plan_signature(df)
-        release_tracked_persists(spark)  # query-scoped caches (r13)
-
-    # Sidecar schema (round-6 verdict #4): each extra query carries a
-    # cold+warm PAIR so a single contended in-sequence number can't read
-    # as the query's cost (cold runs swing 2-4x with host load; see
-    # BENCH_NOTES). "cold" refreshes every run (the driver's in-sequence
-    # number); "warm_best3" is the min of 3 back-to-back re-runs, measured
-    # only when SPARK_GRAFT_WARM_BEST3=1 (an idle-host local run — too
-    # expensive for every driver round) and carried forward from the
-    # committed sidecar otherwise.
-    # each warm number carries the date it was MEASURED plus the plan
-    # signature it was measured UNDER: a carried-forward floor from before
-    # a query rewrite is dropped automatically (plan_sig mismatch ⇒ the
-    # measured plan no longer exists), not just visibly stale
-    prior_warm: dict[str, tuple[float, str | None]] = {}
-    invalidated: list[str] = []
-    for qname, rec in prior_sidecar.get("extra_queries", {}).items():
-        if isinstance(rec, dict) and rec.get("warm_best3") is not None:
-            if rec.get("plan_sig") != plan_sig.get(qname):
-                invalidated.append(qname)
-                continue
-            prior_warm[qname] = (rec["warm_best3"], rec.get("warm_recorded"))
-    # headline floors (r12): same min-carry scheme, keyed on the headline
-    # plan sigs computed above; they feed the in-sequence retry rule
-    prior_hwarm: dict[str, tuple[float, str | None]] = {}
-    for qname, rec in prior_sidecar.get("headline_queries", {}).items():
-        if isinstance(rec, dict) and rec.get("warm_best3") is not None:
-            if rec.get("plan_sig") != headline_sig.get(qname):
-                invalidated.append(f"headline:{qname}")
-                continue
-            prior_hwarm[qname] = (rec["warm_best3"], rec.get("warm_recorded"))
-    warm: dict[str, tuple[float, str | None]] = dict(prior_warm)
-    hwarm: dict[str, tuple[float, str | None]] = dict(prior_hwarm)
-    if os.environ.get("SPARK_GRAFT_WARM_BEST3") == "1":
-        stamp = time.strftime("%Y-%m-%d")
-
-        def _floor_age_days(recorded: str | None) -> float:
-            if not recorded:
-                return float("inf")
-            try:
-                then = time.mktime(time.strptime(recorded, "%Y-%m-%d"))
-            except ValueError:
-                return float("inf")
-            return (time.time() - then) / 86400.0
-
-        def _stamp_floor(dest, prior_map, name, best, cold):
-            # the run's own in-sequence cold participates too: a query
-            # whose internal persists interact with end-of-session cache
-            # pressure (curation_decisions, r9) can measure a best-of-3
-            # ABOVE its cold — a "floor" above the same run's cold is a
-            # contradiction
-            best = round(min(best, cold if cold is not None else best), 3)
-            # a floor is the best KNOWN wall under the current plan: keep
-            # the carried value when it beats this session's best-of-3 (a
-            # refresh on a not-quite-idle host must not RAISE floors — an
-            # r9 run with 5-min load ~4 inflated 32 of them before this
-            # min; plan changes still invalidate via plan_sig above).
-            # r13 (r12 verdict #8): a floor older than _FLOOR_MAX_AGE_DAYS
-            # no longer min-carries — it is superseded by this refresh
-            # pass's own measurement, so the retry trigger cannot keep
-            # comparing against a floor from a faster epoch of the host.
-            prior = prior_map.get(name)
-            if (
-                prior is not None
-                and prior[0] <= best
-                and _floor_age_days(prior[1]) <= _FLOOR_MAX_AGE_DAYS
-            ):
-                dest[name] = prior
-            else:
-                dest[name] = (best, stamp)
-
-        def _noop_runner(fn):
-            def run() -> float:
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                # r13: floors use the same honest-cold methodology as the
-                # in-sequence runs — catalog caches die between re-runs
-                release_tracked_persists(spark)
-                return dt
-
-            return run
-
-        def _best3(runner) -> float:
-            return min(runner() for _ in range(3))
-
-        for name in EXTRA_QUERIES:
-            _stamp_floor(
-                warm, prior_warm, name,
-                _best3(_noop_runner(SPARK_QUERIES[name])), extra.get(name),
-            )
-        for name in BENCH_QUERIES:
-            _stamp_floor(
-                hwarm, prior_hwarm, name,
-                _best3(_noop_runner(SPARK_QUERIES[name])), timings.get(name),
-            )
-        for name, fn_b in (
-            ("domain_projection_8tables", lambda: bench_domain_projection(spark)[1]),
-            ("streaming_catchup_4batches", lambda: bench_streaming_catchup(spark)[1]),
-        ):
-            _stamp_floor(
-                hwarm, prior_hwarm, name,
-                _best3(lambda fb=fn_b: _run_composed(fb)), timings.get(name),
-            )
-
-    # Round 3's final line carried 45 inline extra_queries and outgrew the
-    # driver's tail capture (BENCH_r03.json parsed: null). The extras go to
-    # a sidecar file; the final stdout line stays compact (~1 KB) so the
-    # driver can always parse it.
-    try:
-        load_avg_end = round(os.getloadavg()[0], 2)
-    except OSError:
-        load_avg_end = None
     with open(sidecar, "w") as f:
         json.dump(
             {
-                "extra_queries": {
-                    name: {
-                        "cold": c,
-                        "warm_best3": warm.get(name, (None, None))[0],
-                        "warm_recorded": warm.get(name, (None, None))[1],
-                        "plan_sig": plan_sig.get(name),
-                    }
-                    for name, c in extra.items()
+                "extra_queries": extra,
+                "headline_samples": {
+                    n: [round(x, 3) for x in s] for n, s in samples.items()
                 },
-                # headline floors (r12): cold = the FIRST in-sequence
-                # attempt (pre-retry, contention-sensitive); the printed
-                # line's queries map holds min(first, one retry) — the
-                # official number the driver records
-                "headline_queries": {
-                    name: {
-                        "cold": retried.get(name, timings.get(name)),
-                        "warm_best3": hwarm.get(name, (None, None))[0],
-                        "warm_recorded": hwarm.get(name, (None, None))[1],
-                        "plan_sig": headline_sig.get(name),
-                    }
-                    for name in timings
-                },
-                "warm_invalidated_by_plan_change": sorted(invalidated),
                 "sf": sf,
-                "load_avg_start": _LOAD_AVG_START,
+                "load_avg_start": load_avg_start,
                 "load_avg_end": load_avg_end,
-                "note": (
-                    "cold = single in-sequence run (contention-sensitive, "
-                    "2-4x swing with host load); warm_best3 = min of 3 "
-                    "back-to-back re-runs on an idle host "
-                    "(SPARK_GRAFT_WARM_BEST3=1), carried forward between "
-                    "driver rounds ONLY while the query's optimized-plan "
-                    "signature is unchanged (a rewrite nulls its warm "
-                    "floor) — compare regressions against warm_best3, "
-                    "not cold"
-                ),
             },
             f,
             indent=1,
         )
-
-    # Self-adjudicating headline (round-8 verdict #2): the r8 driver run
-    # read as a 2.4x regression (56.2 s) until the sidecar's
-    # load_avg_start: 26.37 exonerated it as host contention. Carry the
-    # load context in the parsed line itself so every future BENCH_rN.json
-    # explains its own wall clock without the sidecar.
+    # Carry the load context in the parsed line itself, so every recorded
+    # line explains its own wall clock without the sidecar.
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total_wall",
-                "value": total,
+                "value": summary["value"],
                 "unit": "sec",
-                "queries": timings,
+                "queries": summary["queries"],
                 "sf": sf,
-                "load_avg_start": _LOAD_AVG_START,
+                "load_avg_start": load_avg_start,
                 "load_avg_end": load_avg_end,
-                # first-attempt numbers for the entries the load-robust
-                # retry re-ran (queries map holds the min) — the old
-                # methodology's value is never discarded, just annotated
-                "retried": {k: round(v, 3) for k, v in retried.items()},
-                # r13 (r12 verdict #1): the pure first-attempt series, a
-                # methodology-stable round-over-round comparison basis
-                # (equals `value` whenever no retry fired)
-                "first_attempt_total": round(
-                    sum(retried.get(k, v) for k, v in timings.items()), 3
-                ),
+                # nothing is retried; kept so the line's keys stay stable
+                "retried": {},
+                "first_attempt_total": summary["first_attempt_total"],
+                "spread": summary["spread"],
             }
         )
     )

@@ -12,10 +12,13 @@ warms LATER queries (and in-process re-runs of the SAME query), and at
 
 ``tracked_persist`` is ``persist()`` plus registration in a per-session
 registry; ``release_tracked_persists`` unpersists and clears the
-registry. Long-lived callers (bench.py between timed queries,
-scripts/check_oracle.py between oracle checks) call the release after
-each query's action completes, giving every catalog-created cache a
-query-scoped lifetime. Within one query nothing changes: the persist
+registry. Long-lived callers (bench.py after every timed run, so each
+run of a query starts honest-cold; scripts/check_oracle.py after each
+oracle check) call the release after each query's action completes,
+giving every catalog-created cache a query-scoped lifetime. The registry
+is guarded by a module lock: catalog functions may build branches on
+worker threads (curation_decisions), and a release must free every
+frame registered before it. Within one query nothing changes: the persist
 is live for exactly the action(s) that consume it. Unpersisting is
 correctness-free for the DETERMINISTIC frames catalog functions persist
 (the registry value-determinism contract) — a released frame simply
@@ -24,9 +27,12 @@ recomputes to the same values if ever re-referenced.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 _REG_ATTR = "_ofrp_tracked_persists"
+_REG_LOCK = threading.Lock()
 
 
 def tracked_persist(df: DataFrame, level: str | None = None) -> DataFrame:
@@ -42,11 +48,12 @@ def tracked_persist(df: DataFrame, level: str | None = None) -> DataFrame:
     else:
         df.persist()
     spark = df.sparkSession
-    reg = getattr(spark, _REG_ATTR, None)
-    if reg is None:
-        reg = []
-        setattr(spark, _REG_ATTR, reg)
-    reg.append(df)
+    with _REG_LOCK:
+        reg = getattr(spark, _REG_ATTR, None)
+        if reg is None:
+            reg = []
+            setattr(spark, _REG_ATTR, reg)
+        reg.append(df)
     return df
 
 
@@ -58,14 +65,13 @@ def release_tracked_persists(spark: SparkSession) -> int:
     cannot read through a stale cache. Safe to call at any point between
     queries; a no-op when nothing is registered.
     """
-    reg = getattr(spark, _REG_ATTR, None)
-    n = 0
-    if reg:
-        for df in reg:
-            try:
-                df.unpersist(False)
-            except Exception:  # pragma: no cover — session teardown races
-                pass
-            n += 1
+    with _REG_LOCK:
+        reg = getattr(spark, _REG_ATTR, [])
+        frames = reg[:]
         reg.clear()
-    return n
+    for df in frames:
+        try:
+            df.unpersist(False)
+        except Exception:  # pragma: no cover — session teardown races
+            pass
+    return len(frames)

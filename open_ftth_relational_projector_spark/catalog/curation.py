@@ -193,49 +193,52 @@ def curation_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     _sem_pool = ThreadPoolExecutor(1)
-    _sem_future = _sem_pool.submit(
-        lambda: semantic_dedup(emb, threshold=0.9, k=4, iters=2).select(
-            F.col("vec_id").alias("doc_id"), F.col("keep").alias("sem_keep")
+    # a raise on this thread must not leak the pool's worker thread
+    try:
+        _sem_future = _sem_pool.submit(
+            lambda: semantic_dedup(emb, threshold=0.9, k=4, iters=2).select(
+                F.col("vec_id").alias("doc_id"), F.col("keep").alias("sem_keep")
+            )
         )
-    )
-    # dw/lms are each consumed TWICE (threshold aggregate + the final
-    # join); without the persist the whole DSIR resp. bigram-LM pipeline
-    # re-executes for the percentile branch. The persisted frames are
-    # per-doc dimension-sized (one row per document). Tracked (r13): the
-    # caller loop releases them after the consuming action (previously
-    # session-lifetime, relying on LRU eviction).
-    dw = tracked_persist(
-        dsir_importance_weights(docs, target_lang="en", n_buckets=256)
-    )
-    lms = tracked_persist(bigram_lm_scores(docs))
-    # corpus 20th-percentile thresholds via the hierarchical-rank exact
-    # quantile: the dw/lms frames are per-doc (one row per document), so
-    # the exact `percentile` aggregate would buffer the whole corpus's
-    # values in ONE aggregation state at 100× — exact_quantiles is
-    # bit-identical with range-sharded state (the persisted inputs
-    # satisfy its value-determinism contract). The two thresholds ride
-    # ONE helper invocation (tagged union, grouped by signal) so the
-    # fixed per-call job overhead — shard-bound sample + per-shard counts
-    # — is paid once, not twice; the 2-row result splits back into the
-    # broadcast scalar frames the final join consumes.
-    from open_ftth_relational_projector_spark.operators.quantiles import (
-        exact_quantiles,
-    )
+        # dw/lms are each consumed TWICE (threshold aggregate + the final
+        # join); without the persist the whole DSIR resp. bigram-LM pipeline
+        # re-executes for the percentile branch. The persisted frames are
+        # per-doc dimension-sized (one row per document). Tracked (r13): the
+        # caller loop releases them after the consuming action (previously
+        # session-lifetime, relying on LRU eviction).
+        dw = tracked_persist(
+            dsir_importance_weights(docs, target_lang="en", n_buckets=256)
+        )
+        lms = tracked_persist(bigram_lm_scores(docs))
+        # corpus 20th-percentile thresholds via the hierarchical-rank exact
+        # quantile: the dw/lms frames are per-doc (one row per document), so
+        # the exact `percentile` aggregate would buffer the whole corpus's
+        # values in ONE aggregation state at 100× — exact_quantiles is
+        # bit-identical with range-sharded state (the persisted inputs
+        # satisfy its value-determinism contract). The two thresholds ride
+        # ONE helper invocation (tagged union, grouped by signal) so the
+        # fixed per-call job overhead — shard-bound sample + per-shard counts
+        # — is paid once, not twice; the 2-row result splits back into the
+        # broadcast scalar frames the final join consumes.
+        from open_ftth_relational_projector_spark.operators.quantiles import (
+            exact_quantiles,
+        )
 
-    both = dw.select(
-        F.lit("d").alias("sig"), F.col("log_weight").alias("v")
-    ).unionByName(
-        lms.select(F.lit("l").alias("sig"), F.col("avg_logprob").alias("v"))
-    )
-    thr2 = tracked_persist(
-        exact_quantiles(both, "v", {"t": 0.2}, group_cols=["sig"])
-    )
-    dthr = thr2.filter(F.col("sig") == "d").select(F.col("t").alias("dt"))
-    lthr = thr2.filter(F.col("sig") == "l").select(F.col("t").alias("lt"))
-    dsir_ok = F.col("log_weight") >= F.col("dt")
-    lm_ok = F.col("avg_logprob") >= F.col("lt")
-    sem = _sem_future.result()
-    _sem_pool.shutdown()
+        both = dw.select(
+            F.lit("d").alias("sig"), F.col("log_weight").alias("v")
+        ).unionByName(
+            lms.select(F.lit("l").alias("sig"), F.col("avg_logprob").alias("v"))
+        )
+        thr2 = tracked_persist(
+            exact_quantiles(both, "v", {"t": 0.2}, group_cols=["sig"])
+        )
+        dthr = thr2.filter(F.col("sig") == "d").select(F.col("t").alias("dt"))
+        lthr = thr2.filter(F.col("sig") == "l").select(F.col("t").alias("lt"))
+        dsir_ok = F.col("log_weight") >= F.col("dt")
+        lm_ok = F.col("avg_logprob") >= F.col("lt")
+        sem = _sem_future.result()
+    finally:
+        _sem_pool.shutdown(wait=False, cancel_futures=True)
     return (
         q.join(sem, "doc_id")
         .join(dw.select("doc_id", "log_weight"), "doc_id")

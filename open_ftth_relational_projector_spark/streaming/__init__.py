@@ -2,7 +2,6 @@
 Streaming + incremental view maintenance over a relational sink."""
 
 from open_ftth_relational_projector_spark.streaming.incremental import (
-    affected_ids,
     compute_deltas,
 )
 from open_ftth_relational_projector_spark.streaming.runner import (
@@ -12,7 +11,6 @@ from open_ftth_relational_projector_spark.streaming.runner import (
 )
 
 __all__ = [
-    "affected_ids",
     "compute_deltas",
     "ProjectionStream",
     "apply_batch",

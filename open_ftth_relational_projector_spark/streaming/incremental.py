@@ -94,24 +94,10 @@ CABLE_TRIGGER_TYPES = [
 ]
 
 
-def collect_batch(batch_envelopes: DataFrame) -> list[tuple[int, str, dict]]:
-    """ONE job: pull the micro-batch to the driver as (seq, type, payload).
-
-    A micro-batch is one poll interval of events — small by construction
-    (the reference applies it on a single thread). Everything per-batch and
-    ∝ batch (touched-key extraction, edge-delta resolution) then happens
-    driver-side with zero additional Spark jobs; only the neighborhood
-    recompute fans out to the cluster.
-    """
-    return parse_envelope_rows(
-        batch_envelopes.select("seq", "event_type", "payload").collect()
-    )
-
-
 def parse_envelope_rows(rows) -> list[tuple[int, str, dict]]:
     """(seq, event_type, payload-json-string) rows → parsed tuples — the
-    ONE definition of the driver-side batch shape (collect_batch and
-    apply_batch's size-gate probe both route through it)."""
+    ONE definition of the driver-side batch shape (apply_batch's size-gate
+    probe routes through it)."""
     import json
 
     return [(r.seq, r.event_type, json.loads(r.payload)) for r in rows]
@@ -148,16 +134,10 @@ def affected_ids_from_rows(
     return out
 
 
-def affected_ids(batch_envelopes: DataFrame) -> dict[str, list[str]]:
-    """Distinct touched entity ids per domain (one collect; see
-    collect_batch)."""
-    return affected_ids_from_rows(collect_batch(batch_envelopes))
-
-
 def affected_ids_distributed(batch_log: EventLog) -> dict[str, list[str]]:
     """Touched entity ids per domain, extracted as Spark aggregations.
 
-    The oversized-batch twin of ``affected_ids``: the batch rows never
+    The oversized-batch twin of ``affected_ids_from_rows``: the batch rows never
     reach the driver — per-type id projections union per domain and only
     the DISTINCT id lists are collected (∝ touched entities, not ∝ batch
     rows; a catch-up batch after long downtime can hold the whole backlog,
@@ -453,8 +433,8 @@ def build_edge_context(
     )
 
 
-def _ids_df(log: EventLog, ids: list[str]) -> DataFrame:
-    return log.spark.createDataFrame([(i,) for i in ids], "id string")
+def _ids_df(spark, ids: list[str], col: str = "id") -> DataFrame:
+    return spark.createDataFrame([(i,) for i in ids], f"{col} string")
 
 
 # Above this many keys an IN-set literal filter stops being the cheap form
@@ -464,7 +444,7 @@ MAX_INLINE_IDS = 10_000
 
 def _restrict(log: EventLog, types: list[str], ids: list[str]) -> EventLog:
     key: list | DataFrame = (
-        ids if len(ids) <= MAX_INLINE_IDS else _ids_df(log, ids)
+        ids if len(ids) <= MAX_INLINE_IDS else _ids_df(log.spark, ids)
     )
     return log.restricted({t: (AFFECTED[t][1], key) for t in types})
 
@@ -474,12 +454,8 @@ def _keyed_to(df: DataFrame, ids: list[str], col: str = "id") -> DataFrame:
     if len(ids) <= MAX_INLINE_IDS:
         return df.filter(F.col(col).isin(ids))
     return df.join(
-        F.broadcast(_ids_df_any(df, ids, col)), col, "left_semi"
+        F.broadcast(_ids_df(df.sparkSession, ids, col)), col, "left_semi"
     )
-
-
-def _ids_df_any(df: DataFrame, ids: list[str], col: str) -> DataFrame:
-    return df.sparkSession.createDataFrame([(i,) for i in ids], f"{col} string")
 
 
 def _keyed_delta(result: DataFrame, affected: list[str], key: str = "id") -> TableDelta:
@@ -665,7 +641,7 @@ def _span_state_superset(
     span_ids = ids["span"]
     all_ids = set(span_ids)
     if ids.get("cable"):  # cable triggers == the edge-changing event types
-        ids_df = _ids_df(full, ids["cable"])
+        ids_df = _ids_df(full.spark, ids["cable"])
         parents = (
             (_parent_edges(full) if edges is None else edges)
             .join(

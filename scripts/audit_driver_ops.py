@@ -150,7 +150,6 @@ ALLOWLIST: dict[str, str] = {
     "functions/similarity.py::knn_ivf": "k x dim coarse-quantizer centroids",
     "sinks/jdbc_sink.py::get_meta": "single meta-key row",
     "sources/bucketing.py::bucket_spec": "DESCRIBE TABLE catalog rows",
-    "streaming/incremental.py::collect_batch": "micro-batch envelopes under the MAX_DRIVER_BATCH_ROWS guard (distributed fallback above the cap)",
     "streaming/runner.py::_probe_collect": "size-gate probe bounded at cap+1 raw rows by the limit() in the same expression; payloads parse only after the batch proves driver-sized",
     "streaming/incremental.py::affected_ids_distributed": "DISTINCT touched-entity id lists only (the oversized-batch no-collect path: ∝ entities touched, never ∝ batch rows)",
     "streaming/incremental.py::_span_state_superset": "parent ids of batch-touched entities (batch-bounded)",

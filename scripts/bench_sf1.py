@@ -2,15 +2,15 @@
 round-13 optimizes, at the 10x dataset scripts/gen_scaled_testdata.py
 derives. At sf0.1 16/20 headline queries no longer scale past 8 cores
 (per-query constants dominate), so optimization deltas must be cited
-from this run. Floors land in BENCH_EXTRA_sf1.json (bench.py keys the
-sidecar by SF — the driver's sf0.1 floor set is untouched).
+from this run. Timings land in BENCH_EXTRA_sf1.json (bench.py keys the
+sidecar by SF — the default sf0.1 sidecar is untouched).
 
 The extras list is TRIMMED to the families this round touches: a full
 extras sweep at sf1 multiplies several quadratic-by-design entries
 (SemDeDup in-cell pairs, AllPairs prefix filter) into an hours-long
 pass with no additional evidence value.
 
-Usage: [SPARK_GRAFT_WARM_BEST3=1] python scripts/bench_sf1.py
+Usage: python scripts/bench_sf1.py
 """
 
 from __future__ import annotations

@@ -85,7 +85,6 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
     osql = entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():
-        release_tracked_persists(spark)  # query-scoped catalog caches (r13)
         try:
             sdf = fn(spark, sf_dir)
             s_rows = rows_of_spark(sdf)
@@ -94,6 +93,10 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             continue
+        finally:
+            # query-scoped catalog caches die as soon as this query's Spark
+            # side is collected (the last query's too), before the DuckDB side
+            release_tracked_persists(spark)
         if name not in osql:
             print(f"rows  {name}: {len(s_rows)} (no SQL oracle — rows-only)")
             continue

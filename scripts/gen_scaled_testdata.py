@@ -6,7 +6,7 @@ further data-plane optimization is invisible. This generator scales the
 driver's sf0.1 fixture by an integer multiplier M (default 10 → "sf1")
 so optimization claims can cite a data-bound delta. The ORIGINAL driver
 testdata is read-only and untouched; output goes to a separate dir that
-the bench reaches via $SPARK_GRAFT_SF_DIR (floors for non-default SFs go
+the bench reaches via $SPARK_GRAFT_SF_DIR (timings for non-default SFs go
 to their own BENCH_EXTRA_sf*.json sidecar, never the driver's).
 
 Replica construction (replica 0 is the original data byte-for-byte):

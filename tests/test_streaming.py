@@ -358,7 +358,7 @@ def test_affected_ids_distributed_matches_driver_extraction(spark):
     from open_ftth_relational_projector_spark.streaming.incremental import (
         affected_ids_distributed,
         affected_ids_from_rows,
-        collect_batch,
+        parse_envelope_rows,
     )
 
     env = spark.createDataFrame(
@@ -366,7 +366,9 @@ def test_affected_ids_distributed_matches_driver_extraction(spark):
     ).cache()
     max_seq = env.agg({"seq": "max"}).collect()[0][0]
     batch = env.filter(f"seq > {int(max_seq * 0.4)}")
-    via_driver = affected_ids_from_rows(collect_batch(batch))
+    via_driver = affected_ids_from_rows(
+        parse_envelope_rows(batch.select("seq", "event_type", "payload").collect())
+    )
     via_spark = affected_ids_distributed(EventLog.from_envelopes(batch))
     assert via_spark == via_driver
 
