@@ -257,8 +257,6 @@ def bench_streaming_catchup(spark, scale: int = 20) -> tuple[str, float]:
                 env.filter(f"seq > {lo} AND seq <= {hi}"),
                 sink,
                 batch_id=i,
-                # env itself is cached; re-filtering it beats re-caching
-                persist_full=False,
             )
         elapsed = time.perf_counter() - t0
     # drop the envelope cache once drained — a leaked env cache made every

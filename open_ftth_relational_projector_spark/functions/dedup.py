@@ -423,7 +423,13 @@ def minhash_near_dups(
     With ``hash_fn=portable_hash64, portable_bands=True`` the whole
     pipeline — signatures, banding, candidate join, verification — is
     reproducible in ANSI SQL, which is how the driver hash-matches it
-    (catalog ``minhash_near_dups_md5``)."""
+    (catalog ``minhash_near_dups_md5``).
+
+    Release contract: the returned frame reads a shingle frame that this
+    call persists (``cache.tracked_persist``) and does not unpersist. It
+    stays cached, in executor memory and disk, until the caller runs
+    ``cache.release_tracked_persists(spark)`` — after the last action on
+    the result. A caller that never releases keeps it for the session."""
     from open_ftth_relational_projector_spark.cache import tracked_persist
 
     # ONE shingle pass (r13, guide §1.2/§5): the banding side and BOTH

@@ -17,7 +17,10 @@ suppressed, snapshots every table (truncate + COPY), then polls every
   ``apply_batch``, default trigger processingTime=2s matching the
   reference's poll loop (Worker.cs:47), ``availableNow`` for drain-and-stop
   runs. Bronze accumulation is deduped on ``seq`` so a crash between bronze
-  append and sink commit re-applies cleanly.
+  append and sink commit re-applies cleanly. The batch itself is deduped
+  inside ``apply_batch``: driver-side on the collected probe rows, in Spark
+  only on the oversized path — a driver-sized batch costs no shuffle, and
+  none of its jobs reads the accumulated log.
 
 Batch-order independence: because every batch recomputes its touched keys
 from the ACCUMULATED log, the final sink state depends only on the set of
@@ -220,7 +223,8 @@ def apply_slack_delta(sink, delta: GroupDelta) -> None:
     if len(counts):
         counts["id"] = counts["route_node_id"].map(md5_uuid)
         sink.merge("conduit_slack", counts)
-    zero = [n for n in touched if n not in set(counts["route_node_id"])]
+    counted = set(counts["route_node_id"])
+    zero = [n for n in touched if n not in counted]
     sink.delete_keys("conduit_slack", "route_node_id", zero)
 
 
@@ -241,16 +245,21 @@ def apply_batch(
     batch_envelopes: DataFrame,
     sink,
     batch_id: int | None = None,
-    persist_full: bool = True,
     probe_seq_first: bool = False,
 ) -> bool:
     """Apply one micro-batch incrementally. Returns False if skipped
     (already-applied batch_id — T5 exactly-once).
 
-    ``persist_full=False`` skips caching the accumulated log for callers
-    whose ``full_envelopes`` already derives from a cached/materialized
-    source (re-filtering a cached parent is cheaper than building another
-    cache of the same rows every batch).
+    ``batch_envelopes`` may hold duplicate ``seq`` rows (a re-read file, a
+    re-delivered source batch): the driver path keeps the first row per
+    seq of the collected probe, the oversized path dedups in Spark. Rows
+    duplicated in the probe only make it larger, so duplicates can push a
+    batch to the fallback but never onto the driver path wrongly.
+
+    ``full_envelopes`` (the accumulated log) is read only on the
+    distributed fallback — an oversized or overlapping batch — which
+    persists it for the per-table recomputes. A driver-sized,
+    non-overlapping batch never touches it.
 
     ``probe_seq_first=True`` sizes the batch with a seq-ONLY probe before
     touching payloads, so an oversized batch never materializes cap+1 raw
@@ -297,7 +306,10 @@ def apply_batch(
         probe_rows = _probe_collect(batch_envelopes, MAX_DRIVER_BATCH_ROWS)
         driver_sized = len(probe_rows) <= MAX_DRIVER_BATCH_ROWS
     if driver_sized:
-        parsed = parse_envelope_rows(probe_rows)
+        first_per_seq: dict = {}
+        for r in probe_rows:
+            first_per_seq.setdefault(r.seq, r)
+        parsed = parse_envelope_rows(first_per_seq.values())
         seqs = [s for s, _, _ in parsed]
         batch_min = min(seqs, default=None)
         batch_max = max(seqs, default=None)
@@ -308,17 +320,16 @@ def apply_batch(
         ).collect()[0]
         batch_min = int(stat["mn"])
         batch_max = int(stat["mx"])
-    # materialize the typed streams once per batch: every per-table delta
-    # re-reads several of them, and without this each recompute re-filters
-    # and re-parses the accumulated envelope log
+    # lazy: the driver path reads only full_log.spark; the fallback
+    # persists it below, once it is known to be needed
     full_log = EventLog.from_envelopes(full_envelopes)
-    if persist_full:
-        full_log = full_log.persisted()
     batch_log = None
     if parsed is None:
         # oversized batch: touched keys come from a distributed distinct
         # aggregation — only the id LISTS reach the driver
-        batch_log = EventLog.from_envelopes(batch_envelopes).persisted()
+        batch_log = EventLog.from_envelopes(
+            batch_envelopes.dropDuplicates(["seq"])
+        ).persisted()
     try:
         from open_ftth_relational_projector_spark.streaming.replay import (
             replay_lww_tables,
@@ -338,6 +349,12 @@ def apply_batch(
         prev_wm = int(sink.get_meta("watermark") or 0)
         overlap = batch_min is not None and batch_min <= prev_wm
         driver_ok = driver_sized and not overlap
+        if not driver_ok:
+            # distributed fallback: materialize the typed streams once —
+            # every per-table delta and the aux reseed re-read several of
+            # them, and without this each recompute re-filters and
+            # re-parses the accumulated envelope log
+            full_log = full_log.persisted()
 
         edge_ctx = (
             build_edge_context(full_log, parsed, ids, sink)
@@ -454,12 +471,17 @@ class ProjectionStream:
         if batch_df.isEmpty():
             return
         batch_df.write.mode("append").parquet(self.bronze_dir)
-        # seq-dedup guards the crash window between append and sink commit
-        full = self.spark.read.parquet(self.bronze_dir).dropDuplicates(["seq"])
-        batch = batch_df.dropDuplicates(["seq"])
+        # seq-dedup guards the crash window between append and sink commit;
+        # the pinned schema spares a parquet footer read per batch. The
+        # batch is deduped inside apply_batch.
+        full = (
+            self.spark.read.schema(ENVELOPE_SCHEMA)
+            .parquet(self.bronze_dir)
+            .dropDuplicates(["seq"])
+        )
         apply_batch(
             full,
-            batch,
+            batch_df,
             self.sink,
             batch_id=batch_id,
             probe_seq_first=self._first_since_start,

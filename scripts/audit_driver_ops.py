@@ -10,6 +10,9 @@ hand every judging round. This script makes it a standing gate:
   one-line boundedness justification; a new unlisted site FAILS until it
   is reviewed and added (or removed). Entries are keyed by
   `relative-path::enclosing-function` so line drift doesn't churn them.
+- An allowlist entry whose function no longer has a `.collect()` (or, for
+  TOPANDAS_ALLOWLIST, a `.toPandas()`) call site is stale and FAILS too,
+  so the lists only ever name live call sites.
 
 Run: python scripts/audit_driver_ops.py   (exit 0 = clean)
 """
@@ -48,22 +51,13 @@ ALLOWLIST: dict[str, str] = {
         "bounded sim: collects the documents dim once to write 3 stream "
         "batch files (500 rows at sf0.01) + the drained memory-sink result"
     ),
-    "catalog/streaming_sims.py::stream_snapshot_sim": (
-        "bounded sim: collects the documents dim once to write 3 version "
-        "batch files (500 rows at sf0.01) + the drained memory-sink result "
-        "— same contract as _drain_stream_over_doc_batches"
-    ),
     "plans/checks.py::wholestage_codegen_spans": "test helper: forces AQE final plan",
-    "streaming/incremental.py::_apply_incremental": "guarded by MAX_DRIVER_BATCH_ROWS with distributed fallback",
-    "streaming/incremental.py::affected_keys": "scalar count guard",
     "streaming/runner.py::dehydrate": "scalar max(seq)",
     "streaming/runner.py::apply_batch": (
         "scalar min/max(seq) aggregate, plus the backlog-path seq-only "
         "size probe bounded at cap+1 LONG values by the limit() in the "
         "same expression (probe_seq_first callers)"
     ),
-    "sinks/jdbc_sink.py::write_full": "per-partition executor writes; collect is DDL table list",
-    "sinks/jdbc_sink.py::merge_incremental": "collects per-batch delta under the incremental row guard",
     "functions/boosting.py::adaboost_fit": (
         "bounded: one value from the checkpointed ONE-ROW stump frame "
         "per boosting round — the named weight-exactness (2^53) guard"
@@ -122,12 +116,10 @@ ALLOWLIST: dict[str, str] = {
     "operators/hierarchical.py::hierarchical_row_number": "#shards rows (scalar-sized counts)",
     "operators/skyline.py::skyline_2d": "#shards prefix maxima (scalar-sized)",
     "operators/median.py::exact_median_two_pass": "histogram bucket counts (fixed fan-out)",
-    "sources/bucketing.py::write_partitioned": "distinct partition values of a dimension column",
     "functions/clustering.py::kmeans_fit": "k x dim centroid doubles per iteration",
     "functions/text.py::bpe_learn": (
         "LIMIT 1 argmax per merge iteration — the learned rule itself"
     ),
-    "functions/clustering.py::kcenter_select": "k selected rows, one per round",
     "functions/clustering.py::pq_fit_codebooks": (
         "first-k init rows + m x k x sub_len M-step doubles per iteration "
         "(fused quantizer training)"
@@ -136,17 +128,9 @@ ALLOWLIST: dict[str, str] = {
         "m x k x sub_len M-step doubles per iteration (pq_fit_codebooks' "
         "loop, split out by the r12 training-frame persist)"
     ),
-    "functions/clustering.py::ivfpq_knn_adc": (
-        "scalar training-sample count guard (train_sample_frac path only)"
-    ),
-    "functions/graph.py::connected_components": "scalar label-sum convergence signature",
     "functions/graph.py::_label_sum": "scalar label-sum convergence signature",
-    "functions/graph.py::_connected_components_star": "scalar edge checksum per round",
     "functions/graph.py::checksum": "scalar edge checksum per round",
-    "functions/graph.py::weighted_shortest_paths": "scalar (count,sum) fixpoint signature",
     "functions/graph.py::_sig": "scalar (count,sum) fixpoint signature",
-    "functions/graph.py::kcore_peel": "scalar dead count per round",
-    "functions/similarity.py::_spherical_kmeans": "k x dim coarse-quantizer centroids",
     "functions/similarity.py::knn_ivf": "k x dim coarse-quantizer centroids",
     "sinks/jdbc_sink.py::get_meta": "single meta-key row",
     "sources/bucketing.py::bucket_spec": "DESCRIBE TABLE catalog rows",
@@ -164,6 +148,7 @@ TOPANDAS_ALLOWLIST: dict[str, str] = {
 
 def main() -> None:
     failures: list[str] = []
+    seen = {"collect": set(), "toPandas": set()}
     for py in sorted(PKG.rglob("*.py")):
         src = py.read_text()
         tree = ast.parse(src)
@@ -185,20 +170,24 @@ def main() -> None:
                 and fn.attr == "udf"
             ):
                 failures.append(f"{py}:{node.lineno}: F.udf/udf is banned")
-            if name == "toPandas":
-                rel = str(py)[len("open_ftth_relational_projector_spark/"):]
-                key = f"{rel}::{func_of.get(node.lineno, '<module>')}"
-                if key not in TOPANDAS_ALLOWLIST:
-                    failures.append(f"{py}:{node.lineno}: toPandas is banned ({key})")
-            if name == "collect":
-                rel = str(py.relative_to(PKG.parent) if py.is_relative_to(PKG.parent) else py)
-                rel = str(py)[len("open_ftth_relational_projector_spark/"):]
-                key = f"{rel}::{func_of.get(node.lineno, '<module>')}"
-                if key not in ALLOWLIST:
-                    failures.append(
-                        f"{py}:{node.lineno}: unlisted .collect() in {key} — "
-                        "add to ALLOWLIST with a boundedness justification"
-                    )
+            if name not in seen:
+                continue
+            rel = str(py)[len("open_ftth_relational_projector_spark/"):]
+            key = f"{rel}::{func_of.get(node.lineno, '<module>')}"
+            seen[name].add(key)
+            if name == "toPandas" and key not in TOPANDAS_ALLOWLIST:
+                failures.append(f"{py}:{node.lineno}: toPandas is banned ({key})")
+            if name == "collect" and key not in ALLOWLIST:
+                failures.append(
+                    f"{py}:{node.lineno}: unlisted .collect() in {key} — "
+                    "add to ALLOWLIST with a boundedness justification"
+                )
+    for call, allow in (("collect", ALLOWLIST), ("toPandas", TOPANDAS_ALLOWLIST)):
+        for key in sorted(allow.keys() - seen[call]):
+            failures.append(
+                f"stale allowlist entry {key}: no .{call}() call site there — "
+                "delete the entry"
+            )
     for f in failures:
         print(f)
     n_ok = len(ALLOWLIST)

@@ -155,6 +155,69 @@ def test_failed_apply_batch_leaves_sink_unchanged(
     _assert_sink_matches(sink, expected_tables)
 
 
+def test_driver_path_never_reads_accumulated_log(spark, envelopes, expected_tables):
+    """A driver-sized, non-overlapping batch runs Spark jobs on the batch
+    only: handed an accumulated log whose execution raises, it still
+    applies and matches the batch fold. An overlapping batch takes the
+    distributed fallback, which must read that log — and so raises."""
+    from pyspark.sql import functions as F
+
+    poisoned = envelopes.withColumn(
+        "payload",
+        F.when(
+            F.col("seq") > 0, F.raise_error(F.lit("accumulated log read"))
+        ).otherwise(F.col("payload")).cast("string"),
+    )
+    # the poison survives optimisation: executing the frame raises
+    with pytest.raises(Exception, match="accumulated log read"):
+        poisoned.collect()
+
+    max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
+    cut = max_seq // 2
+    sink = DuckDBSink()
+    dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
+    batch = envelopes.filter(f"seq > {cut}")
+    assert apply_batch(poisoned, batch, sink, batch_id=0) is True
+    _assert_sink_matches(sink, expected_tables)
+
+    sink = DuckDBSink()
+    dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
+    overlapping = envelopes.filter(f"seq > {cut - 3}")
+    with pytest.raises(Exception, match="accumulated log read"):
+        apply_batch(poisoned, overlapping, sink, batch_id=0)
+    assert sink.get_meta("watermark") == str(cut)
+
+
+def test_duplicated_batch_rows_apply_once(
+    spark, envelopes, expected_tables, monkeypatch
+):
+    """A batch holding every row twice (a re-read file) applies as if
+    each row came once — on the driver path, where apply_batch dedups the
+    collected probe rows, and on the forced distributed fallback. The
+    driver path must also leave the aux tables (the appended edge sets
+    later batches fold) exactly as a single copy of the batch does."""
+    import open_ftth_relational_projector_spark.streaming.incremental as I
+    from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
+
+    max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
+    cut = max_seq // 2
+    tail = envelopes.filter(f"seq > {cut}")
+
+    def applied(batch):
+        sink = DuckDBSink()
+        dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
+        apply_batch(envelopes, batch, sink, batch_id=0)
+        return sink
+
+    sink = applied(tail.unionAll(tail))
+    _assert_sink_matches(sink, expected_tables)
+    once = applied(tail)
+    _assert_sink_matches(sink, {n: once.read_table(n) for n in TABLE_COLUMNS})
+
+    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 0)
+    _assert_sink_matches(applied(tail.unionAll(tail)), expected_tables)
+
+
 def test_structured_streaming_available_now(spark, envelopes, expected_tables):
     """Real readStream → foreachBatch drain over a file source (S2/T1)."""
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
