@@ -15,10 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from open_ftth_relational_projector_spark.events.schemas import (
-    ENVELOPE_SCHEMA,
-    PAYLOAD_SCHEMAS,
-)
+from open_ftth_relational_projector_spark.events.schemas import PAYLOAD_SCHEMAS
 
 
 class EventLog:
@@ -161,12 +158,3 @@ def _flat_schema(event_type: str):
     return T.StructType(
         [T.StructField("seq", T.LongType(), False), *schema.fields]
     )
-
-
-def read_event_log(spark: SparkSession, path: str) -> EventLog:
-    """Read a parquet/json envelope table and return the typed view."""
-    if path.endswith(".json") or path.endswith(".jsonl"):
-        raw = spark.read.schema(ENVELOPE_SCHEMA).json(path)
-    else:
-        raw = spark.read.parquet(path)
-    return EventLog.from_envelopes(raw)

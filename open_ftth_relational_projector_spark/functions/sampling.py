@@ -583,19 +583,6 @@ def poisson_weight_sql(h_expr: str) -> str:
     )
 
 
-def md5_uniform_sql(key_expr: str, salt_expr: str) -> str:
-    """The md5_uniform recipe as SPARK-dialect SQL text: first 13 hex
-    chars → (0,1] rational with an exact-double denominator (16^13). A
-    DuckDB oracle derives the IDENTICAL value with its own hex-parse
-    idiom: ``(('0x' || substr(md5(...), 1, 13))::BIGINT + 1) / 16^13`` —
-    the numerator is an exact integer < 2^52 in both engines, so the
-    quotient is the same double."""
-    return (
-        f"((CAST(conv(substring(md5(concat({key_expr}, {salt_expr})), 1, 13),"
-        f" 16, 10) AS BIGINT) + 1) / {float(_HEX13_SPAN)!r})"
-    )
-
-
 def poisson_bootstrap_ci(
     df: DataFrame,
     value_col: str,

@@ -77,16 +77,6 @@ def punct_ratio(text: Column) -> Column:
     )
 
 
-def mean_token_len(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return total / F.size(toks)
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality heuristic: length band + stopword presence +
     low punctuation. Deliberately simple and SQL-mirrorable."""

@@ -29,8 +29,3 @@ def first_element(arr: Column) -> Column:
 def last_element(arr: Column) -> Column:
     """``NodesOfInterestIds.Last()`` (State/SpanEquipmentState.cs:48)."""
     return F.element_at(arr, -1)
-
-
-def is_empty_guid(col: Column) -> Column:
-    """Compare against the Guid.Empty sentinel (SURVEY §2.6 X5)."""
-    return col == F.lit(EMPTY_GUID)

@@ -1,28 +1,31 @@
-"""Incremental view maintenance: affected-key recompute per micro-batch.
+"""Incremental view maintenance: the keyed deltas of one micro-batch.
 
 The reference applies each event imperatively against in-memory state and
-issues per-row DML (RelationalDatabaseProjection.cs:226-264, 407-458). The
-Spark-first equivalent keeps NO driver state: each projection is a pure
-function of the event log (projections/core.py), and a micro-batch is
-maintained by
+issues per-row DML (RelationalDatabaseProjection.cs:226-264, 407-458).
+``apply_batch`` (streaming/runner.py) has two paths, and this module serves
+both:
 
-  1. extracting the entity keys the batch touches (per-event-type id map),
-  2. re-running the SAME projection expressions over the accumulated log
-     *restricted to those keys* — entity streams are semi-joined to the key
-     set while dimension streams (spec registrations, container relations,
-     interest walks) pass through whole so as-of joins still see them,
-  3. MERGE/DELETE-ing the recomputed rows into the relational sink keyed by
-     entity id (delete = affected key with no recomputed row).
+* the driver path — every batch above the sink watermark, of any size, in
+  chunks of at most ``MAX_DRIVER_BATCH_ROWS`` rows. ``affected_ids_from_rows``
+  names the entity keys a chunk touches and ``build_edge_context`` resolves
+  its affix-edge, root-segment and detach deltas against the sink aux
+  tables; the replays in streaming/replay.py produce the rows. No job reads
+  the accumulated log.
+* the fallback — a batch that overlaps the watermark (re-delivered or
+  late). ``compute_deltas`` re-runs the SAME projection expressions
+  (projections/core.py) over the accumulated log *restricted to the touched
+  keys* — entity streams are semi-joined to the key set while dimension
+  streams (spec registrations, container relations, interest walks) pass
+  through whole so as-of joins still see them — and the sink MERGE/DELETEs
+  the result keyed by entity id (delete = affected key with no row).
 
-Correctness rests on per-key determinism: a key's final row depends only on
-(its own entity stream) × (dimension streams), so recompute-from-log equals
-the reference's incremental fold — verified by tests/test_streaming.py
-equivalence over random batch splits.
-
-Scale: step 2's cost is ∝ events-of-touched-keys, reached through a
-broadcast semi-join that Catalyst pushes into the (bucketed-by-entity at
-scale) bronze scan, not ∝ log size. conduit_slack — the one cross-entity
-aggregate — is maintained through the persisted ``_aux_slack_end``
+The fallback's correctness rests on per-key determinism: a key's final row
+depends only on (its own entity stream) × (dimension streams), so
+recompute-from-log equals the reference's incremental fold — verified by
+tests/test_streaming.py equivalence over random batch splits. Its cost is
+∝ events-of-touched-keys, reached through a semi-join that Catalyst pushes
+into the bronze scan. conduit_slack — the one cross-entity aggregate — is
+maintained on both paths through the persisted ``_aux_slack_end``
 pre-aggregation: replace touched equipments' end rows, re-aggregate only
 touched route nodes (the standard IVM delta-aggregation; the reference's
 imperative counters, ProjektorState.cs:473-512, are the single-threaded
@@ -134,51 +137,6 @@ def affected_ids_from_rows(
     return out
 
 
-def affected_ids_distributed(batch_log: EventLog) -> dict[str, list[str]]:
-    """Touched entity ids per domain, extracted as Spark aggregations.
-
-    The oversized-batch twin of ``affected_ids_from_rows``: the batch rows never
-    reach the driver — per-type id projections union per domain and only
-    the DISTINCT id lists are collected (∝ touched entities, not ∝ batch
-    rows; a catch-up batch after long downtime can hold the whole backlog,
-    but the entity universe it touches is bounded by the domain). The tiny
-    id lists then drive the same semi-join restriction as the driver path.
-
-    One tiny distinct aggregate first narrows the union to the event
-    types actually PRESENT in the batch (round-6 advice: unioning all
-    ~30 AFFECTED projections built a wide filter/parse plan even when a
-    batch held a handful of types).
-    """
-    present: set[str] | None = None
-    if batch_log.raw is not None:
-        present = {
-            r.event_type
-            for r in batch_log.raw.select("event_type").distinct().collect()
-        }
-    parts: list[DataFrame] = []
-    for etype, (domain, id_path) in AFFECTED.items():
-        if present is not None and etype not in present:
-            continue
-        df = batch_log.of(etype).select(
-            F.lit(domain).alias("domain"), F.expr(id_path).alias("id")
-        )
-        parts.append(df)
-        if etype in CABLE_TRIGGER_TYPES:
-            parts.append(df.select(F.lit("cable").alias("domain"), "id"))
-    if not parts:  # batch holds no AFFECTED types at all
-        return {}
-    # ONE tagged union → ONE distinct().collect() job for every domain
-    # (per-domain collects would pay ~7 scheduler round trips on the
-    # catch-up path, where latency already hurts)
-    u = parts[0]
-    for d in parts[1:]:
-        u = u.unionByName(d)
-    out: dict[str, set[str]] = {}
-    for r in u.where(F.col("id").isNotNull()).distinct().collect():
-        out.setdefault(r.domain, set()).add(r.id)
-    return {d: sorted(s) for d, s in out.items()}
-
-
 @dataclass
 class TableDelta:
     """Keyed-merge delta: recomputed rows + keys with no row (deletes)."""
@@ -216,7 +174,7 @@ class EdgeContext:
     new_edges: object  # pyarrow appends for _aux_affix_edge
     new_registry: object  # pyarrow appends for _aux_root_segment
     new_detaches: object  # pyarrow appends for _aux_detach
-    span_replay: object = None  # streaming.replay.SpanReplayResult
+    span_replay: object  # streaming.replay.SpanReplayResult
 
 
 def _fold_has_child(
@@ -266,14 +224,14 @@ def _latest_before(versions: list[tuple[int, str | None]], seq: int):
     return versions[i - 1] if i > 0 else None
 
 
-# Batches above this row count skip the driver-side edge-delta path and fall
-# back to the distributed full recompute (a giant catch-up batch amortizes
-# it; a poll-interval micro-batch never gets near this).
+# Chunk size of the driver path: a batch of at most this many rows is
+# applied from its size probe as one chunk; a larger one streams to the
+# driver in seq-ordered chunks of this many rows (a poll-interval
+# micro-batch never gets near it).
 MAX_DRIVER_BATCH_ROWS = 200_000
 
 
 def build_edge_context(
-    full: EventLog,
     parsed: list[tuple[int, str, dict]],
     ids: dict[str, list[str]],
     sink,
@@ -283,18 +241,15 @@ def build_edge_context(
     Spark jobs (the batch is already collected; the sink lookups are
     indexed ∝ batch-neighborhood).
 
-    Returns None when the batch touches no span-equipment entities or is
-    too large for driver-side handling (the caller then recomputes the
-    edge sets distributedly from the full log).
+    Returns None when the batch touches no span-equipment entities.
     """
     from open_ftth_relational_projector_spark.sinks.ddl import SCHEMA
 
     span_ids = ids.get("span")
-    if not span_ids or len(parsed) > MAX_DRIVER_BATCH_ROWS:
+    if not span_ids:
         return None
     import pyarrow as pa
 
-    spark = full.spark
     children = ids.get("cable", [])
 
     # -- batch extraction (mirrors core._edge_events / _parent_registry) ---
@@ -473,12 +428,10 @@ def md5_uuid(value: str) -> str:
 
 
 def compute_deltas(
-    full: EventLog,
-    ids: dict[str, list[str]],
-    edge_ctx: EdgeContext | None = None,
-    skip: tuple[str, ...] = (),
+    full: EventLog, ids: dict[str, list[str]]
 ) -> dict[str, TableDelta | GroupDelta]:
-    """Recompute every affected row set against the accumulated log.
+    """Recompute every affected row set against the accumulated log — the
+    fallback of apply_batch, for a batch that overlaps the watermark.
 
     Returns per-table deltas; ``_aux_slack_end`` carries the slack-end
     pre-aggregation whose node-level re-aggregation happens sink-side
@@ -493,12 +446,12 @@ def compute_deltas(
 
     thunks: dict[str, object] = {}
 
-    if ids.get("work_task") and "work_task" not in skip:
+    if ids.get("work_task"):
         a = ids["work_task"]
         r = _restrict(full, ["WorkTaskCreated", "WorkTaskStatusChanged"], a)
         thunks["work_task"] = lambda a=a, r=r: _keyed_delta(project_work_task(r), a)
 
-    if ids.get("installation") and "installation" not in skip:
+    if ids.get("installation"):
         a = ids["installation"]
         r = _restrict(
             full,
@@ -514,7 +467,7 @@ def compute_deltas(
             project_installation(r), a
         )
 
-    if ids.get("node_container") and "node_container" not in skip:
+    if ids.get("node_container"):
         a = ids["node_container"]
         r = _restrict(
             full,
@@ -529,7 +482,7 @@ def compute_deltas(
             project_node_container(r), a
         )
 
-    if ids.get("terminal") and "service_termination" not in skip:
+    if ids.get("terminal"):
         a = ids["terminal"]
         r = _restrict(
             full,
@@ -545,21 +498,9 @@ def compute_deltas(
             project_service_termination(r), a
         )
 
-    if ids.get("span") and edge_ctx is not None:
-        # driver-side state-seeded replay (streaming/replay.py) already
-        # produced both span deltas inside build_edge_context; nothing to
-        # fan out. The aux state writes ride the sink transaction in
-        # runner.apply_batch.
-        rr = edge_ctx.span_replay
-        thunks["_span_group"] = lambda rr=rr, all_eq=edge_ctx.all_eq: {
-            "span_equipment": TableDelta(
-                upserts=rr.span_upserts, delete_keys=rr.span_deletes
-            ),
-            "_aux_slack_end": GroupDelta(group_keys=all_eq, rows=rr.slack_rows),
-        }
-    elif ids.get("span"):
-        # distributed fallback: recompute the superset's state and the
-        # has-child fold from the full log (large catch-up batches).
+    if ids.get("span"):
+        # recompute the superset's state and the has-child fold from the
+        # full log
         def _span_group(a=ids["span"], ids=ids):
             edges = _parent_edges(full).persist()
             all_eq, restricted, span_state = _span_state_superset(
@@ -591,7 +532,7 @@ def compute_deltas(
 
         thunks["_span_group"] = _span_group
 
-    if ids.get("interest") and "rel_interest_to_route_element" not in skip:
+    if ids.get("interest"):
         a = ids["interest"]
         r = _restrict(
             full,
@@ -607,7 +548,7 @@ def compute_deltas(
             group_keys=a, rows=df.toArrow()
         )
 
-    if ids.get("cable") and "rel_fiber_cable_to_route_element" not in skip:
+    if ids.get("cable"):
         a = ids["cable"]
         # restrict only the trigger streams; walks + specs stay whole (dims)
         r = _restrict(full, CABLE_TRIGGER_TYPES, a)

@@ -12,9 +12,10 @@ only the touched rows. Spec registries ride along as sink aux tables
 (``_aux_span_spec`` / ``_aux_struct_spec``) the same way.
 
 Scale shape: sink reads and writes are indexed and ∝ batch; the replay is
-O(batch events); nothing scans the log. Batches above the driver threshold
-fall back to the distributed recompute (incremental.MAX_DRIVER_BATCH_ROWS),
-which then reseeds these aux tables from the log.
+O(batch events); nothing scans the log. A batch above the driver chunk
+size (incremental.MAX_DRIVER_BATCH_ROWS) replays in seq-ordered chunks;
+only a batch that overlaps the watermark falls back to the distributed
+recompute, which then reseeds these aux tables from the log.
 
 Faithfulness notes (mirroring projections/core.py, NOT events/oracle.py's
 stricter KeyError behavior):

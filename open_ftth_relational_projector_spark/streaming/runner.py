@@ -7,11 +7,13 @@ suppressed, snapshots every table (truncate + COPY), then polls every
 * ``dehydrate`` — batch job: run all 8 projections over the full log, bulk
   overwrite the sink, persist the slack-end pre-aggregation, record the
   watermark (T2 bootstrap).
-* ``apply_batch`` — one micro-batch of incremental maintenance: affected-key
-  recompute (streaming/incremental.py) + keyed MERGE/DELETE, wrapped in a
-  sink transaction keyed by batch_id (T5: re-delivered batches are skipped,
-  and recompute-from-log is idempotent by construction — re-applying any
-  batch yields the same rows).
+* ``apply_batch`` — one micro-batch of incremental maintenance, wrapped in
+  a sink transaction keyed by batch_id (T5: re-delivered batches are
+  skipped). Two paths: a batch above the watermark replays on the driver
+  over sink-seeded state (streaming/replay.py), in seq-ordered chunks when
+  it outgrows the probe; a batch that overlaps the watermark takes the
+  distributed affected-key recompute (streaming/incremental.py), which is
+  idempotent by construction — re-applying any batch yields the same rows.
 * ``ProjectionStream`` — Structured Streaming wiring: file-source
   ``readStream`` over an envelope directory, ``foreachBatch`` into
   ``apply_batch``, default trigger processingTime=2s matching the
@@ -19,18 +21,20 @@ suppressed, snapshots every table (truncate + COPY), then polls every
   runs. Bronze accumulation is deduped on ``seq`` so a crash between bronze
   append and sink commit re-applies cleanly. The batch itself is deduped
   inside ``apply_batch``: driver-side on the collected probe rows, in Spark
-  only on the oversized path — a driver-sized batch costs no shuffle, and
-  none of its jobs reads the accumulated log.
+  by the chunk source — a probe-sized batch costs no shuffle, and no
+  driver-path job reads the accumulated log.
 
-Batch-order independence: because every batch recomputes its touched keys
-from the ACCUMULATED log, the final sink state depends only on the set of
-applied events, not the batch boundaries — the equivalence tests exploit
-this by splitting one log at random points.
+Batch-order independence: the final sink state depends only on the set of
+applied events, not the batch boundaries — the driver replay folds events
+in seq order over the state its predecessors left, and the fallback
+recomputes touched keys from the ACCUMULATED log. The equivalence tests
+exploit this by splitting one log at random points.
 """
 
 from __future__ import annotations
 
 import os
+from itertools import chain, islice
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -55,7 +59,7 @@ def aux_seed_frames(
 ) -> dict[str, DataFrame]:
     """Aux-table seed frames from an accumulated log: the append-only edge
     sets plus the silver span state and spec registries the driver-side
-    micro-batch replay reads. Used at dehydration and when a too-large
+    micro-batch replay reads. Used at dehydration and when an overlapping
     batch takes the distributed fallback (which must leave the aux tables
     consistent for the next driver-side batch)."""
     from open_ftth_relational_projector_spark.operators.lww import latest_by_key
@@ -231,8 +235,7 @@ def apply_slack_delta(sink, delta: GroupDelta) -> None:
 def _probe_collect(batch_envelopes: DataFrame, cap: int) -> list:
     """Bounded size-gate probe: pull at most ``cap + 1`` RAW envelope rows
     (seq, event_type, payload — payload stays an unparsed JSON string).
-    The driver-sized test seam: everything apply_batch ever collects of a
-    batch body goes through here, bounded by construction."""
+    A batch that fits is applied from these rows as one chunk."""
     return (
         batch_envelopes.select("seq", "event_type", "payload")
         .limit(cap + 1)
@@ -240,192 +243,164 @@ def _probe_collect(batch_envelopes: DataFrame, cap: int) -> list:
     )
 
 
+def _seq_chunks(batch_envelopes: DataFrame, cap: int):
+    """Chunk source for a batch the probe found oversized: the batch,
+    deduped on seq, streamed to the driver in seq order ``cap`` rows at a
+    time. A batch's result depends only on the set of events applied, so
+    replaying the chunks in order equals replaying the batch."""
+    rows = (
+        batch_envelopes.dropDuplicates(["seq"])
+        .orderBy("seq")
+        .select("seq", "event_type", "payload")
+        .toLocalIterator()
+    )
+    while chunk := list(islice(rows, cap)):
+        yield chunk
+
+
+def _write_deltas(sink, deltas: dict[str, TableDelta | GroupDelta]) -> None:
+    for table, delta in deltas.items():
+        if table == "_aux_slack_end":
+            apply_slack_delta(sink, delta)
+        elif isinstance(delta, GroupDelta):
+            sink.replace_group(table, delta.group_keys, delta.rows)
+        else:
+            sink.merge(table, delta.upserts)
+            sink.delete_keys(table, "id", delta.delete_keys)
+
+
+def _apply_driver_chunk(parsed: list[tuple[int, str, dict]], sink) -> None:
+    """Replay one chunk over the sink's current state and write its deltas.
+
+    The replays need sink state == fold(events before the chunk); the
+    caller guarantees it by applying non-overlapping chunks in seq order
+    inside one transaction, so each chunk reads its predecessors' writes.
+    """
+    from open_ftth_relational_projector_spark.streaming.replay import (
+        replay_lww_tables,
+        replay_rel_batch,
+    )
+
+    ids = affected_ids_from_rows(parsed)
+    edge_ctx = build_edge_context(parsed, ids, sink)
+    deltas: dict[str, TableDelta | GroupDelta] = {}
+    for table, (up, gone) in replay_lww_tables(parsed, ids, sink).items():
+        deltas[table] = TableDelta(upserts=up, delete_keys=gone)
+    for table, res in replay_rel_batch(parsed, ids, sink).items():
+        if res[0] == "keyed":
+            deltas[table] = TableDelta(upserts=res[1], delete_keys=res[2])
+        else:
+            deltas[table] = GroupDelta(group_keys=res[1], rows=res[2])
+    # spec registries are dimension streams — fold them EVERY chunk (a
+    # spec-only chunk must still land in the aux registry for later
+    # placements to resolve against)
+    for name, tbl in fold_spec_registry(parsed).items():
+        sink.merge(name, tbl)
+    if edge_ctx is not None:
+        rr = edge_ctx.span_replay
+        deltas["span_equipment"] = TableDelta(
+            upserts=rr.span_upserts, delete_keys=rr.span_deletes
+        )
+        deltas["_aux_slack_end"] = GroupDelta(
+            group_keys=edge_ctx.all_eq, rows=rr.slack_rows
+        )
+        sink.append("_aux_affix_edge", edge_ctx.new_edges)
+        sink.append("_aux_root_segment", edge_ctx.new_registry)
+        sink.append("_aux_detach", edge_ctx.new_detaches)
+        sink.merge("_aux_span_state", rr.state_upserts)
+        sink.delete_keys("_aux_span_state", "id", rr.state_deletes)
+    _write_deltas(sink, deltas)
+
+
+def _apply_fallback(
+    full_envelopes: DataFrame, ids: dict[str, list[str]], sink
+) -> None:
+    """Distributed recompute for a batch that overlaps the watermark: the
+    touched keys' rows are recomputed from the accumulated log, which is
+    idempotent by construction, and the aux tables are reseeded from it."""
+    full_log = EventLog.from_envelopes(full_envelopes)
+    try:
+        # every per-table recompute and the reseed re-read the log's typed
+        # streams; persisting spares each a re-parse of the envelopes
+        full_log = full_log.persisted()
+        deltas = compute_deltas(full_log, ids)
+        for name, df in aux_seed_frames(full_log).items():
+            sink.overwrite(name, df)
+        _write_deltas(sink, deltas)
+    finally:
+        full_log.unpersist()
+
+
 def apply_batch(
     full_envelopes: DataFrame,
     batch_envelopes: DataFrame,
     sink,
     batch_id: int | None = None,
-    probe_seq_first: bool = False,
 ) -> bool:
     """Apply one micro-batch incrementally. Returns False if skipped
     (already-applied batch_id — T5 exactly-once).
 
+    Two paths, chosen by whether the batch's smallest seq falls at or
+    below the sink watermark:
+
+    * no overlap, any size — the driver path. The batch is read in
+      chunks of at most ``MAX_DRIVER_BATCH_ROWS`` rows: the bounded size
+      probe is the one chunk of a batch that fits; a larger batch streams
+      in seq order (``_seq_chunks``). Each chunk is replayed over the
+      sink state its predecessors left. ``full_envelopes`` is never read.
+    * overlap (a re-delivered or late batch) — the distributed fallback:
+      the keys every chunk touches are recomputed from the persisted
+      ``full_envelopes`` and the aux tables are reseeded from it.
+
+    All chunks share one sink transaction, so a failed batch leaves the
+    sink unchanged; ``batch_id`` and the watermark are written at commit.
     ``batch_envelopes`` may hold duplicate ``seq`` rows (a re-read file, a
-    re-delivered source batch): the driver path keeps the first row per
-    seq of the collected probe, the oversized path dedups in Spark. Rows
-    duplicated in the probe only make it larger, so duplicates can push a
-    batch to the fallback but never onto the driver path wrongly.
-
-    ``full_envelopes`` (the accumulated log) is read only on the
-    distributed fallback — an oversized or overlapping batch — which
-    persists it for the per-table recomputes. A driver-sized,
-    non-overlapping batch never touches it.
-
-    ``probe_seq_first=True`` sizes the batch with a seq-ONLY probe before
-    touching payloads, so an oversized batch never materializes cap+1 raw
-    payload strings on the driver (r7 advisor carry-over: the last
-    driver-memory spike lived on exactly the backlog path). Costs one
-    extra tiny job when the batch turns out driver-sized — callers set it
-    only where backlog is plausible (the first micro-batch after a
-    (re)start); steady-state 2 s triggers keep the single-job full probe."""
+    re-delivered source batch): the probe keeps the first row per seq, the
+    chunk source dedups in Spark."""
     if batch_id is not None and sink.get_meta("applied_batch") == str(batch_id):
         return False
 
     from open_ftth_relational_projector_spark.streaming.incremental import (
         MAX_DRIVER_BATCH_ROWS,
-        affected_ids_distributed,
-    )
-
-    # Size-gate the batch with a PROBE collect of cap+1 rows: the common
-    # driver-sized case (every 2 s-trigger micro-batch) stays at ONE Spark
-    # job — the probe IS the collected batch, and min/max seq derive
-    # driver-side. Only the rare oversized case (post-downtime backlog in
-    # one batch) pays a second job for min/max; its probe pull is bounded
-    # at cap+1 rows by construction. Payload JSON parses only AFTER
-    # driver_sized is confirmed (round-6 advice: the oversized path was
-    # paying ~cap json.loads for rows it immediately discarded).
-    from open_ftth_relational_projector_spark.streaming.incremental import (
         parse_envelope_rows,
     )
 
-    if probe_seq_first:
-        # backlog-plausible caller: size on seq alone (≤ cap+1 longs on
-        # the driver), then pull payloads only once driver_sized is known
-        seq_rows = (
-            batch_envelopes.select("seq")
-            .limit(MAX_DRIVER_BATCH_ROWS + 1)
-            .collect()
-        )
-        driver_sized = len(seq_rows) <= MAX_DRIVER_BATCH_ROWS
-        probe_rows = (
-            _probe_collect(batch_envelopes, MAX_DRIVER_BATCH_ROWS)
-            if driver_sized
-            else []
-        )
-    else:
-        probe_rows = _probe_collect(batch_envelopes, MAX_DRIVER_BATCH_ROWS)
-        driver_sized = len(probe_rows) <= MAX_DRIVER_BATCH_ROWS
-    if driver_sized:
+    cap = MAX_DRIVER_BATCH_ROWS
+    probe_rows = _probe_collect(batch_envelopes, cap)
+    if len(probe_rows) <= cap:
         first_per_seq: dict = {}
         for r in probe_rows:
             first_per_seq.setdefault(r.seq, r)
-        parsed = parse_envelope_rows(first_per_seq.values())
-        seqs = [s for s, _, _ in parsed]
-        batch_min = min(seqs, default=None)
-        batch_max = max(seqs, default=None)
+        chunks = iter([first_per_seq.values()])
     else:
-        parsed = None
-        stat = batch_envelopes.agg(
-            F.min("seq").alias("mn"), F.max("seq").alias("mx")
-        ).collect()[0]
-        batch_min = int(stat["mn"])
-        batch_max = int(stat["mx"])
-    # lazy: the driver path reads only full_log.spark; the fallback
-    # persists it below, once it is known to be needed
-    full_log = EventLog.from_envelopes(full_envelopes)
-    batch_log = None
-    if parsed is None:
-        # oversized batch: touched keys come from a distributed distinct
-        # aggregation — only the id LISTS reach the driver
-        batch_log = EventLog.from_envelopes(
-            batch_envelopes.dropDuplicates(["seq"])
-        ).persisted()
+        chunks = _seq_chunks(batch_envelopes, cap)
+    first = parse_envelope_rows(next(chunks))
+    prev_wm = int(sink.get_meta("watermark") or 0)
+    overlap = bool(first) and min(s for s, _, _ in first) <= prev_wm
+    ids: dict[str, set[str]] = {}
+    batch_max = None
+    sink.begin()
     try:
-        from open_ftth_relational_projector_spark.streaming.replay import (
-            replay_lww_tables,
-            replay_rel_batch,
-        )
-
-        ids = (
-            affected_ids_from_rows(parsed)
-            if parsed is not None
-            else affected_ids_distributed(batch_log)
-        )
-
-        # The driver-side replays require sink state == fold(log ∖ batch).
-        # A re-delivered/overlapping batch (batch min seq ≤ watermark)
-        # violates that, so it takes the distributed recompute, which is
-        # idempotent by construction (pure function of the accumulated log).
-        prev_wm = int(sink.get_meta("watermark") or 0)
-        overlap = batch_min is not None and batch_min <= prev_wm
-        driver_ok = driver_sized and not overlap
-        if not driver_ok:
-            # distributed fallback: materialize the typed streams once —
-            # every per-table delta and the aux reseed re-read several of
-            # them, and without this each recompute re-filters and
-            # re-parses the accumulated envelope log
-            full_log = full_log.persisted()
-
-        edge_ctx = (
-            build_edge_context(full_log, parsed, ids, sink)
-            if parsed is not None and not overlap
-            else None
-        )
-        # join-free LWW tables replay straight against the sink's public
-        # rows (zero Spark jobs) whenever the batch is driver-sized
-        driver_deltas: dict[str, TableDelta | GroupDelta] = {}
-        if driver_ok:
-            for table, (up, gone) in replay_lww_tables(parsed, ids, sink).items():
-                driver_deltas[table] = TableDelta(upserts=up, delete_keys=gone)
-            for table, res in replay_rel_batch(parsed, ids, sink).items():
-                if res[0] == "keyed":
-                    driver_deltas[table] = TableDelta(
-                        upserts=res[1], delete_keys=res[2]
-                    )
-                else:
-                    driver_deltas[table] = GroupDelta(
-                        group_keys=res[1], rows=res[2]
-                    )
-        deltas = compute_deltas(
-            full_log, ids, edge_ctx=edge_ctx, skip=tuple(driver_deltas)
-        )
-        deltas.update(driver_deltas)
-
-        sink.begin()
-        try:
-            # spec registries are dimension streams — fold them EVERY batch
-            # (a spec-only batch must still land in the aux registry for
-            # later batches' placements to resolve against)
-            if parsed is not None:
-                for name, tbl in fold_spec_registry(parsed).items():
-                    sink.merge(name, tbl)
-            if edge_ctx is not None:
-                sink.append("_aux_affix_edge", edge_ctx.new_edges)
-                sink.append("_aux_root_segment", edge_ctx.new_registry)
-                sink.append("_aux_detach", edge_ctx.new_detaches)
-                rr = edge_ctx.span_replay
-                if rr is not None:
-                    sink.merge("_aux_span_state", rr.state_upserts)
-                    sink.delete_keys("_aux_span_state", "id", rr.state_deletes)
-            elif parsed is None or ids.get("span") or ids.get("cable"):
-                # distributed fallback (overlap/giant batch): the aux sets
-                # — including the spec/walk registries an oversized batch
-                # never folded driver-side — are reseeded wholesale from
-                # the accumulated log (the fallback is already ∝ log).
-                for name, df in aux_seed_frames(full_log).items():
-                    sink.overwrite(name, df)
-            for table, delta in deltas.items():
-                if table == "_aux_slack_end":
-                    apply_slack_delta(sink, delta)
-                elif isinstance(delta, GroupDelta):
-                    sink.replace_group(table, delta.group_keys, delta.rows)
-                elif isinstance(delta, TableDelta):
-                    sink.merge(table, delta.upserts)
-                    sink.delete_keys(table, "id", delta.delete_keys)
-            if batch_id is not None:
-                sink.set_meta("applied_batch", str(batch_id))
-            # batch_max came from the sizing aggregate — no extra job
-            if batch_max is not None:
-                prev = int(sink.get_meta("watermark") or 0)
-                sink.set_meta("watermark", str(max(prev, int(batch_max))))
-            sink.commit()
-        except Exception:
-            sink.rollback()
-            raise
-    finally:
-        full_log.unpersist()
-        if batch_log is not None:
-            batch_log.unpersist()
+        for parsed in chain([first], map(parse_envelope_rows, chunks)):
+            # chunks arrive in seq order: the last one holds the batch max
+            batch_max = max((s for s, _, _ in parsed), default=batch_max)
+            if overlap:
+                for domain, keys in affected_ids_from_rows(parsed).items():
+                    ids.setdefault(domain, set()).update(keys)
+            else:
+                _apply_driver_chunk(parsed, sink)
+        if overlap:
+            _apply_fallback(
+                full_envelopes, {d: sorted(k) for d, k in ids.items()}, sink
+            )
+        if batch_id is not None:
+            sink.set_meta("applied_batch", str(batch_id))
+        if batch_max is not None:
+            sink.set_meta("watermark", str(max(prev_wm, batch_max)))
+        sink.commit()
+    except Exception:
+        sink.rollback()
+        raise
     return True
 
 
@@ -454,18 +429,11 @@ class ProjectionStream:
         # a bounded slice of the backlog, not all of it — the streaming
         # analog of the reference's two-phase Worker design (Worker.cs:32-48,
         # dehydrate bulk, then bounded catch-up). availableNow drains honor
-        # it too. Oversized batches that still slip through (a single giant
-        # file) reroute inside apply_batch to the distributed no-collect
-        # path.
+        # it too. An oversized batch that still slips through (a single
+        # giant file) replays on the driver in seq-ordered chunks inside
+        # apply_batch.
         self.max_files_per_trigger = max_files_per_trigger
         self.query = None
-        # backlog lands in the first micro-batch after a (re)start (the
-        # file source delivers accumulated files there; a single giant
-        # file can exceed maxFilesPerTrigger's row bound) — that batch
-        # sizes itself seq-first so the oversized case never pulls raw
-        # payloads to the driver; steady-state batches keep the
-        # single-job probe
-        self._first_since_start = True
 
     def _process(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -479,17 +447,9 @@ class ProjectionStream:
             .parquet(self.bronze_dir)
             .dropDuplicates(["seq"])
         )
-        apply_batch(
-            full,
-            batch_df,
-            self.sink,
-            batch_id=batch_id,
-            probe_seq_first=self._first_since_start,
-        )
-        self._first_since_start = False
+        apply_batch(full, batch_df, self.sink, batch_id=batch_id)
 
     def start(self, available_now: bool = False, trigger_seconds: float = 2.0):
-        self._first_since_start = True  # a restart is a backlog window again
         reader = self.spark.readStream.schema(ENVELOPE_SCHEMA)
         if self.max_files_per_trigger is not None:
             reader = reader.option(

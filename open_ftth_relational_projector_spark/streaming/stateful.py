@@ -141,10 +141,6 @@ def stateful_work_task_tws(envelopes: DataFrame) -> DataFrame:
     )
 
 
-def _noop(*_: Any) -> None:  # pragma: no cover - keeps linters quiet
-    return None
-
-
 def stateful_running_totals(
     events: DataFrame,
     key_col: str = "user_id",

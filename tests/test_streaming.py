@@ -116,18 +116,26 @@ def test_batch_id_replay_skipped(spark, envelopes, expected_tables):
     _assert_sink_matches(sink, expected_tables)
 
 
+@pytest.mark.parametrize("cap", [None, 7], ids=["probe", "chunked"])
 def test_failed_apply_batch_leaves_sink_unchanged(
-    spark, envelopes, expected_tables
+    spark, envelopes, expected_tables, monkeypatch, cap
 ):
     """T5 atomicity: a sink failure mid-batch rolls the whole micro-batch
     back — tables, aux state, and batch bookkeeping all revert, and the
     same batch then re-applies cleanly. (The reference's per-statement
-    autocommit can strand a half-applied batch; PostgresWriter.cs:72-112.)"""
+    autocommit can strand a half-applied batch; PostgresWriter.cs:72-112.)
+    With a small cap the batch replays in many chunks, all of which must
+    roll back together."""
+    import open_ftth_relational_projector_spark.streaming.incremental as I
+    from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
+
+    if cap is not None:
+        monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", cap)
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     cut = max_seq // 2
     sink = DuckDBSink()
     dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
-    before = {n: sink.read_table(n) for n in PROJECTION_TABLES}
+    before = {n: sink.read_table(n) for n in TABLE_COLUMNS}
     batch = envelopes.filter(f"seq > {cut}")
 
     orig_set_meta = sink.set_meta
@@ -144,6 +152,7 @@ def test_failed_apply_batch_leaves_sink_unchanged(
     sink.set_meta = orig_set_meta
 
     assert sink.get_meta("applied_batch") is None
+    assert sink.get_meta("watermark") == str(cut)
     for name, exp in before.items():
         got = sink.read_table(name)
         cols = list(exp.columns)
@@ -155,12 +164,17 @@ def test_failed_apply_batch_leaves_sink_unchanged(
     _assert_sink_matches(sink, expected_tables)
 
 
-def test_driver_path_never_reads_accumulated_log(spark, envelopes, expected_tables):
-    """A driver-sized, non-overlapping batch runs Spark jobs on the batch
-    only: handed an accumulated log whose execution raises, it still
-    applies and matches the batch fold. An overlapping batch takes the
-    distributed fallback, which must read that log — and so raises."""
+def test_driver_path_never_reads_accumulated_log(
+    spark, envelopes, expected_tables, monkeypatch
+):
+    """A non-overlapping batch runs Spark jobs on the batch only: handed an
+    accumulated log whose execution raises, it still applies and matches
+    the batch fold — driver-sized, and oversized (replayed in chunks). An
+    overlapping batch takes the distributed fallback, which must read that
+    log — and so raises."""
     from pyspark.sql import functions as F
+
+    import open_ftth_relational_projector_spark.streaming.incremental as I
 
     poisoned = envelopes.withColumn(
         "payload",
@@ -187,15 +201,23 @@ def test_driver_path_never_reads_accumulated_log(spark, envelopes, expected_tabl
         apply_batch(poisoned, overlapping, sink, batch_id=0)
     assert sink.get_meta("watermark") == str(cut)
 
+    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 7)
+    sink = DuckDBSink()
+    dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
+    assert apply_batch(poisoned, batch, sink, batch_id=0) is True
+    _assert_sink_matches(sink, expected_tables)
+    assert sink.get_meta("watermark") == str(max_seq)
+
 
 def test_duplicated_batch_rows_apply_once(
     spark, envelopes, expected_tables, monkeypatch
 ):
     """A batch holding every row twice (a re-read file) applies as if
-    each row came once — on the driver path, where apply_batch dedups the
-    collected probe rows, and on the forced distributed fallback. The
-    driver path must also leave the aux tables (the appended edge sets
-    later batches fold) exactly as a single copy of the batch does."""
+    each row came once — from the probe, where apply_batch dedups the
+    collected rows, and in chunks under a small cap, where the copies of a
+    row would fall into different chunks unless the chunk source dedups.
+    Both must also leave the aux tables (the appended edge sets later
+    batches fold) exactly as a single copy of the batch does."""
     import open_ftth_relational_projector_spark.streaming.incremental as I
     from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
 
@@ -214,8 +236,10 @@ def test_duplicated_batch_rows_apply_once(
     once = applied(tail)
     _assert_sink_matches(sink, {n: once.read_table(n) for n in TABLE_COLUMNS})
 
-    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 0)
-    _assert_sink_matches(applied(tail.unionAll(tail)), expected_tables)
+    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 7)
+    sink = applied(tail.unionAll(tail))
+    _assert_sink_matches(sink, expected_tables)
+    _assert_sink_matches(sink, {n: once.read_table(n) for n in TABLE_COLUMNS})
 
 
 def test_structured_streaming_available_now(spark, envelopes, expected_tables):
@@ -266,7 +290,6 @@ def test_edge_context_resolves_against_sink_registry(spark):
     """A batch affix referencing a root segment REGISTERED IN AN EARLIER
     BATCH must resolve through the sink aux registry, and an intervening
     removal must tombstone it."""
-    from open_ftth_relational_projector_spark.events.reader import EventLog
     from open_ftth_relational_projector_spark.streaming.incremental import (
         build_edge_context,
     )
@@ -292,8 +315,7 @@ def test_edge_context_resolves_against_sink_registry(spark):
           "newUtilityHopList": [{"parentAffixes": [{"spanSegmentId": "seg-p2"}]}]}),
     ]
     ids = {"span": ["c1", "c2"], "cable": ["c1", "c2"]}
-    full = EventLog.from_typed(spark, {})
-    ctx = build_edge_context(full, parsed, ids, sink)
+    ctx = build_edge_context(parsed, ids, sink)
     resolved = sorted(
         zip(
             ctx.new_edges.column("child_id").to_pylist(),
@@ -377,13 +399,12 @@ def test_fold_has_child_matches_spark_fold(spark):
     assert len(driver_rows) > 0
 
 
-def test_apply_batch_large_batch_fallback(spark, monkeypatch):
-    """Batches above MAX_DRIVER_BATCH_ROWS never reach the driver in
-    full: only the bounded size PROBE (cap+1 rows) is collected — touched
-    keys come from a distributed distinct aggregation, the driver-side
-    edge path is skipped, and the distributed full-recompute fallback
-    produces the same tables — the bounded-catch-up guarantee for a
-    post-downtime backlog batch."""
+def test_apply_batch_oversized_batch_replays_in_chunks(spark, monkeypatch):
+    """A batch above MAX_DRIVER_BATCH_ROWS stays on the driver path: after
+    the bounded probe (cap + 1 rows) it streams in seq order, at most cap
+    rows per chunk, every row exactly once; the distributed recompute never
+    runs; and the tables match the batch fold — the bounded-catch-up
+    guarantee for a post-downtime backlog batch."""
     import open_ftth_relational_projector_spark.streaming.incremental as I
     import open_ftth_relational_projector_spark.streaming.runner as R
 
@@ -395,45 +416,80 @@ def test_apply_batch_large_batch_fallback(spark, monkeypatch):
 
     max_seq = env.agg({"seq": "max"}).collect()[0][0]
     cut = int(max_seq * 0.5)
-    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 0)
+    cap = 40
+    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", cap)
 
-    real_probe = R._probe_collect
-    collected_sizes = []
+    real_probe, real_chunks = R._probe_collect, R._seq_chunks
+    pulls, chunk_seqs = [], []
 
-    def bounded_probe(batch_envelopes, cap):
-        rows = real_probe(batch_envelopes, cap)
-        collected_sizes.append(len(rows))
+    def bounded_probe(batch_envelopes, c):
+        rows = real_probe(batch_envelopes, c)
+        pulls.append(len(rows))
         return rows
 
+    def bounded_chunks(batch_envelopes, c):
+        for chunk in real_chunks(batch_envelopes, c):
+            pulls.append(len(chunk))
+            chunk_seqs.extend(r.seq for r in chunk)
+            yield chunk
+
+    def no_recompute(*_args, **_kwargs):
+        raise AssertionError("compute_deltas ran on the driver path")
+
     monkeypatch.setattr(R, "_probe_collect", bounded_probe)
+    monkeypatch.setattr(R, "_seq_chunks", bounded_chunks)
+    monkeypatch.setattr(R, "compute_deltas", no_recompute)
     sink = DuckDBSink()
     dehydrate(env.filter(f"seq <= {cut}"), sink)
-    apply_batch(env, env.filter(f"seq > {cut}"), sink, batch_id=0)
-    # with the cap at 0, every collect was the 1-row probe — the batch
-    # body (hundreds of rows) never reached the driver
-    assert collected_sizes and max(collected_sizes) <= 1
+    batch = env.filter(f"seq > {cut}")
+    # uncoalesced, the deduped batch spans several shuffle partitions, so
+    # seq order across chunks must come from the chunk source's sort
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert apply_batch(env, batch, sink, batch_id=0) is True
+    finally:
+        spark.conf.set(key, prev)
+
+    assert len(pulls) > 2 and max(pulls) <= cap + 1
+    assert chunk_seqs == sorted(r.seq for r in batch.select("seq").collect())
+    assert sink.get_meta("watermark") == str(max_seq)
     _assert_sink_matches(sink, expected)
 
 
-def test_affected_ids_distributed_matches_driver_extraction(spark):
-    """The no-collect key extraction must name exactly the same touched
-    entities per domain as the driver-side parsed-payload walk."""
-    from open_ftth_relational_projector_spark.streaming.incremental import (
-        affected_ids_distributed,
-        affected_ids_from_rows,
-        parse_envelope_rows,
-    )
+def test_oversized_batch_straddling_watermark_takes_fallback(
+    spark, envelopes, expected_tables, monkeypatch
+):
+    """An oversized batch whose smallest seq is at or below the watermark
+    (a late or partly re-delivered backlog) takes the distributed
+    fallback, once, with the keys every chunk touches — not only the
+    first chunk's — and the tables match the batch fold."""
+    import open_ftth_relational_projector_spark.streaming.incremental as I
+    import open_ftth_relational_projector_spark.streaming.runner as R
 
-    env = spark.createDataFrame(
-        to_envelope_rows(generate(seed=33, scale=5)), ENVELOPE_SCHEMA
-    ).cache()
-    max_seq = env.agg({"seq": "max"}).collect()[0][0]
-    batch = env.filter(f"seq > {int(max_seq * 0.4)}")
-    via_driver = affected_ids_from_rows(
-        parse_envelope_rows(batch.select("seq", "event_type", "payload").collect())
+    max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
+    cut = max_seq // 2
+    batch = envelopes.filter(f"seq > {cut - 3}")
+    expected_ids = I.affected_ids_from_rows(
+        I.parse_envelope_rows(batch.select("seq", "event_type", "payload").collect())
     )
-    via_spark = affected_ids_distributed(EventLog.from_envelopes(batch))
-    assert via_spark == via_driver
+    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 7)
+    real = R.compute_deltas
+    recomputed = []
+
+    def spy(full, ids):
+        recomputed.append(ids)
+        return real(full, ids)
+
+    monkeypatch.setattr(R, "compute_deltas", spy)
+    sink = DuckDBSink()
+    dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
+    assert apply_batch(envelopes, batch, sink, batch_id=0) is True
+
+    assert recomputed == [expected_ids]
+    assert sink.get_meta("watermark") == str(max_seq)
+    _assert_sink_matches(sink, expected_tables)
 
 
 def test_backlog_replay_bounded_batches(spark, envelopes, expected_tables):
@@ -673,53 +729,3 @@ def test_projection_stream_checkpoint_restart(spark, envelopes, expected_tables)
         _assert_sink_matches(sink, expected_tables)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_apply_batch_probe_seq_first_skips_payload_pull(spark, monkeypatch):
-    """probe_seq_first=True (the backlog-plausible first batch after a
-    (re)start): an OVERSIZED batch must never collect payload rows at all
-    — the seq-only probe sizes it, min/max come from the distributed
-    aggregate, and the result still matches the full recompute. A
-    driver-sized batch under the same flag still collects its (bounded)
-    body once and applies identically."""
-    import open_ftth_relational_projector_spark.streaming.incremental as I
-    import open_ftth_relational_projector_spark.streaming.runner as R
-
-    env = spark.createDataFrame(
-        to_envelope_rows(generate(seed=23, scale=6)), ENVELOPE_SCHEMA
-    ).cache()
-    tables = project_all(EventLog.from_envelopes(env))
-    expected = {n: tables[n].toPandas() for n in PROJECTION_TABLES}
-
-    max_seq = env.agg({"seq": "max"}).collect()[0][0]
-    cut = int(max_seq * 0.5)
-
-    payload_pulls = []
-    real_probe = R._probe_collect
-
-    def counting_probe(batch_envelopes, cap):
-        rows = real_probe(batch_envelopes, cap)
-        payload_pulls.append(len(rows))
-        return rows
-
-    monkeypatch.setattr(R, "_probe_collect", counting_probe)
-
-    # oversized (cap 0): payload probe must not run at all
-    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 0)
-    sink = DuckDBSink()
-    dehydrate(env.filter(f"seq <= {cut}"), sink)
-    apply_batch(
-        env, env.filter(f"seq > {cut}"), sink, batch_id=0, probe_seq_first=True
-    )
-    assert payload_pulls == []
-    _assert_sink_matches(sink, expected)
-
-    # driver-sized under the flag: one bounded payload pull, same result
-    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 10_000)
-    sink2 = DuckDBSink()
-    dehydrate(env.filter(f"seq <= {cut}"), sink2)
-    apply_batch(
-        env, env.filter(f"seq > {cut}"), sink2, batch_id=0, probe_seq_first=True
-    )
-    assert len(payload_pulls) == 1
-    _assert_sink_matches(sink2, expected)
