@@ -111,35 +111,6 @@ class EventLog:
         for df in self._typed.values():
             df.unpersist()
 
-    def restricted(
-        self, filters: dict[str, tuple[str, DataFrame | list]]
-    ) -> "EventLog":
-        """Key-restricted view for incremental recompute.
-
-        ``filters[event_type] = (id_expr, ids)`` narrows that type's stream
-        to events whose ``id_expr`` is in ``ids``. A plain list becomes an
-        IN-set literal filter — no broadcast build, no join, and the
-        predicate pushes into the (bucketed-at-scale) bronze scan; a
-        DataFrame becomes a broadcast semi-join (for key sets too large to
-        inline). Unlisted types pass through whole, which is what keeps
-        dimension streams (spec registrations, container relations, walks)
-        visible to as-of joins during a per-key recompute.
-        """
-        typed = dict(self._typed)
-        for etype, (id_expr, ids) in filters.items():
-            src = self.of(etype)
-            if isinstance(ids, list):
-                typed[etype] = src.filter(F.col(id_expr).isin(ids))
-            else:
-                typed[etype] = src.join(
-                    F.broadcast(ids.select(F.col("id").alias("_rid"))),
-                    F.col(id_expr) == F.col("_rid"),
-                    "left_semi",
-                )
-        # keep the raw frame so unlisted types still lazily derive (they
-        # must pass through WHOLE — dimension streams feed as-of joins)
-        return EventLog(typed, self._spark, raw=self._raw)
-
     @property
     def raw(self) -> DataFrame | None:
         """The (seq, event_type, payload) envelope frame this log was

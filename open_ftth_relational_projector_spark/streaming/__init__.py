@@ -1,12 +1,10 @@
 """Streaming layer (SURVEY §2.7): dehydrate-then-catch-up as Structured
 Streaming + incremental view maintenance over a relational sink."""
 
-from open_ftth_relational_projector_spark.streaming.incremental import (
-    compute_deltas,
-)
 from open_ftth_relational_projector_spark.streaming.runner import (
     ProjectionStream,
     apply_batch,
+    compute_deltas,
     dehydrate,
 )
 

@@ -2,57 +2,27 @@
 
 The reference applies each event imperatively against in-memory state and
 issues per-row DML (RelationalDatabaseProjection.cs:226-264, 407-458).
-``apply_batch`` (streaming/runner.py) has two paths, and this module serves
-both:
+``apply_batch`` (streaming/runner.py) serves every batch above the sink
+watermark, of any size, on the driver, in chunks of at most
+``MAX_DRIVER_BATCH_ROWS`` rows. ``affected_ids_from_rows`` names the entity
+keys a chunk touches and ``build_edge_context`` resolves its affix-edge,
+root-segment and detach deltas against the sink aux tables; the replays in
+streaming/replay.py produce the rows. No job reads the accumulated log. (A
+batch that overlaps the watermark is not maintained incrementally: it
+rebuilds every table from the accumulated log through dehydrate's fold,
+``runner.compute_deltas``.)
 
-* the driver path — every batch above the sink watermark, of any size, in
-  chunks of at most ``MAX_DRIVER_BATCH_ROWS`` rows. ``affected_ids_from_rows``
-  names the entity keys a chunk touches and ``build_edge_context`` resolves
-  its affix-edge, root-segment and detach deltas against the sink aux
-  tables; the replays in streaming/replay.py produce the rows. No job reads
-  the accumulated log.
-* the fallback — a batch that overlaps the watermark (re-delivered or
-  late). ``compute_deltas`` re-runs the SAME projection expressions
-  (projections/core.py) over the accumulated log *restricted to the touched
-  keys* — entity streams are semi-joined to the key set while dimension
-  streams (spec registrations, container relations, interest walks) pass
-  through whole so as-of joins still see them — and the sink MERGE/DELETEs
-  the result keyed by entity id (delete = affected key with no row).
-
-The fallback's correctness rests on per-key determinism: a key's final row
-depends only on (its own entity stream) × (dimension streams), so
-recompute-from-log equals the reference's incremental fold — verified by
-tests/test_streaming.py equivalence over random batch splits. Its cost is
-∝ events-of-touched-keys, reached through a semi-join that Catalyst pushes
-into the bronze scan. conduit_slack — the one cross-entity aggregate — is
-maintained on both paths through the persisted ``_aux_slack_end``
-pre-aggregation: replace touched equipments' end rows, re-aggregate only
-touched route nodes (the standard IVM delta-aggregation; the reference's
-imperative counters, ProjektorState.cs:473-512, are the single-threaded
-special case of this).
+conduit_slack — the one cross-entity aggregate — is maintained through the
+persisted ``_aux_slack_end`` pre-aggregation: replace touched equipments'
+end rows, re-aggregate only touched route nodes (the standard IVM
+delta-aggregation; the reference's imperative counters,
+ProjektorState.cs:473-512, are the single-threaded special case of this).
 """
 
 from __future__ import annotations
 
 import hashlib
 from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, functions as F
-
-from open_ftth_relational_projector_spark.events.reader import EventLog
-from open_ftth_relational_projector_spark.projections.core import (
-    _has_child_final,
-    _parent_edges,
-    _span_state,
-    project_installation,
-    project_node_container,
-    project_rel_fiber_cable_to_route_element,
-    project_rel_interest_to_route_element,
-    project_service_termination,
-    project_span_equipment,
-    project_work_task,
-    slack_ends,
-)
 
 # -- per-event-type affected-entity extraction ------------------------------
 # event_type -> (domain, id expression in the flattened typed frame).
@@ -86,7 +56,6 @@ AFFECTED: dict[str, tuple[str, str]] = {
     "InstallationLocationRemarkChanged": ("installation", "id"),
 }
 
-SPAN_ENTITY_TYPES = [t for t, (d, _) in AFFECTED.items() if d == "span"]
 # fiber-cable relation triggers: placement / affix / detach only
 # (ProjektorState.cs:169-171, 388, 421 — walk edits and removals do NOT
 # retrigger).
@@ -388,212 +357,7 @@ def build_edge_context(
     )
 
 
-def _ids_df(spark, ids: list[str], col: str = "id") -> DataFrame:
-    return spark.createDataFrame([(i,) for i in ids], f"{col} string")
-
-
-# Above this many keys an IN-set literal filter stops being the cheap form
-# and the restriction goes through a broadcast semi-join instead.
-MAX_INLINE_IDS = 10_000
-
-
-def _restrict(log: EventLog, types: list[str], ids: list[str]) -> EventLog:
-    key: list | DataFrame = (
-        ids if len(ids) <= MAX_INLINE_IDS else _ids_df(log.spark, ids)
-    )
-    return log.restricted({t: (AFFECTED[t][1], key) for t in types})
-
-
-def _keyed_to(df: DataFrame, ids: list[str], col: str = "id") -> DataFrame:
-    """Restrict a keyed frame to ``ids`` — IN-set filter for small sets."""
-    if len(ids) <= MAX_INLINE_IDS:
-        return df.filter(F.col(col).isin(ids))
-    return df.join(
-        F.broadcast(_ids_df(df.sparkSession, ids, col)), col, "left_semi"
-    )
-
-
-def _keyed_delta(result: DataFrame, affected: list[str], key: str = "id") -> TableDelta:
-    tbl = result.toArrow()
-    present = set(tbl.column(key).to_pylist())
-    return TableDelta(
-        upserts=tbl, delete_keys=[k for k in affected if k not in present]
-    )
-
-
 def md5_uuid(value: str) -> str:
     """Python twin of projections.core.NODE_UUID_EXPR."""
     h = hashlib.md5(value.encode("utf-8")).hexdigest()
     return f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
-
-
-def compute_deltas(
-    full: EventLog, ids: dict[str, list[str]]
-) -> dict[str, TableDelta | GroupDelta]:
-    """Recompute every affected row set against the accumulated log — the
-    fallback of apply_batch, for a batch that overlaps the watermark.
-
-    Returns per-table deltas; ``_aux_slack_end`` carries the slack-end
-    pre-aggregation whose node-level re-aggregation happens sink-side
-    (apply_slack_delta in runner.py).
-
-    Per-table deltas are independent Spark jobs over the shared cached log,
-    so the collect step (toArrow) fans out on a thread pool — a micro-batch
-    costs max(table job), not sum(table jobs). Plans are built serially
-    (cheap, driver-side); only the actions run concurrently.
-    """
-    from open_ftth_relational_projector_spark.plans.concurrency import run_concurrent
-
-    thunks: dict[str, object] = {}
-
-    if ids.get("work_task"):
-        a = ids["work_task"]
-        r = _restrict(full, ["WorkTaskCreated", "WorkTaskStatusChanged"], a)
-        thunks["work_task"] = lambda a=a, r=r: _keyed_delta(project_work_task(r), a)
-
-    if ids.get("installation"):
-        a = ids["installation"]
-        r = _restrict(
-            full,
-            [
-                "InstallationCreated",
-                "InstallationUnitAddressChanged",
-                "InstallationStatusChanged",
-                "InstallationLocationRemarkChanged",
-            ],
-            a,
-        )
-        thunks["installation"] = lambda a=a, r=r: _keyed_delta(
-            project_installation(r), a
-        )
-
-    if ids.get("node_container"):
-        a = ids["node_container"]
-        r = _restrict(
-            full,
-            [
-                "NodeContainerPlacedInRouteNetwork",
-                "NodeContainerRemovedFromRouteNetwork",
-                "NodeContainerSpecificationChanged",
-            ],
-            a,
-        )
-        thunks["node_container"] = lambda a=a, r=r: _keyed_delta(
-            project_node_container(r), a
-        )
-
-    if ids.get("terminal"):
-        a = ids["terminal"]
-        r = _restrict(
-            full,
-            [
-                "TerminalEquipmentPlacedInNodeContainer",
-                "TerminalEquipmentRemoved",
-                "TerminalEquipmentNamingInfoChanged",
-                "TerminalEquipmentAddressInfoChanged",
-            ],
-            a,
-        )
-        thunks["service_termination"] = lambda a=a, r=r: _keyed_delta(
-            project_service_termination(r), a
-        )
-
-    if ids.get("span"):
-        # recompute the superset's state and the has-child fold from the
-        # full log
-        def _span_group(a=ids["span"], ids=ids):
-            edges = _parent_edges(full).persist()
-            all_eq, restricted, span_state = _span_state_superset(
-                full, ids, edges=edges
-            )
-            span_state = span_state.persist()
-            has_child_src = _has_child_final(full, edges=edges)
-            try:
-                state_a = _keyed_to(span_state, a)
-                span_df = project_span_equipment(restricted, state=state_a)
-                # has_child needs the UNRESTRICTED edge set (other
-                # children's affixes keep a parent flagged); filter to
-                # affected ids after the fold (ProjektorState.cs:360-368,
-                # 405-413 — the superset includes parents of touched
-                # children).
-                has_child = _keyed_to(has_child_src, all_eq)
-                ends_df = slack_ends(
-                    restricted, state=span_state, has_child=has_child
-                )
-                return {
-                    "span_equipment": _keyed_delta(span_df, a),
-                    "_aux_slack_end": GroupDelta(
-                        group_keys=all_eq, rows=ends_df.toArrow()
-                    ),
-                }
-            finally:
-                span_state.unpersist()
-                edges.unpersist()
-
-        thunks["_span_group"] = _span_group
-
-    if ids.get("interest"):
-        a = ids["interest"]
-        r = _restrict(
-            full,
-            [
-                "WalkOfInterestRegistered",
-                "WalkOfInterestRouteNetworkElementsModified",
-                "InterestUnregistered",
-            ],
-            a,
-        )
-        df = project_rel_interest_to_route_element(r)
-        thunks["rel_interest_to_route_element"] = lambda a=a, df=df: GroupDelta(
-            group_keys=a, rows=df.toArrow()
-        )
-
-    if ids.get("cable"):
-        a = ids["cable"]
-        # restrict only the trigger streams; walks + specs stay whole (dims)
-        r = _restrict(full, CABLE_TRIGGER_TYPES, a)
-        df = project_rel_fiber_cable_to_route_element(r)
-        thunks["rel_fiber_cable_to_route_element"] = lambda a=a, df=df: GroupDelta(
-            group_keys=a, rows=df.toArrow()
-        )
-
-    results = run_concurrent(thunks)
-    deltas: dict[str, TableDelta | GroupDelta] = {}
-    for name, value in results.items():
-        if name == "_span_group":
-            deltas.update(value)
-        else:
-            deltas[name] = value
-    return deltas
-
-
-def _span_state_superset(
-    full: EventLog, ids: dict[str, list[str]], edges: DataFrame | None = None
-) -> tuple[list[str], EventLog, DataFrame]:
-    """Touched spans ∪ their affix parents, the span-entity streams
-    restricted to that set, and the folded state over it.
-
-    Parent expansion runs only when the batch actually carries edge-changing
-    events (placement/affix/detach — the only flips of a parent's has-child
-    flag, ProjektorState.cs:360-368, 405-413); address/move/spec/remove-only
-    batches skip the edge-set scan entirely. Pass ``edges`` to reuse an
-    already-persisted _parent_edges set.
-    """
-    span_ids = ids["span"]
-    all_ids = set(span_ids)
-    if ids.get("cable"):  # cable triggers == the edge-changing event types
-        ids_df = _ids_df(full.spark, ids["cable"])
-        parents = (
-            (_parent_edges(full) if edges is None else edges)
-            .join(
-                F.broadcast(ids_df.withColumnRenamed("id", "child_id")),
-                "child_id",
-                "left_semi",
-            )
-            .select(F.col("parent_id").alias("id"))
-            .distinct()
-        )
-        all_ids.update(r.id for r in parents.collect())
-    all_ids = sorted(all_ids)
-    restricted = _restrict(full, SPAN_ENTITY_TYPES, all_ids)
-    return all_ids, restricted, _span_state(restricted)

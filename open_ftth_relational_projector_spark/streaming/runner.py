@@ -4,15 +4,16 @@ The reference's Worker (Worker.cs:22-48) replays all history with writes
 suppressed, snapshots every table (truncate + COPY), then polls every
 2000 ms applying per-event DML. Spark-first:
 
-* ``dehydrate`` — batch job: run all 8 projections over the full log, bulk
-  overwrite the sink, persist the slack-end pre-aggregation, record the
-  watermark (T2 bootstrap).
+* ``dehydrate`` — batch job: ``compute_deltas`` runs all 8 projections,
+  the slack-end pre-aggregation and the aux seed tables over the full log
+  in Spark; every table is overwritten and the watermark recorded in one
+  sink transaction (T2 bootstrap).
 * ``apply_batch`` — one micro-batch of incremental maintenance, wrapped in
   a sink transaction keyed by batch_id (T5: re-delivered batches are
   skipped). Two paths: a batch above the watermark replays on the driver
   over sink-seeded state (streaming/replay.py), in seq-ordered chunks when
-  it outgrows the probe; a batch that overlaps the watermark takes the
-  distributed affected-key recompute (streaming/incremental.py), which is
+  it outgrows the probe; a batch that overlaps the watermark rebuilds
+  every table from the accumulated log through dehydrate's fold, which is
   idempotent by construction — re-applying any batch yields the same rows.
 * ``ProjectionStream`` — Structured Streaming wiring: file-source
   ``readStream`` over an envelope directory, ``foreachBatch`` into
@@ -26,8 +27,8 @@ suppressed, snapshots every table (truncate + COPY), then polls every
 
 Batch-order independence: the final sink state depends only on the set of
 applied events, not the batch boundaries — the driver replay folds events
-in seq order over the state its predecessors left, and the fallback
-recomputes touched keys from the ACCUMULATED log. The equivalence tests
+in seq order over the state its predecessors left, and the rebuild folds
+the ACCUMULATED log. The equivalence tests
 exploit this by splitting one log at random points.
 """
 
@@ -49,7 +50,6 @@ from open_ftth_relational_projector_spark.streaming.incremental import (
     TableDelta,
     affected_ids_from_rows,
     build_edge_context,
-    compute_deltas,
     md5_uuid,
 )
 
@@ -59,16 +59,15 @@ def aux_seed_frames(
 ) -> dict[str, DataFrame]:
     """Aux-table seed frames from an accumulated log: the append-only edge
     sets plus the silver span state and spec registries the driver-side
-    micro-batch replay reads. Used at dehydration and when an overlapping
-    batch takes the distributed fallback (which must leave the aux tables
-    consistent for the next driver-side batch)."""
+    micro-batch replay reads. Part of ``compute_deltas``, so dehydrate and
+    an overlapping batch's rebuild leave the aux tables consistent for the
+    next driver-side batch."""
     from open_ftth_relational_projector_spark.operators.lww import latest_by_key
     from open_ftth_relational_projector_spark.projections.core import (
         _parent_edges,
         _parent_registry_versions,
         _span_state,
     )
-    from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
     from open_ftth_relational_projector_spark.streaming.replay import STATE_COLS
 
     if state is None:
@@ -143,13 +142,15 @@ def aux_seed_frames(
     }
 
 
-def dehydrate(envelopes: DataFrame, sink) -> int:
-    """Full replay → bulk snapshot (T2 phase 1). Returns the watermark seq.
+def compute_deltas(envelopes: DataFrame) -> tuple[dict[str, "pyarrow.Table"], int]:
+    """The Spark fold of an event log: every projection and aux table (the
+    8 projections, the slack-end pre-aggregation and the aux seed tables)
+    as Arrow in sink column order, and the log's max seq (0 if empty). It
+    returns all rows of each table — the delta against an empty sink — so
+    a caller applies it by overwriting.
 
-    The Spark side (projection plans → Arrow) fans out concurrently — the
-    tables are independent jobs over shared cached substreams; only the
-    single-connection DuckDB inserts stay serial. On a cluster the insert
-    step is per-table Spark JDBC writes and the whole loop is concurrent.
+    The projection plans → Arrow step fans out concurrently: the tables are
+    independent jobs over the shared cached log, span state and edge set.
     """
     from open_ftth_relational_projector_spark.projections.core import (
         _has_child_final,
@@ -160,12 +161,11 @@ def dehydrate(envelopes: DataFrame, sink) -> int:
     from open_ftth_relational_projector_spark.sinks.duckdb_sink import _to_arrow
     from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
 
-    sink.ensure_schema()
     log = EventLog.from_envelopes(envelopes).persisted()
     state = _span_state(log).persist()
     state.count()  # prime the shared fold once, before the fan-out
     # one edge fold feeds conduit_slack, the slack-end aux set, AND the aux
-    # seed tables the incremental path maintains from then on
+    # seed tables the driver path maintains from then on
     edges = _parent_edges(log).persist()
     has_child = _has_child_final(log, edges=edges)
     tables = project_all(log, persist=False, state=state, has_child=has_child)
@@ -179,17 +179,41 @@ def dehydrate(envelopes: DataFrame, sink) -> int:
             for name, df in tables.items()
         }
     )
-    for name in tables:
-        sink.overwrite(name, arrow[name])
+    # read while the log is still cached: after the release it would
+    # re-run the caller's source
     row = envelopes.agg(F.max("seq")).collect()[0]
-    watermark = int(row[0]) if row[0] is not None else 0
-    sink.set_meta("watermark", str(watermark))
-    # every consumer of the cached log/state/edges has materialized above
-    # — release the blocks (r13, guide §5: unpersist when done; these
-    # previously lived for the rest of the session)
     state.unpersist(False)
     edges.unpersist(False)
     log.unpersist()
+    return arrow, int(row[0]) if row[0] is not None else 0
+
+
+def _rebuild(envelopes: DataFrame, sink) -> int:
+    """Overwrite every projection and aux table with the fold of
+    ``envelopes``, inside the caller's sink transaction. Returns the log's
+    max seq."""
+    tables, max_seq = compute_deltas(envelopes)
+    for name, table in tables.items():
+        sink.overwrite(name, table)
+    return max_seq
+
+
+def dehydrate(envelopes: DataFrame, sink) -> int:
+    """Full replay → bulk snapshot (T2 phase 1). Returns the watermark seq.
+
+    Every table and the watermark are written in one sink transaction, so
+    a failed dehydrate leaves the sink as it was (JdbcSink's Spark-JDBC
+    overwrites run outside that transaction).
+    """
+    sink.ensure_schema()
+    sink.begin()
+    try:
+        watermark = _rebuild(envelopes, sink)
+        sink.set_meta("watermark", str(watermark))
+        sink.commit()
+    except Exception:
+        sink.rollback()
+        raise
     return watermark
 
 
@@ -312,25 +336,6 @@ def _apply_driver_chunk(parsed: list[tuple[int, str, dict]], sink) -> None:
     _write_deltas(sink, deltas)
 
 
-def _apply_fallback(
-    full_envelopes: DataFrame, ids: dict[str, list[str]], sink
-) -> None:
-    """Distributed recompute for a batch that overlaps the watermark: the
-    touched keys' rows are recomputed from the accumulated log, which is
-    idempotent by construction, and the aux tables are reseeded from it."""
-    full_log = EventLog.from_envelopes(full_envelopes)
-    try:
-        # every per-table recompute and the reseed re-read the log's typed
-        # streams; persisting spares each a re-parse of the envelopes
-        full_log = full_log.persisted()
-        deltas = compute_deltas(full_log, ids)
-        for name, df in aux_seed_frames(full_log).items():
-            sink.overwrite(name, df)
-        _write_deltas(sink, deltas)
-    finally:
-        full_log.unpersist()
-
-
 def apply_batch(
     full_envelopes: DataFrame,
     batch_envelopes: DataFrame,
@@ -348,11 +353,13 @@ def apply_batch(
       probe is the one chunk of a batch that fits; a larger batch streams
       in seq order (``_seq_chunks``). Each chunk is replayed over the
       sink state its predecessors left. ``full_envelopes`` is never read.
-    * overlap (a re-delivered or late batch) — the distributed fallback:
-      the keys every chunk touches are recomputed from the persisted
-      ``full_envelopes`` and the aux tables are reseeded from it.
+    * overlap (a re-delivered or late batch) — a rebuild: as soon as the
+      first chunk shows the overlap, every table is overwritten with
+      ``compute_deltas(full_envelopes)``, dehydrate's Spark fold, and no
+      further chunk is read. The watermark becomes the larger of its old
+      value and the highest seq in ``full_envelopes``.
 
-    All chunks share one sink transaction, so a failed batch leaves the
+    Either path runs in one sink transaction, so a failed batch leaves the
     sink unchanged; ``batch_id`` and the watermark are written at commit.
     ``batch_envelopes`` may hold duplicate ``seq`` rows (a re-read file, a
     re-delivered source batch): the probe keeps the first row per seq, the
@@ -376,23 +383,16 @@ def apply_batch(
         chunks = _seq_chunks(batch_envelopes, cap)
     first = parse_envelope_rows(next(chunks))
     prev_wm = int(sink.get_meta("watermark") or 0)
-    overlap = bool(first) and min(s for s, _, _ in first) <= prev_wm
-    ids: dict[str, set[str]] = {}
     batch_max = None
     sink.begin()
     try:
-        for parsed in chain([first], map(parse_envelope_rows, chunks)):
-            # chunks arrive in seq order: the last one holds the batch max
-            batch_max = max((s for s, _, _ in parsed), default=batch_max)
-            if overlap:
-                for domain, keys in affected_ids_from_rows(parsed).items():
-                    ids.setdefault(domain, set()).update(keys)
-            else:
+        if first and min(s for s, _, _ in first) <= prev_wm:
+            batch_max = _rebuild(full_envelopes, sink)
+        else:
+            for parsed in chain([first], map(parse_envelope_rows, chunks)):
+                # chunks arrive in seq order: the last one holds the batch max
+                batch_max = max((s for s, _, _ in parsed), default=batch_max)
                 _apply_driver_chunk(parsed, sink)
-        if overlap:
-            _apply_fallback(
-                full_envelopes, {d: sorted(k) for d, k in ids.items()}, sink
-            )
         if batch_id is not None:
             sink.set_meta("applied_batch", str(batch_id))
         if batch_max is not None:

@@ -53,7 +53,7 @@ ALLOWLIST: dict[str, str] = {
         "batch files (500 rows at sf0.01) + the drained memory-sink result"
     ),
     "plans/checks.py::wholestage_codegen_spans": "test helper: forces AQE final plan",
-    "streaming/runner.py::dehydrate": "scalar max(seq)",
+    "streaming/runner.py::compute_deltas": "scalar max(seq)",
     "functions/boosting.py::adaboost_fit": (
         "bounded: one value from the checkpointed ONE-ROW stump frame "
         "per boosting round — the named weight-exactness (2^53) guard"
@@ -136,7 +136,6 @@ ALLOWLIST: dict[str, str] = {
         "seq-sorted batch one partition at a time, and the driver holds at "
         "most cap rows of it as the chunk being replayed"
     ),
-    "streaming/incremental.py::_span_state_superset": "parent ids of batch-touched entities (batch-bounded)",
     "streaming/runner.py::write_envelope_batch": "test/demo helper: one micro-batch to a JSON file",
 }
 

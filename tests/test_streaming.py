@@ -116,16 +116,19 @@ def test_batch_id_replay_skipped(spark, envelopes, expected_tables):
     _assert_sink_matches(sink, expected_tables)
 
 
-@pytest.mark.parametrize("cap", [None, 7], ids=["probe", "chunked"])
+@pytest.mark.parametrize(
+    "cap,below", [(None, 0), (7, 0), (None, 3)], ids=["probe", "chunked", "overlap"]
+)
 def test_failed_apply_batch_leaves_sink_unchanged(
-    spark, envelopes, expected_tables, monkeypatch, cap
+    spark, envelopes, expected_tables, monkeypatch, cap, below
 ):
     """T5 atomicity: a sink failure mid-batch rolls the whole micro-batch
     back — tables, aux state, and batch bookkeeping all revert, and the
     same batch then re-applies cleanly. (The reference's per-statement
     autocommit can strand a half-applied batch; PostgresWriter.cs:72-112.)
     With a small cap the batch replays in many chunks, all of which must
-    roll back together."""
+    roll back together; a batch starting ``below`` seqs under the
+    watermark rebuilds every table, and all of them must roll back."""
     import open_ftth_relational_projector_spark.streaming.incremental as I
     from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
 
@@ -136,7 +139,7 @@ def test_failed_apply_batch_leaves_sink_unchanged(
     sink = DuckDBSink()
     dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
     before = {n: sink.read_table(n) for n in TABLE_COLUMNS}
-    batch = envelopes.filter(f"seq > {cut}")
+    batch = envelopes.filter(f"seq > {cut - below}")
 
     orig_set_meta = sink.set_meta
 
@@ -161,7 +164,45 @@ def test_failed_apply_batch_leaves_sink_unchanged(
         )
     # the same batch applies cleanly after the failure
     assert apply_batch(envelopes, batch, sink, batch_id=0) is True
+    assert sink.get_meta("watermark") == str(max_seq)
     _assert_sink_matches(sink, expected_tables)
+
+
+def test_failed_dehydrate_leaves_sink_unchanged(spark, envelopes):
+    """A sink failure partway through dehydrate rolls every overwrite
+    back: re-dehydrating from a different log with the 5th table's write
+    failing leaves all tables, aux included, and the watermark as the
+    first dehydrate left them."""
+    from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
+
+    max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
+    cut = max_seq // 2
+    sink = DuckDBSink()
+    dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
+    before = {n: sink.read_table(n) for n in TABLE_COLUMNS}
+
+    orig_overwrite = sink.overwrite
+    written = []
+
+    def failing_overwrite(table, df):
+        written.append(table)
+        if len(written) == 5:
+            raise RuntimeError("sink failure mid-dehydrate")
+        return orig_overwrite(table, df)
+
+    sink.overwrite = failing_overwrite
+    with pytest.raises(RuntimeError, match="sink failure mid-dehydrate"):
+        dehydrate(envelopes, sink)
+    sink.overwrite = orig_overwrite
+
+    assert len(written) == 5
+    assert sink.get_meta("watermark") == str(cut)
+    for name, exp in before.items():
+        got = sink.read_table(name)
+        cols = list(exp.columns)
+        assert _canon(exp, cols).equals(_canon(got, cols)), (
+            f"{name} changed by a failed dehydrate"
+        )
 
 
 def test_driver_path_never_reads_accumulated_log(
@@ -170,8 +211,7 @@ def test_driver_path_never_reads_accumulated_log(
     """A non-overlapping batch runs Spark jobs on the batch only: handed an
     accumulated log whose execution raises, it still applies and matches
     the batch fold — driver-sized, and oversized (replayed in chunks). An
-    overlapping batch takes the distributed fallback, which must read that
-    log — and so raises."""
+    overlapping batch rebuilds from that log — and so raises."""
     from pyspark.sql import functions as F
 
     import open_ftth_relational_projector_spark.streaming.incremental as I
@@ -402,8 +442,8 @@ def test_fold_has_child_matches_spark_fold(spark):
 def test_apply_batch_oversized_batch_replays_in_chunks(spark, monkeypatch):
     """A batch above MAX_DRIVER_BATCH_ROWS stays on the driver path: after
     the bounded probe (cap + 1 rows) it streams in seq order, at most cap
-    rows per chunk, every row exactly once; the distributed recompute never
-    runs; and the tables match the batch fold — the bounded-catch-up
+    rows per chunk, every row exactly once; the Spark fold never runs; and
+    the tables match the batch fold — the bounded-catch-up
     guarantee for a post-downtime backlog batch."""
     import open_ftth_relational_projector_spark.streaming.incremental as I
     import open_ftth_relational_projector_spark.streaming.runner as R
@@ -438,9 +478,9 @@ def test_apply_batch_oversized_batch_replays_in_chunks(spark, monkeypatch):
 
     monkeypatch.setattr(R, "_probe_collect", bounded_probe)
     monkeypatch.setattr(R, "_seq_chunks", bounded_chunks)
-    monkeypatch.setattr(R, "compute_deltas", no_recompute)
     sink = DuckDBSink()
     dehydrate(env.filter(f"seq <= {cut}"), sink)
+    monkeypatch.setattr(R, "compute_deltas", no_recompute)
     batch = env.filter(f"seq > {cut}")
     # uncoalesced, the deduped batch spans several shuffle partitions, so
     # seq order across chunks must come from the chunk source's sort
@@ -458,38 +498,64 @@ def test_apply_batch_oversized_batch_replays_in_chunks(spark, monkeypatch):
     _assert_sink_matches(sink, expected)
 
 
-def test_oversized_batch_straddling_watermark_takes_fallback(
+def test_overlapping_batch_rebuilds_from_accumulated_log(
     spark, envelopes, expected_tables, monkeypatch
 ):
-    """An oversized batch whose smallest seq is at or below the watermark
-    (a late or partly re-delivered backlog) takes the distributed
-    fallback, once, with the keys every chunk touches — not only the
-    first chunk's — and the tables match the batch fold."""
+    """A batch whose smallest seq is at or below the watermark rebuilds
+    every table from the accumulated log through the Spark fold.
+
+    * An oversized one (partly re-delivered backlog) runs the fold once,
+      pulls no chunk past the first, and ends at the log's max seq.
+    * A late event (an unapplied seq under the watermark) lands: the sink
+      then equals the fold of the log it arrived into."""
+    from pyspark.sql import functions as F
+
     import open_ftth_relational_projector_spark.streaming.incremental as I
     import open_ftth_relational_projector_spark.streaming.runner as R
 
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     cut = max_seq // 2
-    batch = envelopes.filter(f"seq > {cut - 3}")
-    expected_ids = I.affected_ids_from_rows(
-        I.parse_envelope_rows(batch.select("seq", "event_type", "payload").collect())
-    )
     monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 7)
-    real = R.compute_deltas
-    recomputed = []
+    real_chunks, real_fold = R._seq_chunks, R.compute_deltas
+    pulls, folds = [], []
 
-    def spy(full, ids):
-        recomputed.append(ids)
-        return real(full, ids)
+    def counted_chunks(batch_envelopes, c):
+        for chunk in real_chunks(batch_envelopes, c):
+            pulls.append(len(chunk))
+            yield chunk
 
-    monkeypatch.setattr(R, "compute_deltas", spy)
+    def counted_fold(full):
+        folds.append(full)
+        return real_fold(full)
+
     sink = DuckDBSink()
     dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
-    assert apply_batch(envelopes, batch, sink, batch_id=0) is True
-
-    assert recomputed == [expected_ids]
+    monkeypatch.setattr(R, "_seq_chunks", counted_chunks)
+    monkeypatch.setattr(R, "compute_deltas", counted_fold)
+    assert apply_batch(
+        envelopes, envelopes.filter(f"seq > {cut - 3}"), sink, batch_id=0
+    ) is True
+    assert pulls == [7]
+    assert len(folds) == 1
     assert sink.get_meta("watermark") == str(max_seq)
     _assert_sink_matches(sink, expected_tables)
+
+    # late arrival: seq k was missing when the prefix was dehydrated
+    prefix = envelopes.filter(f"seq <= {cut}")
+    k = prefix.filter(
+        F.col("event_type").isin(list(I.AFFECTED)) & (F.col("seq") < cut)
+    ).agg(F.max("seq")).collect()[0][0]
+    tables = project_all(EventLog.from_envelopes(prefix))
+    expected = {n: tables[n].toPandas() for n in PROJECTION_TABLES}
+    sink = DuckDBSink()
+    dehydrate(prefix.filter(f"seq != {k}"), sink)
+    with pytest.raises(AssertionError):
+        _assert_sink_matches(sink, expected)
+    assert apply_batch(
+        prefix, envelopes.filter(f"seq = {k}"), sink, batch_id=0
+    ) is True
+    assert sink.get_meta("watermark") == str(cut)
+    _assert_sink_matches(sink, expected)
 
 
 def test_backlog_replay_bounded_batches(spark, envelopes, expected_tables):
