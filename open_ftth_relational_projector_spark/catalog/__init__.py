@@ -40,42 +40,19 @@ from . import streaming_sims  # noqa: E402,F401
 # ===========================================================================
 # Registration order for the driver window
 # ===========================================================================
-# ROUND-11 WINDOW (this session): CORRECTNESS_r10 landed 50/50 — no fixes
-# to front-load. Executed exactly per the r10 pinned plan with the
-# latest-green ranking (rank every query by its most recent green
-# CORRECTNESS round, oldest first, registration order as tiebreak): q1
-# first, then the TWO never-driver-checked r10 additions
-# (naive_bayes_quality, naive_bayes_bucket_likelihoods — the bucketed
-# Naive Bayes counting classifier, certified bit-level in r10 at
-# sf0.001/0.01/0.1 and under local[5], and re-certified this session
-# after the shared rows-CTE hoist), then the 47 r6-green rows
-# (registration order), which fill the 50 exactly. A green round makes
-# cumulative driver certification 247/247 (242 direct + the 5 ANN
-# production paths certified via their driver-green twin_agreement
-# entries) and keeps every catalog query's latest green row <= 5 rounds
-# old (the refresh invariant at the 247/50 capacity ceiling).
+# The CORRECTNESS gate over __spark_entry__.queries() records only the
+# FIRST 50 entries per round, so _DRIVER_WINDOW_FRONT rotates: q1 first,
+# then any never-green addition, then the rows whose most recent green
+# round is oldest (registration order breaks ties). That keeps every
+# query's latest green row recent; a query that FAILs goes to the front
+# once fixed. The production ANN rows-only entries (minhash_near_dups,
+# simhash_fingerprints, embedding_near_dups_lsh, knn_lsh, knn_ivf) stay
+# out of the window: they would record rows-only, and their guarantees
+# are exactly what the *_twin_agreement entries hash-check.
 #
-# ROUND-12 PLAN (for the next session): assuming CORRECTNESS_r11 lands
-# green, recompute with the same latest-green ranking: q1 first, then
-# any never-green additions, then the oldest remaining rows — the 45
-# r7-green rows (registration order) plus the first 4 r8-green rows
-# fill the 50. Any r11 FAIL goes to the front after its fix. Capacity
-# note: the rotation cycle is 247/50 ≈ 5 rounds, so at most ~2
-# brand-new catalog queries per round keep the refresh invariant
-# satisfiable; after this round every row is ≤5 rounds old, so r12 has
-# budget for up to ~4 new entries (45 r7 + 4 r8 + q1 = 50 leaves the
-# remaining 45 r8-greens due r13).
 # Keep every name in _DRIVER_WINDOW_FRONT registered (the assert below
 # enforces it) and re-pin tests/data/catalog_order.txt + CATALOG.md
-# (scripts/gen_catalog_index.py) after any reorder. The production ANN
-# rows-only entries (minhash_near_dups, simhash_fingerprints,
-# embedding_near_dups_lsh, knn_lsh, knn_ivf) stay OUT of window slots:
-# they would record rows-only again, and their guarantees are exactly
-# what the *_twin_agreement entries hash-check.
-#
-# The driver's CORRECTNESS gate records only the FIRST 50 queries()
-# entries per round; windows rotate so every query eventually holds a
-# recent green row.
+# (scripts/gen_catalog_index.py) after any reorder.
 _DRIVER_WINDOW_FRONT = [
     "q1_pricing_summary",
     # -- never driver-checked (r10 bucketed Naive Bayes family) --

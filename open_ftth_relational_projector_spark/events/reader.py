@@ -67,7 +67,7 @@ class EventLog:
         # absent type → empty DataFrame with the right flattened schema
         return self._spark.createDataFrame([], _flat_schema(event_type))
 
-    def persisted(self, level: str = "MEMORY_AND_DISK", eager: bool = True) -> "EventLog":
+    def persisted(self, eager: bool = True) -> "EventLog":
         """Stop consumers re-reading the envelope source.
 
         When the log came from envelopes, persist the RAW envelope frame and
@@ -76,9 +76,7 @@ class EventLog:
         microseconds — materializing 27 separate caches costs far more in
         stage scheduling than the parse it saves (measured 2× on the full
         8-table fold). For a typed-injection log there is no raw frame, so
-        each typed stream persists lazily instead. At 100 TB the same role
-        is played by a durable typed-bronze layer (sources/bronze.py): one
-        parse, N pruned columnar scans.
+        each typed stream persists lazily instead.
 
         ``eager=False`` skips the priming count: a caller that immediately
         primes a DERIVED frame in the background (project_all's span-state
@@ -94,6 +92,7 @@ class EventLog:
         # tracked (r13): callers that loop over many logs/queries (bench,
         # oracle sweeps) release these session-wide between queries;
         # single-log consumers (dehydrate) still unpersist explicitly.
+        level = "MEMORY_AND_DISK"
         if self._raw is not None:
             raw = tracked_persist(self._raw, level)
             if eager:

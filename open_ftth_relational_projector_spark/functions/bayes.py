@@ -38,8 +38,6 @@ from open_ftth_relational_projector_spark.functions.tree import (
     stump_width_sql,
 )
 
-NB_LS = 10**6  # log-likelihood / log-prior pin scale
-
 
 def nb_loglik_sql(cnt: str, tot: str, cells: int) -> str:
     """Shared-text pinned Laplace log-likelihood:

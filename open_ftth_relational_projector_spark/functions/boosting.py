@@ -118,8 +118,6 @@ def ada_next_w_sql(w: str, pred: str, fc: str, fw: str) -> str:
     )
 
 
-_STUMP_COLS = ("rf", "rb", "ll", "rl", "ab", "fc", "fw")
-
 # Exactness bound for the nested weight expression: every product
 # w̃·f̃ formed inside ada_next_w_sql must stay below 2⁵³ so the one
 # double division ROUND(w·f/1e6) is correctly rounded from an exactly-

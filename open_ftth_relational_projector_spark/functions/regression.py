@@ -281,10 +281,9 @@ def ols2_kfold(
 # 2.5·10^13 < 10^19, X̃j·X̃k ≤ 10^10 (BIGINT-exact), per-row Hessian term
 # ≤ 2.5·10^23 (DECIMAL(38,0)-exact), Hessian sum < 10^38 up to ~10^14
 # rows. z = zi/10^12 saturates EXP cleanly (p hits exactly 0 or 10^7).
+# Pin scales, literal in the SQL below: features 10^4, beta state 10^12
+# (scaled-feature basis), probabilities 10^7.
 
-LOGREG_FX = 10**4  # feature pin scale
-LOGREG_FB = 10**12  # beta state scale (scaled-feature basis)
-LOGREG_PS = 10**7  # probability pin scale
 LOGREG_MOMENTS = ["n", "s1", "s2", "s11", "s12", "s22", "sy", "s1y", "s2y"]
 
 # Shared-text structural non-null contract for the pinned design (x1, x2):

@@ -52,19 +52,6 @@ def hash_split(
     return df.withColumn(out, expr)
 
 
-def split_thresholds(fractions: dict[str, float]) -> dict[str, tuple[str, str]]:
-    """(lo, hi) hex-threshold strings per split — for writing the same
-    split in SQL (oracles, other engines)."""
-    out: dict[str, tuple[str, str]] = {}
-    cum = 0.0
-    for name, frac in fractions.items():
-        lo = format(int(cum * _HEX_SPAN), "08x")
-        cum += frac
-        hi = format(min(int(cum * _HEX_SPAN), _HEX_SPAN - 1), "08x")
-        out[name] = (lo, hi)
-    return out
-
-
 def stratified_sample(
     df: DataFrame,
     group_col: str,

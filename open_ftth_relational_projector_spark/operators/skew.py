@@ -60,27 +60,3 @@ def salted_aggregate(
     return staged.groupBy(*keys).agg(
         *[expr.alias(name) for name, expr in merge.items()]
     )
-
-
-def salted_count(df: DataFrame, keys: Sequence[str], n_salts: int = 32) -> DataFrame:
-    """count(*) per key, skew-safe."""
-    return salted_aggregate(
-        df,
-        keys,
-        partial={"_c": F.count(F.lit(1))},
-        merge={"cnt": F.sum("_c")},
-        n_salts=n_salts,
-    )
-
-
-def salted_sum(
-    df: DataFrame, keys: Sequence[str], value_col: str, n_salts: int = 32
-) -> DataFrame:
-    """sum(value) per key, skew-safe."""
-    return salted_aggregate(
-        df,
-        keys,
-        partial={"_s": F.sum(value_col)},
-        merge={f"sum_{value_col}": F.sum("_s")},
-        n_salts=n_salts,
-    )

@@ -77,15 +77,3 @@ def assert_no_cartesian(df: DataFrame) -> None:
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, (
         "plan contains a cartesian/nested-loop join:\n" + plan
     )
-
-
-def partition_filters(df: DataFrame) -> list[str]:
-    """PartitionFilters entries of every file scan (partition-pruning
-    proof: the predicate eliminates whole directories before any IO)."""
-    return [
-        m.group(1)
-        for m in re.finditer(
-            r"PartitionFilters: \[([^\]]*)\]", formatted_plan(df)
-        )
-        if m.group(1).strip()
-    ]

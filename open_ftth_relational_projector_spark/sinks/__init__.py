@@ -1,14 +1,11 @@
-"""Relational sinks (SURVEY §2.1 S5-S8).
+"""Relational sink (SURVEY §2.1 S5-S8).
 
 The reference writes its 8 projection tables to PostgreSQL two ways:
 truncate + binary COPY during dehydration (Database/PostgresWriter.cs:42-70
 et al.) and per-row keyed DML during catch-up (:72-112 et al.). Here the
-same contract is a small sink interface with two backends:
-
-* ``DuckDBSink`` — local stand-in with real SQL semantics (DDL, upsert,
-  delete, group-replace); used by tests and the streaming-equivalence gate.
-* ``JdbcSink`` — the cluster path: Spark JDBC bulk overwrite plus
-  stage-and-merge incremental writes for PostgreSQL.
+same contract is one sink, ``DuckDBSink``: real SQL semantics (DDL,
+upsert, delete, group-replace, transactions) over a DuckDB database. It is
+the projector's only sink.
 """
 
 from open_ftth_relational_projector_spark.sinks.ddl import (
@@ -18,7 +15,6 @@ from open_ftth_relational_projector_spark.sinks.ddl import (
     TABLE_PRIMARY_KEYS,
 )
 from open_ftth_relational_projector_spark.sinks.duckdb_sink import DuckDBSink
-from open_ftth_relational_projector_spark.sinks.jdbc_sink import JdbcSink
 
 __all__ = [
     "TABLE_COLUMNS",
@@ -26,5 +22,4 @@ __all__ = [
     "TABLE_GROUP_KEYS",
     "TABLE_PRIMARY_KEYS",
     "DuckDBSink",
-    "JdbcSink",
 ]

@@ -1,15 +1,14 @@
-"""DuckDB-backed relational sink — the local stand-in for PostgreSQL.
+"""DuckDB-backed relational sink — the projector's only sink.
 
 Implements the reference's write contract with real SQL (DDL bootstrap S5,
 truncate+bulk-load S6, keyed upsert/delete S7, delete-group-then-reinsert S8
-— Database/PostgresWriter.cs:27-808) so the streaming-equivalence tests
-exercise genuine relational-sink semantics without a Postgres server. On a
-cluster the same interface is served by ``JdbcSink``.
+— Database/PostgresWriter.cs:27-808) and real transactions, so the
+streaming-equivalence tests exercise genuine relational-sink semantics
+without a Postgres server.
 
-Micro-batch deltas arrive as Spark DataFrames and are moved via Arrow
-(``toArrow``) — deltas are small by construction (∝ touched keys), so the
-driver-side hop is not the scale bottleneck; the bulk path at scale goes
-through Spark JDBC instead.
+Rows arrive as ``pyarrow.Table``s: ``compute_deltas`` fans its Spark fold
+out to Arrow, and the driver replay builds Arrow directly. A pandas frame
+or a Spark DataFrame (moved with ``toArrow``) is converted at the boundary.
 """
 
 from __future__ import annotations
@@ -38,10 +37,7 @@ def _to_arrow(data, cols: list[str]):
         return data.select(cols)
     if isinstance(data, pd.DataFrame):
         return pa.Table.from_pandas(data[cols], preserve_index=False)
-    try:
-        return data.select(*cols).toArrow()
-    except Exception:  # pragma: no cover - older pyspark fallback
-        return pa.Table.from_pandas(data.select(*cols).toPandas())
+    return data.select(*cols).toArrow()
 
 
 class DuckDBSink:

@@ -202,8 +202,7 @@ def dehydrate(envelopes: DataFrame, sink) -> int:
     """Full replay → bulk snapshot (T2 phase 1). Returns the watermark seq.
 
     Every table and the watermark are written in one sink transaction, so
-    a failed dehydrate leaves the sink as it was (JdbcSink's Spark-JDBC
-    overwrites run outside that transaction).
+    a failed dehydrate leaves the sink as it was.
     """
     sink.ensure_schema()
     sink.begin()
@@ -414,7 +413,6 @@ class ProjectionStream:
         sink,
         bronze_dir: str,
         checkpoint_dir: str,
-        fmt: str = "json",
         max_files_per_trigger: int | None = 64,
     ):
         self.spark = spark
@@ -422,7 +420,6 @@ class ProjectionStream:
         self.sink = sink
         self.bronze_dir = bronze_dir
         self.checkpoint_dir = checkpoint_dir
-        self.fmt = fmt
         # Bounds the catch-up batch after downtime: the file source emits at
         # most this many landed batch-files per micro-batch (each file is
         # one poll interval of events), so the first post-restart batch is
@@ -455,12 +452,11 @@ class ProjectionStream:
             reader = reader.option(
                 "maxFilesPerTrigger", str(self.max_files_per_trigger)
             )
-        if self.fmt == "json":
-            stream = reader.json(self.events_dir)
-        else:
-            stream = reader.parquet(self.events_dir)
-        writer = stream.writeStream.foreachBatch(self._process).option(
-            "checkpointLocation", self.checkpoint_dir
+        # landed files are JSON lines (write_envelope_batch)
+        writer = (
+            reader.json(self.events_dir)
+            .writeStream.foreachBatch(self._process)
+            .option("checkpointLocation", self.checkpoint_dir)
         )
         if available_now:
             writer = writer.trigger(availableNow=True)

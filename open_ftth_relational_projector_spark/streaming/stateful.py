@@ -1,179 +1,25 @@
-"""State-in-Spark streaming fold via applyInPandasWithState (SURVEY §2.7 T4).
+"""Keyed-state streaming folds via applyInPandasWithState (SURVEY §2.7 T4).
 
-The production path keeps state in the relational sink (foreachBatch IVM,
-streaming/runner.py) because the sink IS the product. This module is the
-other architecture the reference's fold maps to — keyed state inside
-Spark's state store — demonstrated on the work_task projection
-(ProjektorState.cs:588-613): per-key GroupState holds (number, status,
-alive), events fold in seq order, update-mode output emits the changed row
-per key per micro-batch.
+The projector keeps its state in the relational sink (foreachBatch IVM,
+streaming/runner.py), because the sink IS the product. The folds here keep
+keyed state in Spark's state store instead, for the catalog's ``stream_*``
+simulations (catalog/streaming_sims.py): incremental dedup, LSH candidate
+buckets, HLL and HDR sketches, space-saving top-k, sessions, OLS moments
+and snapshot status. Each fold's drained output is tested against a batch
+or sequential reference (tests/test_stateful.py).
 
-Scale: state is partitioned by entity key across executors (RocksDB-backed
-on a cluster), arbitrary key cardinality, no driver state — exactly the
-partitioning the reference's single dictionary could not do.
+Scale: state is partitioned by key across executors (RocksDB-backed on a
+cluster), arbitrary key cardinality, no driver state.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "id string, number string, status string, seq long"
-STATE_SCHEMA = "number string, status string, seq long, alive boolean"
-
-
-def _fold_work_task(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    number, status, last_seq, alive = (
-        state.get if state.exists else (None, None, 0, False)
-    )
-    rows = pd.concat(list(pdfs)).sort_values("seq")
-    for r in rows.itertuples():
-        if r.event_type == "WorkTaskCreated":
-            # null/empty status ⇒ creation skipped (ProjektorState.cs:593)
-            if r.status is not None and r.status != "":
-                number, status, alive = r.number, r.status, True
-        elif r.event_type == "WorkTaskStatusChanged" and alive:
-            status = r.status
-        last_seq = max(last_seq, r.seq)
-    state.update((number, status, int(last_seq), alive))
-    if alive:
-        yield pd.DataFrame(
-            {
-                "id": [key[0]],
-                "number": [number],
-                "status": [status],
-                "seq": [int(last_seq)],
-            }
-        )
-
-
-def stateful_work_task(envelopes: DataFrame) -> DataFrame:
-    """Streaming work_task fold with Spark-managed keyed state.
-
-    Input: the envelope stream (seq, event_type, payload JSON). Output
-    (update mode): one row per touched work task per micro-batch carrying
-    its folded state.
-    """
-    ev = _typed_work_task_events(envelopes)
-    return ev.groupBy("id").applyInPandasWithState(
-        _fold_work_task,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _typed_work_task_events(envelopes: DataFrame) -> DataFrame:
-    return envelopes.filter(
-        F.col("event_type").isin("WorkTaskCreated", "WorkTaskStatusChanged")
-    ).select(
-        "seq",
-        "event_type",
-        F.get_json_object("payload", "$.workTaskId").alias("id"),
-        F.get_json_object("payload", "$.workTask.number").alias("number"),
-        F.coalesce(
-            F.get_json_object("payload", "$.workTask.status"),
-            F.get_json_object("payload", "$.status"),
-        ).alias("status"),
-    )
-
-
-def stateful_work_task_tws(envelopes: DataFrame) -> DataFrame:
-    """The same fold on transformWithStateInPandas — Spark 4's
-    typed-state successor to applyInPandasWithState (per-key ValueState in
-    the state store, RocksDB-backed on a cluster). Kept alongside the
-    GroupState form so both stateful-processing generations are covered.
-
-    NOTE: this container's tWS Python driver worker crashes on even the
-    canonical minimal example (STREAM_FAILED "driver worker exited
-    unexpectedly"), so the paired test skips when it hits that
-    environment-level failure; the code path is the documented API usage
-    and runs wherever tWS itself runs.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class _WorkTaskProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("wt", STATE_SCHEMA)
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timer_values: Any
-        ) -> Iterator[pd.DataFrame]:
-            if self._state.exists():
-                number, status, last_seq, alive = self._state.get()
-            else:
-                number, status, last_seq, alive = None, None, 0, False
-            pdf = pd.concat(list(rows)).sort_values("seq")
-            for r in pdf.itertuples():
-                if r.event_type == "WorkTaskCreated":
-                    if r.status is not None and r.status != "":
-                        number, status, alive = r.number, r.status, True
-                elif r.event_type == "WorkTaskStatusChanged" and alive:
-                    status = r.status
-                last_seq = max(last_seq, r.seq)
-            self._state.update((number, status, int(last_seq), alive))
-            if alive:
-                yield pd.DataFrame(
-                    {
-                        "id": [key[0]],
-                        "number": [number],
-                        "status": [status],
-                        "seq": [int(last_seq)],
-                    }
-                )
-
-        def close(self) -> None:  # pragma: no cover - nothing to release
-            return None
-
-    return _typed_work_task_events(envelopes).groupBy("id").transformWithStateInPandas(
-        statefulProcessor=_WorkTaskProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def stateful_running_totals(
-    events: DataFrame,
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Generic keyed running aggregate with Spark-managed state
-    (applyInPandasWithState): per key, the total and count of every value
-    ever seen — carried in the state store across micro-batches AND across
-    query restarts (state rehydrates from the checkpoint; pinned in
-    tests/test_stateful.py). The minimal template for custom stateful
-    operators beyond what windowed aggregations express."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fold(key, pdfs, state):
-        total, n = state.get if state.exists else (0.0, 0)
-        for pdf in pdfs:
-            total += float(pdf[value_col].sum())
-            n += int(len(pdf))
-        state.update((total, n))
-        yield pd.DataFrame(
-            {key_col: [key[0]], "total": [total], "n": [n]}
-        )
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        fold,
-        f"{key_col} long, total double, n long",
-        "total double, n long",
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
 
 DEDUP_OUTPUT_SCHEMA = "text_hash string, doc_id long, first_seen_seq long"
 DEDUP_STATE_SCHEMA = "first_doc long, first_seq long"

@@ -16,7 +16,7 @@ execution modes, exactly the engine's bulk-vs-catch-up duality.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def _watermarked(events: DataFrame, time_col: str, delay: str) -> DataFrame:
@@ -116,26 +116,3 @@ def session_windows(
             "sum_value",
         )
     )
-
-
-def dedup_within_watermark(
-    events: DataFrame,
-    id_cols: list[str] | None = None,
-    time_col: str = "ts",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exactly-once-style dedup of an at-least-once source.
-
-    Keeps the first arrival of each key and drops re-deliveries that arrive
-    within the watermark horizon; state per key is evicted once the
-    watermark passes its event time + delay, so memory is bounded by the
-    re-delivery window, not the stream length. A re-delivery AFTER eviction
-    passes through — the documented at-least-once tradeoff; size ``delay``
-    to the source's maximum re-delivery lag. In batch mode this degrades to
-    a plain dropDuplicates (global exact dedup).
-    """
-    ids = id_cols or ["event_id"]
-    if not events.isStreaming:
-        return events.dropDuplicates(ids)
-    src = _watermarked(events, time_col, delay)
-    return src.dropDuplicatesWithinWatermark(ids)

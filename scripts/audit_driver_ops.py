@@ -128,8 +128,6 @@ ALLOWLIST: dict[str, str] = {
     "functions/graph.py::checksum": "scalar edge checksum per round",
     "functions/graph.py::_sig": "scalar (count,sum) fixpoint signature",
     "functions/similarity.py::knn_ivf": "k x dim coarse-quantizer centroids",
-    "sinks/jdbc_sink.py::get_meta": "single meta-key row",
-    "sources/bucketing.py::bucket_spec": "DESCRIBE TABLE catalog rows",
     "streaming/runner.py::_probe_collect": "size-gate probe bounded at cap+1 raw rows by the limit() in the same expression; payloads parse only after the batch proves driver-sized",
     "streaming/runner.py::_seq_chunks": (
         "oversized-batch chunk source: toLocalIterator() streams the "
@@ -140,9 +138,7 @@ ALLOWLIST: dict[str, str] = {
 }
 
 # file::function -> why toPandas is acceptable there
-TOPANDAS_ALLOWLIST: dict[str, str] = {
-    "sinks/duckdb_sink.py::_to_arrow": "pragma-guarded fallback for pyspark without toArrow(); primary path is Arrow-native",
-}
+TOPANDAS_ALLOWLIST: dict[str, str] = {}
 
 
 def main() -> None:

@@ -1,38 +1,6 @@
-"""Typed bronze round-trip: envelopes → per-type parquet → same projections."""
+"""CSV source round-trip: explicit schema, quoting, nulls, timestamps."""
 
 from __future__ import annotations
-
-import shutil
-import tempfile
-
-from open_ftth_relational_projector_spark.events.generator import (
-    generate,
-    to_envelope_rows,
-)
-from open_ftth_relational_projector_spark.events.reader import EventLog
-from open_ftth_relational_projector_spark.events.schemas import ENVELOPE_SCHEMA
-from open_ftth_relational_projector_spark.projections import project_all
-from open_ftth_relational_projector_spark.sources.bronze import (
-    read_typed_bronze,
-    write_typed_bronze,
-)
-
-from conftest import rows_set
-
-
-def test_bronze_roundtrip_preserves_projections(spark):
-    env = spark.createDataFrame(
-        to_envelope_rows(generate(seed=5, scale=2)), ENVELOPE_SCHEMA
-    )
-    tmp = tempfile.mkdtemp(prefix="ofrp_bronze_")
-    try:
-        write_typed_bronze(env, tmp, repartition_by_entity=4)
-        direct = project_all(EventLog.from_envelopes(env), persist=False)
-        via_bronze = project_all(read_typed_bronze(spark, tmp), persist=False)
-        for name in direct:
-            assert rows_set(direct[name]) == rows_set(via_bronze[name]), name
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_csv_source_roundtrip_with_edges(spark, tmp_path):

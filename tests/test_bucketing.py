@@ -1,146 +1,12 @@
-"""Bucketed layout tests: the write-once-shuffle-never property, pinned.
+"""Storage-layout and execution properties the engine's writes rely on.
 
-A co-located join is THE scale lever for this engine's fact⋈fact joins —
-these tests prove (via the physical plan) that joins and aggregations on
-the bucket key run with zero Exchange operators, and that results equal
-the unbucketed plans'.
+Pinned on plain Spark: AQE coalesces post-shuffle partitions, dynamic
+partition overwrite rewrites only the touched partition, a range-partitioned
+export is globally sorted, additive schema evolution reads back merged,
+and rollups re-aggregate exactly from stored partials.
 """
 
 from __future__ import annotations
-
-import pytest
-
-from pyspark.sql import functions as F
-
-from open_ftth_relational_projector_spark.plans import checks as C
-from open_ftth_relational_projector_spark.sources.bucketing import (
-    bucket_spec,
-    write_bucketed,
-)
-from open_ftth_relational_projector_spark.sources.tables import load_table
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def bucketed(spark):
-    db = "bucket_test"
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    write_bucketed(
-        load_table(spark, SF, "lineitem"), f"{db}.lineitem_b", "l_orderkey", 8
-    )
-    write_bucketed(
-        load_table(spark, SF, "orders"), f"{db}.orders_b", "o_orderkey", 8
-    )
-    yield db
-    spark.sql(f"DROP DATABASE {db} CASCADE")
-
-
-def test_bucket_spec_readback(spark, bucketed):
-    assert bucket_spec(spark, f"{bucketed}.lineitem_b") == (["l_orderkey"], 8)
-    assert bucket_spec(spark, f"{bucketed}.orders_b") == (["o_orderkey"], 8)
-
-
-@pytest.fixture()
-def no_autobroadcast(spark):
-    """At test SF everything fits a broadcast, which would mask the bucket
-    property under test; at real scale the fact⋈fact sides don't broadcast,
-    so plan them the way the cluster would."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_bucketed_join_has_no_exchange(spark, bucketed, no_autobroadcast):
-    li = spark.table(f"{bucketed}.lineitem_b")
-    o = spark.table(f"{bucketed}.orders_b")
-    joined = li.join(o, li.l_orderkey == o.o_orderkey).groupBy("o_orderpriority").agg(
-        F.sum("l_quantity").alias("qty")
-    )
-    # join on the bucket key rides the bucket partitioning with NO Exchange
-    # on either side; only the tiny 5-row priority agg shuffles
-    assert C.shuffle_count(joined) <= 1, C.formatted_plan(joined)
-    assert C.sortmerge_join_count(joined) == 1
-
-    plain_li = load_table(spark, SF, "lineitem")
-    plain_o = load_table(spark, SF, "orders")
-    plain = (
-        plain_li.join(plain_o, plain_li.l_orderkey == plain_o.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(F.sum("l_quantity").alias("qty"))
-    )
-    assert C.shuffle_count(plain) >= 3, "unbucketed baseline should shuffle both sides"
-    assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_bucketed_groupby_has_no_exchange(spark, bucketed):
-    li = spark.table(f"{bucketed}.lineitem_b")
-    agg = li.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("qty"))
-    assert C.shuffle_count(agg) == 0, C.formatted_plan(agg)
-    plain = (
-        load_table(spark, SF, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-    )
-    assert agg.count() == plain.count()
-
-
-def test_partitioned_layout_prunes_directories(spark, tmp_path):
-    from open_ftth_relational_projector_spark.plans import checks as C
-    from open_ftth_relational_projector_spark.sources.bucketing import (
-        write_partitioned,
-    )
-    from open_ftth_relational_projector_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    path = str(tmp_path / "docs_by_lang")
-    write_partitioned(docs, path, "lang")
-
-    back = spark.read.parquet(path)
-    en = back.filter("lang = 'en'")
-    # the lang predicate must prune at the directory listing, not the reader
-    pf = " ".join(C.partition_filters(en))
-    assert "lang" in pf and "en" in pf, pf
-    assert not any("lang" in f for f in C.pushed_filters(en)), (
-        "partition predicate must not degrade to a row-level pushed filter"
-    )
-    # values survive the layout round-trip
-    expected = docs.filter("lang = 'en'").count()
-    assert en.count() == expected
-    # non-partition predicates still push down to the reader as usual
-    long_en = en.filter("n_chars > 200")
-    assert any("n_chars" in f for f in C.pushed_filters(long_en))
-
-
-def test_manifest_sink_atomic_publish_and_vacuum(spark, tmp_path):
-    """The lakehouse commit protocol in miniature: readers see only
-    manifest-committed versions; a crashed writer's landed-but-uncommitted
-    files are invisible and vacuumable; the next successful commit swaps
-    the whole visible file set atomically."""
-    from open_ftth_relational_projector_spark.sinks import manifest_sink as M
-
-    path = str(tmp_path / "tbl")
-    v1 = spark.range(0, 100).withColumnRenamed("id", "k")
-    M.write_versioned(v1, path, version=1)
-    assert M.read_committed(spark, path).count() == 100
-    assert M.committed_version(path) == 1
-
-    # writer crash: v2 files land, manifest never swaps
-    v2 = spark.range(0, 250).withColumnRenamed("id", "k")
-    orphaned = M.land_uncommitted(v2, path, version=2)
-    assert orphaned  # files exist on disk...
-    assert M.read_committed(spark, path).count() == 100  # ...readers blind
-    assert M.committed_version(path) == 1
-
-    removed = M.vacuum_orphans(path)
-    assert set(removed) >= set(orphaned)
-    assert M.read_committed(spark, path).count() == 100
-
-    # retry succeeds: one rename flips readers to v2
-    M.write_versioned(v2, path, version=2)
-    assert M.read_committed(spark, path).count() == 250
-    assert M.committed_version(path) == 2
 
 
 def test_aqe_coalesces_post_shuffle_partitions(spark):
@@ -197,27 +63,6 @@ def test_dynamic_partition_overwrite_backfills_one_day(spark, tmp_path):
     assert files_of("2024-01-03") == before_d3
 
 
-def test_manifest_compaction_preserves_data_atomically(spark, tmp_path):
-    from open_ftth_relational_projector_spark.sinks import manifest_sink as M
-
-    path = str(tmp_path / "tbl")
-    # a fragmented commit: 16 small files
-    df = spark.range(0, 1000).repartition(16).withColumnRenamed("id", "k")
-    M.write_versioned(df, path, version=1)
-    assert M.read_committed(spark, path).count() == 1000
-
-    before, after = M.compact(spark, path, target_files=2)
-    assert before == 16 and after == 2
-    assert M.committed_version(path) == 2
-    back = M.read_committed(spark, path)
-    assert back.count() == 1000
-    assert back.agg({"k": "sum"}).collect()[0][0] == sum(range(1000))
-    # old fragments are now orphans and vacuumable
-    removed = M.vacuum_orphans(path)
-    assert len(removed) == 16
-    assert M.read_committed(spark, path).count() == 1000
-
-
 def test_range_partitioned_export_is_globally_sorted(spark, tmp_path):
     """Ordered export: repartitionByRange + sortWithinPartitions writes
     files whose key ranges are disjoint and ordered (file N's max < file
@@ -266,21 +111,6 @@ def test_schema_evolution_merge_across_shards(spark, tmp_path):
     assert set(merged.columns) == {"doc_id", "text", "lang"}
     by_id = {r["doc_id"]: r for r in merged.collect()}
     assert by_id[1]["lang"] is None and by_id[2]["lang"] == "en"
-
-
-def test_manifest_time_travel_reads_prior_version(spark, tmp_path):
-    from open_ftth_relational_projector_spark.sinks import manifest_sink as M
-
-    path = str(tmp_path / "tt")
-    M.write_versioned(
-        spark.range(0, 10).withColumnRenamed("id", "k"), path, version=1
-    )
-    M.write_versioned(
-        spark.range(0, 99).withColumnRenamed("id", "k"), path, version=2
-    )
-    assert M.read_committed(spark, path).count() == 99
-    assert M.read_version(spark, path, 1).count() == 10  # time travel
-    assert M.read_version(spark, path, 2).count() == 99
 
 
 def test_rollup_reaggregation_from_partials(spark):

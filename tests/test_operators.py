@@ -107,26 +107,37 @@ class TestSkewSalting:
     """operators/skew.py: salted two-stage aggregation ≡ plain aggregation."""
 
     def test_salted_count_equals_plain(self, spark):
-        from open_ftth_relational_projector_spark.operators.skew import salted_count
+        from pyspark.sql import functions as F
+        from open_ftth_relational_projector_spark.operators.skew import (
+            salted_aggregate,
+        )
 
         # one hot key (90%), several cold ones
         rows = [("hot", i) for i in range(900)] + [
             (f"cold{i % 7}", i) for i in range(100)
         ]
         df = spark.createDataFrame(rows, "k string, v int")
-        got = {r["k"]: r["cnt"] for r in salted_count(df, ["k"]).collect()}
+        salted = salted_aggregate(
+            df, ["k"], partial={"_c": F.count(F.lit(1))}, merge={"cnt": F.sum("_c")}
+        )
+        got = {r["k"]: r["cnt"] for r in salted.collect()}
         exp = {r["k"]: r["cnt"] for r in df.groupBy("k").agg(
-            __import__("pyspark.sql.functions", fromlist=["count"]).count("*").alias("cnt")
+            F.count("*").alias("cnt")
         ).collect()}
         assert got == exp
 
     def test_salted_sum_equals_plain(self, spark):
         from pyspark.sql import functions as F
-        from open_ftth_relational_projector_spark.operators.skew import salted_sum
+        from open_ftth_relational_projector_spark.operators.skew import (
+            salted_aggregate,
+        )
 
         rows = [("hot", i) for i in range(500)] + [("cold", i) for i in range(50)]
         df = spark.createDataFrame(rows, "k string, v int")
-        got = {r["k"]: r["sum_v"] for r in salted_sum(df, ["k"], "v").collect()}
+        salted = salted_aggregate(
+            df, ["k"], partial={"_s": F.sum("v")}, merge={"sum_v": F.sum("_s")}
+        )
+        got = {r["k"]: r["sum_v"] for r in salted.collect()}
         exp = {
             r["k"]: r["s"]
             for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()

@@ -363,10 +363,7 @@ def test_connected_components_raises_past_max_iter(spark):
 
 
 def test_hash_split_deterministic_and_proportional(spark):
-    from open_ftth_relational_projector_spark.functions.sampling import (
-        hash_split,
-        split_thresholds,
-    )
+    from open_ftth_relational_projector_spark.functions.sampling import hash_split
 
     df = spark.range(0, 20_000).withColumnRenamed("id", "k")
     out = hash_split(df, "k", {"train": 0.8, "val": 0.1, "test": 0.1})
@@ -378,9 +375,6 @@ def test_hash_split_deterministic_and_proportional(spark):
     # repartitioning must not change a single assignment
     again = hash_split(df.repartition(13), "k", {"train": 0.8, "val": 0.1, "test": 0.1})
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, again.collect()))
-    # thresholds round-trip for SQL consumers
-    th = split_thresholds({"train": 0.8, "val": 0.1, "test": 0.1})
-    assert th["train"][0] == "00000000" and th["test"][1] == "ffffffff"
 
 
 def test_epoch_shuffle_manifest_permutation_shards_and_invariance(spark):

@@ -1,201 +1,13 @@
-"""applyInPandasWithState fold ≡ batch projection (T4 state-in-Spark path)."""
+"""Keyed-state streaming folds (streaming/stateful.py, streaming/joins.py)
+≡ their batch or sequential references, across micro-batches and query
+restarts."""
 
 from __future__ import annotations
 
 import shutil
 import tempfile
 
-import pytest
-
 from pyspark.sql import functions as F
-
-from open_ftth_relational_projector_spark.events.generator import (
-    generate,
-    to_envelope_rows,
-)
-from open_ftth_relational_projector_spark.events.reader import EventLog
-from open_ftth_relational_projector_spark.events.schemas import ENVELOPE_SCHEMA
-from open_ftth_relational_projector_spark.projections.core import project_work_task
-from open_ftth_relational_projector_spark.streaming.runner import (
-    write_envelope_batch,
-)
-from open_ftth_relational_projector_spark.streaming.stateful import (
-    stateful_work_task,
-)
-
-
-def test_stateful_work_task_matches_batch(spark):
-    env = spark.createDataFrame(
-        to_envelope_rows(generate(seed=13, scale=4)), ENVELOPE_SCHEMA
-    ).cache()
-    expected = {
-        r["id"]: (r["number"], r["status"])
-        for r in project_work_task(EventLog.from_envelopes(env)).collect()
-    }
-
-    tmp = tempfile.mkdtemp(prefix="ofrp_stateful_")
-    try:
-        max_seq = env.agg({"seq": "max"}).collect()[0][0]
-        cut = max_seq // 2
-        # two files → two micro-batches; state must carry across them
-        write_envelope_batch(env.filter(f"seq <= {cut}"), f"{tmp}/in", 0)
-        write_envelope_batch(env.filter(f"seq > {cut}"), f"{tmp}/in", 1)
-
-        stream = spark.readStream.schema(ENVELOPE_SCHEMA).option(
-            "maxFilesPerTrigger", "1"
-        ).json(f"{tmp}/in")
-        q = (
-            stateful_work_task(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("wt_stateful")
-            .option("checkpointLocation", f"{tmp}/cp")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-
-        # update mode emits one row per touched key per batch; the final
-        # state per key is the row with the highest fold seq
-        out = spark.sql(
-            """
-            SELECT id, number, status FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY id ORDER BY seq DESC) rn
-              FROM wt_stateful) WHERE rn = 1
-            """
-        )
-        got = {r["id"]: (r["number"], r["status"]) for r in out.collect()}
-        assert got == expected
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        spark.catalog.dropTempView("wt_stateful")
-
-
-def test_tws_work_task_matches_batch(spark):
-    """transformWithStateInPandas fold ≡ batch projection (needs the
-    RocksDB state store provider, which tWS requires)."""
-    from open_ftth_relational_projector_spark.streaming.stateful import (
-        stateful_work_task_tws,
-    )
-
-    env = spark.createDataFrame(
-        to_envelope_rows(generate(seed=17, scale=4)), ENVELOPE_SCHEMA
-    ).cache()
-    expected = {
-        r["id"]: (r["number"], r["status"])
-        for r in project_work_task(EventLog.from_envelopes(env)).collect()
-    }
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    tmp = tempfile.mkdtemp(prefix="ofrp_tws_")
-    try:
-        max_seq = env.agg({"seq": "max"}).collect()[0][0]
-        cut = max_seq // 2
-        write_envelope_batch(env.filter(f"seq <= {cut}"), f"{tmp}/in", 0)
-        write_envelope_batch(env.filter(f"seq > {cut}"), f"{tmp}/in", 1)
-
-        stream = spark.readStream.schema(ENVELOPE_SCHEMA).option(
-            "maxFilesPerTrigger", "1"
-        ).json(f"{tmp}/in")
-        q = (
-            stateful_work_task_tws(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("wt_tws")
-            .option("checkpointLocation", f"{tmp}/cp")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(240)
-        except Exception as exc:  # environment-level tWS worker crash
-            if "driver worker exited" in str(exc):
-                # pinned cause (probed 2026-08-13; re-probed rounds 7,
-                # 8 (2026-08-15), 9, 10 and 11 (2026-08-16) — `import
-                # google.protobuf` still ModuleNotFoundError): the tWS
-                # driver worker
-                # imports protobuf, absent in this container —
-                # STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE /
-                # ImportError: cannot import name 'descriptor' from
-                # 'google.protobuf'. Runs as-is where protobuf exists.
-                pytest.skip(
-                    "transformWithStateInPandas worker needs protobuf, "
-                    "not installed in this container"
-                )
-            raise
-
-        out = spark.sql(
-            """
-            SELECT id, number, status FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY id ORDER BY seq DESC) rn
-              FROM wt_tws) WHERE rn = 1
-            """
-        )
-        got = {r["id"]: (r["number"], r["status"]) for r in out.collect()}
-        assert got == expected
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        spark.catalog.dropTempView("wt_tws")
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_stateful_state_survives_query_restart(spark, tmp_path):
-    """applyInPandasWithState state must rehydrate from the checkpoint:
-    two SEPARATE query runs (not just two micro-batches) — the second
-    run's totals include the first run's rows."""
-    from open_ftth_relational_projector_spark.streaming.stateful import (
-        stateful_running_totals,
-    )
-
-    src, cp = str(tmp_path / "src"), str(tmp_path / "cp")
-
-    def land(rows):
-        spark.createDataFrame(
-            rows, "user_id long, value double"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "out")
-
-    def drain(run):
-        # memory sink refuses checkpoint recovery; foreachBatch supports it
-        def sink(batch_df, batch_id):
-            batch_df.withColumn("run", F.lit(run)).write.mode(
-                "append"
-            ).parquet(out)
-
-        q = (
-            stateful_running_totals(
-                spark.readStream.schema("user_id long, value double").parquet(src)
-            )
-            .writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {
-            r["user_id"]: (r["total"], r["n"])
-            for r in spark.read.parquet(out).filter(F.col("run") == run).collect()
-        }
-
-    land([(1, 2.0), (1, 3.0), (2, 5.0)])
-    first = drain(1)
-    assert first == {1: (5.0, 2), 2: (5.0, 1)}
-
-    land([(1, 10.0), (3, 1.0)])
-    second = drain(2)  # fresh query, same checkpoint
-    assert second[1] == (15.0, 3)  # prior state restored, not recomputed
-    assert second[3] == (1.0, 1)
-    assert 2 not in second  # untouched key emits nothing in update mode
-
 
 def test_streaming_dedup_first_matches_batch(spark):
     """streaming_dedup_first over ordered micro-batches ≡ batch

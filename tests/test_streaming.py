@@ -100,6 +100,33 @@ def test_dehydrate_only_equals_batch(spark, envelopes, expected_tables):
     _assert_sink_matches(sink, expected_tables)
 
 
+def test_sink_to_arrow_failure_propagates():
+    """A Spark frame reaches the sink through ``toArrow`` only: its error
+    surfaces, and the plan is never re-run through ``toPandas``."""
+    import pandas as pd
+
+    class FailingFrame:
+        pandas_calls = 0
+
+        def select(self, *cols):
+            self.cols = list(cols)
+            return self
+
+        def toArrow(self):  # noqa: N802 - pyspark name
+            raise RuntimeError("toArrow failed")
+
+        def toPandas(self):  # noqa: N802 - pyspark name
+            self.pandas_calls += 1
+            return pd.DataFrame(columns=self.cols)
+
+    sink = DuckDBSink()
+    sink.ensure_schema()
+    frame = FailingFrame()
+    with pytest.raises(RuntimeError, match="toArrow failed"):
+        sink.overwrite("work_task", frame)
+    assert frame.pandas_calls == 0
+
+
 def test_batch_id_replay_skipped(spark, envelopes, expected_tables):
     """T5: a re-delivered (batch_id, data) pair is a no-op, and a genuine
     re-application of the same data is idempotent."""

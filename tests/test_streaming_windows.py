@@ -119,62 +119,6 @@ def test_windowed_append_with_late_row_eviction(spark):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_streaming_dedup_within_watermark(spark):
-    """Re-delivery while the key's state is live is dropped; re-delivery
-    after watermark eviction passes through (the documented at-least-once
-    tradeoff of dropDuplicatesWithinWatermark)."""
-    from open_ftth_relational_projector_spark.streaming.windows import (
-        dedup_within_watermark,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="ofrp_dedup_")
-    src, out, cp = f"{tmp}/in", f"{tmp}/out", f"{tmp}/cp"
-
-    def row(event_id, minute):
-        return (event_id, BASE + timedelta(minutes=minute), 1, "e", 1.0)
-
-    def drain():
-        q = (
-            dedup_within_watermark(
-                spark.readStream.schema(SCHEMA).parquet(src), delay="10 minutes"
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    try:
-        # run 1: ids 1..5 early + id 100 at 30min → watermark = 20min;
-        # ids 1..5 (expiry ts+10 ≤ 15min) are evicted, id 100 stays live
-        _land([row(i, i) for i in range(1, 6)] + [row(100, 30)], src, "b1")
-        drain()
-        # run 2: id 100 re-delivered while live → dropped; id 3
-        # re-delivered after eviction → passes; id 6 is genuinely new
-        _land([row(100, 30), row(3, 21), row(6, 31)], src, "b2")
-        drain()
-
-        got = sorted(r.event_id for r in spark.read.parquet(out).collect())
-        assert got == [1, 2, 3, 3, 4, 5, 6, 100]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_dedup_within_watermark_batch_mode(spark):
-    from open_ftth_relational_projector_spark.streaming.windows import (
-        dedup_within_watermark,
-    )
-
-    df = spark.createDataFrame(
-        [(1, BASE, 1, "a", 1.0), (1, BASE, 1, "a", 1.0), (2, BASE, 1, "a", 1.0)],
-        SCHEMA,
-    )
-    assert dedup_within_watermark(df).count() == 2
-
-
 def test_curation_signals_stream_shard_by_shard(spark, tmp_path):
     """The stateless curation signals (quality score, lang guess, token
     counts, fingerprints) run unchanged under Structured Streaming — the
