@@ -1,8 +1,7 @@
 from open_ftth_relational_projector_spark.events.schemas import (
     ENVELOPE_SCHEMA,
-    EVENT_TYPES,
     PAYLOAD_SCHEMAS,
 )
 from open_ftth_relational_projector_spark.events.reader import EventLog
 
-__all__ = ["ENVELOPE_SCHEMA", "EVENT_TYPES", "PAYLOAD_SCHEMAS", "EventLog"]
+__all__ = ["ENVELOPE_SCHEMA", "PAYLOAD_SCHEMAS", "EventLog"]

@@ -201,5 +201,3 @@ PAYLOAD_SCHEMAS: dict[str, T.StructType] = {
         _f("id", GUID), _f("locationRemark", T.StringType())
     ),
 }
-
-EVENT_TYPES = sorted(PAYLOAD_SCHEMAS)

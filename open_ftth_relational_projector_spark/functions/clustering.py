@@ -54,7 +54,6 @@ from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from open_ftth_relational_projector_spark.functions.similarity import (
     as_double,
-    cosine,  # noqa: F401 - re-exported for callers/tests
     cosine_prenormed,
     dlit,
     dlit2,

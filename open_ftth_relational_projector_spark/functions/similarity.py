@@ -87,16 +87,9 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """cosine(a, b) with the two norms supplied as columns.
-
-    Bit-identical to ``cosine``: each norm is the same SQRT(fold) expression
-    evaluated on the same values, and the combining arithmetic keeps the
-    operand order ``dot / (na * nb)``. Precomputing the norms ONCE PER ROW
+    """cosine(a, b) as ``dot(a, b) / (na * nb)``, with the two norms
+    (``l2_norm``) supplied as columns. Precomputing the norms ONCE PER ROW
     on each join side (instead of once per joined PAIR) cuts the per-pair
     work of the n×m scored stage from three 64-element array folds to one —
     the r12 optimization for every cosine join in this module (guide §1.2:

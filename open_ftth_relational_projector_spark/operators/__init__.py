@@ -5,26 +5,14 @@ no driver-side state, no collect(), shuffle only on declared keys — i.e. the
 shape that survives a 1000-executor / 100 TB deployment.
 """
 
-from open_ftth_relational_projector_spark.operators.lww import (
-    latest_by_key,
-    latest_touch_by_key,
-)
+from open_ftth_relational_projector_spark.operators.lww import latest_by_key
 from open_ftth_relational_projector_spark.operators.asof import asof_join
-from open_ftth_relational_projector_spark.operators.arrays import (
-    dedup_preserving_order,
-    first_element,
-    last_element,
-)
 from open_ftth_relational_projector_spark.operators.explode_seq import explode_with_seq
 from open_ftth_relational_projector_spark.operators.walk_hops import subtract_hops
 
 __all__ = [
     "latest_by_key",
-    "latest_touch_by_key",
     "asof_join",
-    "dedup_preserving_order",
-    "first_element",
-    "last_element",
     "explode_with_seq",
     "subtract_hops",
 ]

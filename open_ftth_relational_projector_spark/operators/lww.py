@@ -32,7 +32,7 @@ def latest_by_key(
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     if value_cols is None:
         value_cols = [c for c in df.columns if c not in keys and c != seq_col]
-    # String-built (see latest_touch_by_key): one py4j round trip per agg.
+    # String-built: one py4j round trip per aggregate, not one per Column call.
     payload = ", ".join(f"`{c}`" for c in value_cols)
     agg = df.groupBy(*keys).agg(
         F.expr(f"max_by(struct({payload}), `{seq_col}`) AS _latest"),
@@ -45,44 +45,10 @@ def latest_by_key(
     )
 
 
-def latest_touch_by_key(
-    df: DataFrame,
-    key_cols: Sequence[str] | str,
-    touch_cols: Sequence[str],
-    seq_col: str = "seq",
-) -> DataFrame:
-    """Field-wise last-write-wins.
-
-    Input rows carry, per logical field, a *touch marker*: a one-field struct
-    ``struct(v)`` when the event wrote the field (``v`` may legitimately be
-    NULL — e.g. SpanEquipmentAddressInfoChanged can set an address to NULL,
-    ProjektorState.cs:312-323), and NULL when the event did not touch it.
-
-    Output: one row per key with, for each field, the value written by the
-    latest touching event (still wrapped; NULL marker if never touched).
-
-    This reproduces the reference's partial-field mutations (move touches the
-    node ids, spec-change touches spec fields, address-change touches the two
-    address fields) as a single keyed aggregation.
-    """
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    # String-built aggregates: one py4j round trip per field instead of ~6
-    # (max_by + when + isNotNull + 2×col + alias) — construction latency is
-    # per-field-per-call driver cost, significant for wide entities.
-    aggs = [
-        F.expr(
-            f"max_by(`{c}`, CASE WHEN `{c}` IS NOT NULL"
-            f" THEN `{seq_col}` END) AS `{c}`"
-        )
-        for c in touch_cols
-    ]
-    return df.groupBy(*keys).agg(
-        *aggs, F.expr(f"max(`{seq_col}`) AS `{seq_col}`")
-    )
-
-
 def touched(value: Column) -> Column:
-    """Wrap a written value in a touch marker (see latest_touch_by_key)."""
+    """Wrap a written value in a touch marker: ``struct(v)`` when an event
+    wrote the field (``v`` may legitimately be NULL), NULL when it did not
+    — the input of a field-wise last-write-wins aggregate."""
     return F.struct(value.alias("v"))
 
 
@@ -96,8 +62,3 @@ def touched_sql(expr: str, alias: str | None = None) -> str:
     """
     alias = alias if alias is not None else expr
     return f"named_struct('v', {expr}) AS `{alias}`"
-
-
-def untouched(data_type: str = "string") -> Column:
-    """NULL touch marker of the right struct type."""
-    return F.lit(None).cast(f"struct<v:{data_type}>")

@@ -6,11 +6,6 @@ in dedup) can pin one reducer. Salting splits a hot key across ``n_salts``
 partial groups and merges the partials — the classic two-stage aggregation.
 Results are EXACTLY equal to the unsalted form for decomposable aggregates
 (count/sum/min/max); the salt never leaks into the output.
-
-For joins where both sides are large and one has hot keys:
-``with_salt`` the skewed fact side and ``replicate_for_salt`` the other
-side, then join on (key, salt). Replication factor × small side must stay
-below the fact side's skew win to pay off.
 """
 
 from __future__ import annotations
@@ -29,15 +24,6 @@ def with_salt(df: DataFrame, n_salts: int = 32, col_name: str = "_salt") -> Data
     return df.withColumn(
         col_name, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salts))
     )
-
-
-def replicate_for_salt(
-    df: DataFrame, n_salts: int = 32, col_name: str = "_salt"
-) -> DataFrame:
-    """Cross the build side with salt ids 0..n_salts-1 so every salted
-    probe partition finds its match."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    return df.withColumn(col_name, salts)
 
 
 def salted_aggregate(

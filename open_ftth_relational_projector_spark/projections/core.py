@@ -281,11 +281,7 @@ def _parent_edges(log: EventLog) -> DataFrame:
     return _resolve_edges(_edge_events(log), _parent_registry_versions(log))
 
 
-def _has_child_final(
-    log: EventLog,
-    edges: DataFrame | None = None,
-    detaches: DataFrame | None = None,
-) -> DataFrame:
+def _has_child_final(log: EventLog, edges: DataFrame | None = None) -> DataFrame:
     """Final HasChildSpanEquipments per parent equipment id.
 
     Timeline per parent: affix edges referencing its root segment set TRUE
@@ -293,20 +289,16 @@ def _has_child_final(
     edge sets FALSE for that edge's parent (the child's parent list is
     cleared on detach, ProjektorState.cs:398-417). Last event wins.
 
-    ``edges``/``detaches`` let the incremental path feed sink-maintained
-    (child_id, seq, parent_id) / (child_id, seq) sets instead of
-    recomputing them from the full log (both are append-only, so a batch
-    only inserts rows); batch callers that already materialized
-    _parent_edges share one computation the same way.
+    ``edges`` lets a caller that already materialized ``_parent_edges``
+    (``runner.compute_deltas``, which also seeds ``_aux_affix_edge`` from
+    it) share one computation. The driver replay folds the same timeline
+    over the sink's aux tables (incremental._fold_has_child).
     """
     if edges is None:
         edges = _parent_edges(log)
-
-    if detaches is None:
-        detaches = log.of("SpanEquipmentDetachedFromParent").selectExpr(
-            "spanEquipmentId AS child_id", "seq"
-        )
-    detaches = detaches.selectExpr("child_id", "seq AS detach_seq")
+    detaches = log.of("SpanEquipmentDetachedFromParent").selectExpr(
+        "spanEquipmentId AS child_id", "seq AS detach_seq"
+    )
     cancels = (
         edges.join(detaches, "child_id", "left")
         .filter("detach_seq > seq")
@@ -561,11 +553,10 @@ def slack_ends(
 ) -> DataFrame:
     """Qualifying unconnected customer-conduit ends — the pre-aggregation of
     conduit_slack (ProjektorState.cs:449-471): one row
-    (span_equipment_id, route_node_id, end_kind) per slack end. The
-    incremental path persists this set keyed by equipment so a micro-batch
-    can replace one equipment's ends and re-aggregate only touched nodes;
-    it passes a key-restricted ``state`` but an unrestricted ``has_child``
-    (a parent's flag depends on OTHER children's affix edges).
+    (span_equipment_id, route_node_id, end_kind) per slack end. The sink
+    keeps this set as ``_aux_slack_end`` so the driver replay can replace
+    one equipment's ends and re-aggregate only touched nodes;
+    ``compute_deltas`` passes its shared ``state`` and ``has_child``.
     """
     if state is None:
         state = _span_state(log)
@@ -696,7 +687,8 @@ def project_all(
     envelope scan and the folded span-equipment state are cached and primed
     so the 8 plans don't each re-read the source and re-fold the span
     timeline — the local analogue of materializing typed bronze + a silver
-    state table at scale.
+    state table at scale. A caller that passes ``state`` (``compute_deltas``)
+    has cached its inputs itself and passes ``persist=False``.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -718,8 +710,6 @@ def project_all(
         state = tracked_persist(_span_state(log))
         pool0 = ThreadPoolExecutor(1)
         prime = pool0.submit(state.count)
-    elif persist:
-        log = log.persisted()
     elif state is None:
         state = _span_state(log)
 

@@ -184,6 +184,16 @@ TABLE_GROUP_KEYS: dict[str, str] = {
     "_aux_slack_end": "span_equipment_id",
 }
 
+
+def key_column(table: str) -> str:
+    """The column a keyed write replaces by: the group key, else the single
+    primary key."""
+    if table in TABLE_GROUP_KEYS:
+        return TABLE_GROUP_KEYS[table]
+    (key,) = TABLE_PRIMARY_KEYS[table]
+    return key
+
+
 # the 8 public projection tables, in reference DDL order.
 PROJECTION_TABLES = [
     "rel_interest_to_route_element",

@@ -2,7 +2,6 @@ from open_ftth_relational_projector_spark.sources.tables import (
     TABLES,
     load_table,
     load_tables,
-    register_views,
 )
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_table", "load_tables"]

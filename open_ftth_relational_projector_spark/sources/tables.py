@@ -111,8 +111,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in names or TABLES}
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view (SQL entry path)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

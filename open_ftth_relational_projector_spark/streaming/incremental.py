@@ -1,15 +1,17 @@
-"""Incremental view maintenance: the keyed deltas of one micro-batch.
+"""Incremental view maintenance: the keys and edge-set writes of one chunk.
 
 The reference applies each event imperatively against in-memory state and
 issues per-row DML (RelationalDatabaseProjection.cs:226-264, 407-458).
 ``apply_batch`` (streaming/runner.py) serves every batch above the sink
-watermark, of any size, on the driver, in chunks of at most
+watermark, of any size, on the driver, in seq-ordered chunks of at most
 ``MAX_DRIVER_BATCH_ROWS`` rows. ``affected_ids_from_rows`` names the entity
 keys a chunk touches and ``build_edge_context`` resolves its affix-edge,
-root-segment and detach deltas against the sink aux tables; the replays in
-streaming/replay.py produce the rows. No job reads the accumulated log. (A
-batch that overlaps the watermark is not maintained incrementally: it
-rebuilds every table from the accumulated log through dehydrate's fold,
+root-segment and detach writes against the sink aux tables; the replays in
+streaming/replay.py produce the rest. Every write is ``table → (keys,
+rows)`` for ``DuckDBSink.replace_group``, and every seed read is one
+``DuckDBSink.lookup``. No job reads the accumulated log. (A batch that
+overlaps the watermark is not maintained incrementally: it rebuilds every
+table from the accumulated log through dehydrate's fold,
 ``runner.compute_deltas``.)
 
 conduit_slack — the one cross-entity aggregate — is maintained through the
@@ -22,7 +24,6 @@ ProjektorState.cs:473-512, are the single-threaded special case of this).
 from __future__ import annotations
 
 import hashlib
-from dataclasses import dataclass, field
 
 # -- per-event-type affected-entity extraction ------------------------------
 # event_type -> (domain, id expression in the flattened typed frame).
@@ -106,46 +107,6 @@ def affected_ids_from_rows(
     return out
 
 
-@dataclass
-class TableDelta:
-    """Keyed-merge delta: recomputed rows + keys with no row (deletes)."""
-
-    upserts: object  # pyarrow.Table in sink column order
-    delete_keys: list[str] = field(default_factory=list)
-
-
-@dataclass
-class GroupDelta:
-    """Group-replace delta (S8): delete all rows of ``group_keys``, insert."""
-
-    group_keys: list[str]
-    rows: object  # pyarrow.Table
-
-
-@dataclass
-class EdgeContext:
-    """Sink-maintained affix-edge neighborhood for one micro-batch.
-
-    The affix-edge set, the root-segment registry, and the detach set are
-    all APPEND-ONLY functions of the log (an edge's parent is frozen at
-    edge time; registry rows and detaches are events). Keeping them as sink
-    aux tables turns the per-batch has-child/slack recompute from
-    ∝ accumulated-log (_parent_edges over the whole history, every batch)
-    into ∝ batch-neighborhood: resolve only the batch's new edges, then
-    read back just the touched parents' edges and their children's
-    detaches. At 100 TB these aux sets live in the same store as the
-    output tables (or Delta), and a micro-batch touches O(batch) rows of
-    them through indexed lookups.
-    """
-
-    all_eq: list[str]  # touched spans ∪ their affix parents (fold keys)
-    has_child_rows: list[tuple[str, bool]]  # folded flags, keys ⊆ all_eq
-    new_edges: object  # pyarrow appends for _aux_affix_edge
-    new_registry: object  # pyarrow appends for _aux_root_segment
-    new_detaches: object  # pyarrow appends for _aux_detach
-    span_replay: object  # streaming.replay.SpanReplayResult
-
-
 def _fold_has_child(
     edges: list[tuple[str, int, str]], detaches: list[tuple[str, int]]
 ) -> list[tuple[str, bool]]:
@@ -204,19 +165,24 @@ def build_edge_context(
     parsed: list[tuple[int, str, dict]],
     ids: dict[str, list[str]],
     sink,
-) -> EdgeContext | None:
-    """Resolve the batch's edge/registry/detach deltas against the sink aux
-    tables and assemble the restricted fold inputs — driver-side, zero
-    Spark jobs (the batch is already collected; the sink lookups are
-    indexed ∝ batch-neighborhood).
+) -> dict[str, tuple[list[str], "pyarrow.Table"]]:
+    """The span-side writes of one chunk, as ``table → (keys, rows)``.
 
-    Returns None when the batch touches no span-equipment entities.
+    The affix-edge set, the root-segment registry and the detach set are
+    all APPEND-ONLY functions of the log (an edge's parent is frozen at
+    edge time; registry rows and detaches are events), so the sink keeps
+    them as aux tables: resolve only the chunk's new edges, then read back
+    just the touched parents' edges and their children's detaches — every
+    lookup indexed and ∝ batch neighborhood, zero Spark jobs. Their new
+    rows come back with no keys (appends); ``replay_span_batch`` adds the
+    span state, ``span_equipment`` and ``_aux_slack_end`` writes, the last
+    keyed by every fold key (touched spans ∪ their affix parents).
+
+    Returns an empty dict when the chunk touches no span-equipment entity.
     """
-    from open_ftth_relational_projector_spark.sinks.ddl import SCHEMA
-
     span_ids = ids.get("span")
     if not span_ids:
-        return None
+        return {}
     import pyarrow as pa
 
     children = ids.get("cable", [])
@@ -250,23 +216,16 @@ def build_edge_context(
         elif etype == "SpanEquipmentDetachedFromParent":
             detaches.append((payload.get("spanEquipmentId"), seq))
 
-    def fetch(sql: str, params: list) -> list[tuple]:
-        return list(sink.fetch_df(sql, params).itertuples(index=False, name=None))
-
-    def in_clause(vals: list[str]) -> str:
-        return ", ".join("?" for _ in vals)
+    registry_cols = ["root_segment_id", "seq", "parent_id"]
 
     # -- registry deltas: placements register, removals tombstone ----------
     new_registry: list[tuple[str, int, str | None]] = [
         (root, seq, pid) for pid, seq, root in placements
     ]
     if removals:
-        rm_ids = sorted({pid for pid, _ in removals})
         by_pid: dict[str, list[tuple[int, str]]] = {}
-        for root, vseq, pid in fetch(
-            f'SELECT root_segment_id, seq, parent_id FROM {SCHEMA}."_aux_root_segment" '
-            f"WHERE parent_id IN ({in_clause(rm_ids)})",
-            rm_ids,
+        for root, vseq, pid in sink.lookup(
+            "_aux_root_segment", registry_cols, "parent_id", {p for p, _ in removals}
         ):
             by_pid.setdefault(pid, []).append((vseq, root))
         for pid, seq, root in placements:
@@ -280,13 +239,11 @@ def build_edge_context(
 
     # -- batch edges, resolved as of the edge event (frozen at edge time) --
     new_edges: list[tuple[str, int, str]] = []
-    roots = sorted({root for _, _, root in edge_events if root is not None})
+    roots = {root for _, _, root in edge_events if root is not None}
     if roots:
         by_root: dict[str, list[tuple[int, str | None]]] = {}
-        for root, vseq, pid in fetch(
-            f'SELECT root_segment_id, seq, parent_id FROM {SCHEMA}."_aux_root_segment" '
-            f"WHERE root_segment_id IN ({in_clause(roots)})",
-            roots,
+        for root, vseq, pid in sink.lookup(
+            "_aux_root_segment", registry_cols, "root_segment_id", roots
         ):
             by_root.setdefault(root, []).append((vseq, pid))
         for root, vseq, pid in new_registry:
@@ -299,62 +256,43 @@ def build_edge_context(
                 new_edges.append((cid, seq, hit[1]))
 
     # -- parent expansion: prior edges of touched children + batch edges ---
-    parents: set[str] = {p for _, _, p in new_edges}
-    if children:
-        parents.update(
-            p
-            for (p,) in fetch(
-                f'SELECT DISTINCT parent_id FROM {SCHEMA}."_aux_affix_edge" '
-                f"WHERE child_id IN ({in_clause(children)})",
-                children,
-            )
-        )
+    edge_cols = ["child_id", "seq", "parent_id"]
+    parents = {p for _, _, p in new_edges}
+    parents.update(
+        p for _, _, p in sink.lookup("_aux_affix_edge", edge_cols, "child_id", children)
+    )
     all_eq = sorted(set(span_ids) | parents)
 
     # -- fold inputs: every edge of every fold key, + their detaches -------
-    prior_edges = fetch(
-        f'SELECT child_id, seq, parent_id FROM {SCHEMA}."_aux_affix_edge" '
-        f"WHERE parent_id IN ({in_clause(all_eq)})",
-        all_eq,
+    fold_edges = sink.lookup("_aux_affix_edge", edge_cols, "parent_id", all_eq)
+    fold_edges += new_edges
+    fold_detaches = detaches + sink.lookup(
+        "_aux_detach", ["child_id", "seq"], "child_id", {c for c, _, _ in fold_edges}
     )
-    fold_edges = prior_edges + new_edges
-    fold_children = sorted({c for c, _, _ in fold_edges})
-    fold_detaches = list(detaches)
-    if fold_children:
-        fold_detaches += fetch(
-            f'SELECT child_id, seq FROM {SCHEMA}."_aux_detach" '
-            f"WHERE child_id IN ({in_clause(fold_children)})",
-            fold_children,
-        )
 
-    def arrow(rows: list[tuple], names: list[str], types: list) -> pa.Table:
+    def arrow(rows: list[tuple], names: list[str]) -> pa.Table:
         cols = list(zip(*rows)) if rows else [[] for _ in names]
+        types = {"seq": "int64"}
         return pa.table(
-            {n: pa.array(list(c), t) for n, c, t in zip(names, cols, types)}
+            {n: pa.array(list(c), types.get(n, "string")) for n, c in zip(names, cols)}
         )
-
-    has_child_rows = _fold_has_child(fold_edges, fold_detaches)
 
     from open_ftth_relational_projector_spark.streaming.replay import (
         replay_span_batch,
     )
 
-    return EdgeContext(
-        all_eq=all_eq,
-        has_child_rows=has_child_rows,
-        new_edges=arrow(
-            new_edges, ["child_id", "seq", "parent_id"], ["string", "int64", "string"]
+    return {
+        "_aux_affix_edge": ([], arrow(new_edges, edge_cols)),
+        "_aux_root_segment": ([], arrow(new_registry, registry_cols)),
+        "_aux_detach": ([], arrow(detaches, ["child_id", "seq"])),
+        **replay_span_batch(
+            parsed,
+            span_ids,
+            all_eq,
+            dict(_fold_has_child(fold_edges, fold_detaches)),
+            sink,
         ),
-        new_registry=arrow(
-            new_registry,
-            ["root_segment_id", "seq", "parent_id"],
-            ["string", "int64", "string"],
-        ),
-        new_detaches=arrow(detaches, ["child_id", "seq"], ["string", "int64"]),
-        span_replay=replay_span_batch(
-            parsed, span_ids, all_eq, dict(has_child_rows), sink
-        ),
-    )
+    }
 
 
 def md5_uuid(value: str) -> str:

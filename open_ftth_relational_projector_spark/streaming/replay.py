@@ -1,21 +1,21 @@
-"""Driver-side span-state replay for poll-interval micro-batches.
+"""Driver-side replay of one micro-batch chunk over sink-seeded state.
 
-The distributed incremental path (streaming/incremental.py) recomputes a
-touched key's state from its full event history. For a micro-batch that is
-small by construction (one poll interval — Worker.cs:40-48), the same
-result comes much cheaper from the reference's own fold shape: seed the
-touched entities' CURRENT state from the sink's silver table
-(``_aux_span_state``), replay the batch's events over it in seq order
-(exactly ProjektorState.cs's dict mutations — the semantics are pinned by
-events/oracle.py and the batch-split equivalence tests), and write back
-only the touched rows. Spec registries ride along as sink aux tables
-(``_aux_span_spec`` / ``_aux_struct_spec``) the same way.
+Every batch above the sink watermark is applied this way (in seq-ordered
+chunks of at most incremental.MAX_DRIVER_BATCH_ROWS rows): seed the
+touched entities' CURRENT state and the registries the chunk resolves
+against from the sink (``_aux_span_state``, the spec, walk and placement
+aux tables, and the public tables that are their own state), replay the
+chunk's events over it in seq order (exactly ProjektorState.cs's dict
+mutations — the semantics are pinned by events/oracle.py and the
+batch-split equivalence tests), and write back only the touched rows.
+Each replay returns ``table → (keys, rows)``: the sink deletes the rows of
+``keys`` and inserts ``rows`` (``DuckDBSink.replace_group``). A key with
+no row is a delete.
 
-Scale shape: sink reads and writes are indexed and ∝ batch; the replay is
-O(batch events); nothing scans the log. A batch above the driver chunk
-size (incremental.MAX_DRIVER_BATCH_ROWS) replays in seq-ordered chunks;
-only a batch that overlaps the watermark falls back to the distributed
-recompute, which then reseeds these aux tables from the log.
+Scale shape: every seed is one indexed ``sink.lookup`` ∝ batch; the replay
+is O(batch events); nothing scans the log. A batch that overlaps the
+watermark is not replayed: it rebuilds every table, these aux tables
+included, from the accumulated log (runner.compute_deltas).
 
 Faithfulness notes (mirroring projections/core.py, NOT events/oracle.py's
 stricter KeyError behavior):
@@ -29,9 +29,7 @@ stricter KeyError behavior):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from open_ftth_relational_projector_spark.sinks.ddl import SCHEMA, TABLE_COLUMNS
+from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
 
 STATE_COLS = [c for c, _ in TABLE_COLUMNS["_aux_span_state"]]
 PUBLIC_COLS = [c for c, _ in TABLE_COLUMNS["span_equipment"]]
@@ -46,15 +44,6 @@ SPAN_EVENT_TYPES = {
     "SpanEquipmentSpecificationAdded",
     "SpanStructureSpecificationAdded",
 }
-
-
-@dataclass
-class SpanReplayResult:
-    state_upserts: object  # pyarrow.Table in _aux_span_state column order
-    state_deletes: list[str]
-    span_upserts: object  # pyarrow.Table in span_equipment column order
-    span_deletes: list[str]
-    slack_rows: object  # pyarrow.Table in _aux_slack_end column order
 
 
 def _dedup_keep_order(refs) -> list:
@@ -76,7 +65,7 @@ def fold_spec_registry(parsed) -> dict[str, object]:
     term_rows: dict[str, dict] = {}
     walk_rows: dict[str, dict] = {}
     placement_rows: dict[str, dict] = {}
-    for seq, etype, p in sorted(parsed, key=lambda e: e[0]):
+    for seq, etype, p in parsed:
         if etype == "SpanEquipmentSpecificationAdded":
             s = p["specification"]
             span_rows[s["id"]] = {
@@ -214,40 +203,21 @@ def replay_span_batch(
     all_eq: list[str],
     has_child: dict[str, bool],
     sink,
-) -> SpanReplayResult:
-    """Replay one collected batch's span/spec events over sink-seeded state.
+) -> dict[str, tuple[list[str], object]]:
+    """Replay one chunk's span/spec events over sink-seeded state.
 
-    ``span_ids`` — entities the batch touches (upsert/delete scope);
-    ``all_eq`` — span_ids ∪ their affix parents (slack-end recompute scope);
-    ``has_child`` — folded flags from the edge neighborhood (incremental
-    build_edge_context), keys ⊆ all_eq.
+    ``span_ids`` — entities the chunk touches (the span state and
+    ``span_equipment`` keys); ``all_eq`` — span_ids ∪ their affix parents
+    (the ``_aux_slack_end`` keys); ``has_child`` — folded flags from the
+    edge neighborhood (incremental.build_edge_context), keys ⊆ all_eq.
     """
-    events = sorted(
-        (e for e in parsed if e[1] in SPAN_EVENT_TYPES), key=lambda e: e[0]
-    )
-
-    def fetch(sql, params):
-        # pandas renders SQL NULLs in numeric columns as NaN — map back to
-        # None so arrow int casts and boolean logic see real nulls
-        def clean(v):
-            return None if (isinstance(v, float) and v != v) else v
-
-        return [
-            tuple(clean(v) for v in row)
-            for row in sink.fetch_df(sql, params).itertuples(index=False, name=None)
-        ]
+    events = [e for e in parsed if e[1] in SPAN_EVENT_TYPES]
 
     # -- seed state + registries (∝ batch, indexed) -------------------------
-    states: dict[str, dict] = {}
-    if all_eq:
-        ph = ", ".join("?" for _ in all_eq)
-        cols = ", ".join(f'"{c}"' for c in STATE_COLS)
-        for row in fetch(
-            f'SELECT {cols} FROM {SCHEMA}."_aux_span_state" WHERE id IN ({ph})',
-            all_eq,
-        ):
-            st = dict(zip(STATE_COLS, row))
-            states[st["id"]] = st
+    states = {
+        row[0]: dict(zip(STATE_COLS, row))
+        for row in sink.lookup("_aux_span_state", STATE_COLS, "id", all_eq)
+    }
 
     spec_ids = set()
     for _seq, etype, p in events:
@@ -257,38 +227,29 @@ def replay_span_batch(
             spec_ids.add(p.get("newSpecificationId"))
     spec_ids.discard(None)
 
-    span_specs: dict[str, tuple] = {}  # spec_id -> (name, struct_spec_id)
-    if spec_ids:
-        ids = sorted(spec_ids)
-        ph = ", ".join("?" for _ in ids)
-        for sid, name, ssid in fetch(
-            f'SELECT spec_id, name, struct_spec_id FROM {SCHEMA}."_aux_span_spec" '
-            f"WHERE spec_id IN ({ph})",
-            ids,
-        ):
-            span_specs[sid] = (name, ssid)
+    # spec_id -> (name, struct_spec_id)
+    span_specs = {
+        sid: (name, ssid)
+        for sid, name, ssid in sink.lookup(
+            "_aux_span_spec", ["spec_id", "name", "struct_spec_id"], "spec_id", spec_ids
+        )
+    }
     # batch spec-adds are applied during the replay at their seq; struct
     # specs referenced by either source are fetched after a first pass
-    batch_span_specs = {
-        (p.get("specification") or {}).get("id"): p["specification"]
-        for _s, t, p in events
-        if t == "SpanEquipmentSpecificationAdded"
-    }
     struct_ids = {ssid for _n, ssid in span_specs.values() if ssid is not None}
-    for spec in batch_span_specs.values():
-        ssid = ((spec.get("rootTemplate") or {}).get("spanStructureSpecificationId"))
-        if ssid is not None:
-            struct_ids.add(ssid)
-    struct_specs: dict[str, int | None] = {}
-    if struct_ids:
-        ids = sorted(struct_ids)
-        ph = ", ".join("?" for _ in ids)
-        for ssid, od in fetch(
-            f'SELECT struct_spec_id, outer_diameter FROM {SCHEMA}."_aux_struct_spec" '
-            f"WHERE struct_spec_id IN ({ph})",
-            ids,
-        ):
-            struct_specs[ssid] = od
+    for _s, t, p in events:
+        if t == "SpanEquipmentSpecificationAdded":
+            root = (p.get("specification") or {}).get("rootTemplate") or {}
+            if root.get("spanStructureSpecificationId") is not None:
+                struct_ids.add(root["spanStructureSpecificationId"])
+    struct_specs: dict[str, int | None] = dict(
+        sink.lookup(
+            "_aux_struct_spec",
+            ["struct_spec_id", "outer_diameter"],
+            "struct_spec_id",
+            struct_ids,
+        )
+    )
 
     # -- ordered replay (the reference's fold, state-seeded) ----------------
     def resolve_spec(spec_id):
@@ -352,9 +313,8 @@ def replay_span_batch(
         elif etype == "SpanEquipmentRemoved":
             states.pop(p.get("spanEquipmentId"), None)
 
-    # -- deltas --------------------------------------------------------------
+    # -- writes --------------------------------------------------------------
     touched_states = [states[i] for i in span_ids if i in states]
-    gone = [i for i in span_ids if i not in states]
     slack_rows = []
     for i in all_eq:
         st = states.get(i)
@@ -377,17 +337,14 @@ def replay_span_batch(
                 }
             )
 
-    return SpanReplayResult(
-        state_upserts=_arrow(touched_states, STATE_COLS, _STATE_TYPES),
-        state_deletes=gone,
-        span_upserts=_arrow(touched_states, PUBLIC_COLS, _STATE_TYPES),
-        span_deletes=gone,
-        slack_rows=_arrow(
-            slack_rows,
-            [c for c, _ in TABLE_COLUMNS["_aux_slack_end"]],
-            {},
+    return {
+        "_aux_span_state": (span_ids, _arrow(touched_states, STATE_COLS, _STATE_TYPES)),
+        "span_equipment": (span_ids, _arrow(touched_states, PUBLIC_COLS, _STATE_TYPES)),
+        "_aux_slack_end": (
+            all_eq,
+            _arrow(slack_rows, [c for c, _ in TABLE_COLUMNS["_aux_slack_end"]], {}),
         ),
-    )
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -454,14 +411,14 @@ def replay_lww_tables(
     parsed: list[tuple[int, str, dict]],
     ids: dict[str, list[str]],
     sink,
-) -> dict[str, tuple[object, list[str]]]:
-    """Driver-side replay of the join-free LWW tables for one micro-batch.
+) -> dict[str, tuple[list[str], object]]:
+    """Driver-side replay of the join-free LWW tables for one chunk.
 
     The sink's public table IS the full state for these tables — seed the
-    touched ids' rows (indexed, ∝ batch), apply the batch's events in seq
-    order, return (arrow upserts, delete keys) per table. Zero Spark jobs.
+    touched ids' rows (indexed, ∝ batch), apply the chunk's events in seq
+    order, return (touched ids, arrow rows) per table. Zero Spark jobs.
     """
-    out: dict[str, tuple[object, list[str]]] = {}
+    out: dict[str, tuple[list[str], object]] = {}
     for table, spec in _LWW_SPECS.items():
         touched_ids = ids.get(spec["domain"])
         if not touched_ids:
@@ -469,20 +426,13 @@ def replay_lww_tables(
         cols = [c for c, _ in TABLE_COLUMNS[table]]
         ctype, cid, cfields, cguard = spec["created"]
         relevant = {ctype, *spec["updates"]}
-
-        states: dict[str, dict] = {}
-        ph = ", ".join("?" for _ in touched_ids)
-        col_sql = ", ".join(f'"{c}"' for c in cols)
-        for row in sink.fetch_df(
-            f'SELECT {col_sql} FROM {SCHEMA}."{table}" WHERE id IN ({ph})',
-            touched_ids,
-        ).itertuples(index=False, name=None):
-            st = dict(zip(cols, row))
-            states[st["id"]] = st
-
-        for _seq, etype, p in sorted(
-            (e for e in parsed if e[1] in relevant), key=lambda e: e[0]
-        ):
+        states = {
+            row[0]: dict(zip(cols, row))
+            for row in sink.lookup(table, cols, "id", touched_ids)
+        }
+        for _seq, etype, p in parsed:
+            if etype not in relevant:
+                continue
             if etype == ctype:
                 if not cguard(p):
                     continue
@@ -495,8 +445,7 @@ def replay_lww_tables(
                     st.update(ufields(p))
 
         rows = [states[i] for i in touched_ids if i in states]
-        gone = [i for i in touched_ids if i not in states]
-        out[table] = (_arrow(rows, cols, {}), gone)
+        out[table] = (touched_ids, _arrow(rows, cols, {}))
     return out
 
 
@@ -510,23 +459,20 @@ def replay_rel_batch(
     parsed: list[tuple[int, str, dict]],
     ids: dict[str, list[str]],
     sink,
-) -> dict[str, tuple]:
-    """Driver-side replay of the registry-joined tables for one micro-batch.
+) -> dict[str, tuple[list[str], object]]:
+    """Driver-side replay of the registry-joined tables for one chunk.
 
-    One pass over the batch's events in seq order maintains the registries
+    One pass over the chunk's events in seq order maintains the registries
     (specs, container→node relation, walk versions, cable placements) —
     seeded from the sink aux tables (∝ batch, indexed) — so every lookup a
     projection expresses as an as-of join resolves against exactly the
-    registry state at that event's position. Returns per-table results:
-
-      node_container / service_termination → ("keyed", upserts, deletes)
-      rel_interest_to_route_element        → ("group", group_keys, rows)
-      rel_fiber_cable_to_route_element     → ("group", group_keys, rows)
+    registry state at that event's position. Returns (keys, arrow rows)
+    for node_container, service_termination and the two rel_* tables.
 
     Cables touched only by a NON-trigger event (e.g. a re-placement whose
-    spec isn't a cable) are left out of the group keys entirely: the
-    distributed path would recompute their rows from the unchanged latest
-    trigger and rewrite the same rows — an exact no-op.
+    spec isn't a cable) are left out of the rel_fiber keys entirely: their
+    sink rows come from their latest trigger, which the chunk leaves
+    unchanged, so keeping them is exact.
     """
     from open_ftth_relational_projector_spark.operators.walk_hops import (
         subtract_hops_py,
@@ -536,28 +482,7 @@ def replay_rel_batch(
     term_ids = ids.get("terminal") or []
     interest_ids = ids.get("interest") or []
     cable_ids = set(ids.get("cable") or [])
-
-    def fetch(sql, params):
-        def clean(v):
-            return None if (isinstance(v, float) and v != v) else v
-
-        return [
-            tuple(clean(v) for v in row)
-            for row in sink.fetch_df(sql, params).itertuples(index=False, name=None)
-        ]
-
-    def seed_keyed(table, cols, keys):
-        if not keys:
-            return {}
-        ph = ", ".join("?" for _ in keys)
-        col_sql = ", ".join(f'"{c}"' for c in cols)
-        return {
-            row[0]: dict(zip(cols, row))
-            for row in fetch(
-                f'SELECT {col_sql} FROM {SCHEMA}."{table}" WHERE {cols[0]} IN ({ph})',
-                list(keys),
-            )
-        }
+    nc_keys, interest_keys = set(nc_ids), set(interest_ids)
 
     # ---- scan the batch once to collect the ids each seed needs ----------
     nc_spec_ids, term_spec_ids, span_spec_ids = set(), set(), set()
@@ -588,71 +513,66 @@ def replay_rel_batch(
 
     # ---- seeds (all indexed point lookups, ∝ batch) -----------------------
     nc_specs = {
-        k: (v["name"], v["category"])
-        for k, v in seed_keyed(
-            "_aux_nc_spec", ["spec_id", "name", "category"], sorted(nc_spec_ids)
-        ).items()
+        k: (name, cat)
+        for k, name, cat in sink.lookup(
+            "_aux_nc_spec", ["spec_id", "name", "category"], "spec_id", nc_spec_ids
+        )
     }
-    term_specs = {
-        k: v["is_customer_termination"]
-        for k, v in seed_keyed(
+    term_specs = dict(
+        sink.lookup(
             "_aux_term_spec",
             ["spec_id", "is_customer_termination"],
-            sorted(term_spec_ids),
-        ).items()
-    }
-    span_specs = {
-        k: v["is_cable"]
-        for k, v in seed_keyed(
-            "_aux_span_spec", ["spec_id", "is_cable"], sorted(span_spec_ids)
-        ).items()
-    }
-    placement_reg = {
-        k: v["interest_id"]
-        for k, v in seed_keyed(
-            "_aux_cable_placement",
-            ["cable_id", "interest_id"],
-            sorted(affix_cables),
-        ).items()
-    }
-    walk_interests = sorted(
-        placement_interests | {i for i in placement_reg.values() if i is not None}
+            "spec_id",
+            term_spec_ids,
+        )
     )
+    span_specs = dict(
+        sink.lookup("_aux_span_spec", ["spec_id", "is_cable"], "spec_id", span_spec_ids)
+    )
+    placement_reg = dict(
+        sink.lookup(
+            "_aux_cable_placement", ["cable_id", "interest_id"], "cable_id", affix_cables
+        )
+    )
+    walk_interests = placement_interests | {
+        i for i in placement_reg.values() if i is not None
+    }
     walk_reg = {
-        k: list(v["walk"]) if v["walk"] is not None else None
-        for k, v in seed_keyed(
-            "_aux_walk", ["interest_id", "walk"], walk_interests
-        ).items()
+        k: list(walk) if walk is not None else None
+        for k, walk in sink.lookup(
+            "_aux_walk", ["interest_id", "walk"], "interest_id", walk_interests
+        )
     }
     # container → route-node relation: the node_container table IS the
     # current relation (rows vanish on removal = cleared relation)
     relation = {k: None for k in rel_container_ids}
     relation.update(
-        {
-            k: v["route_node_id"]
-            for k, v in seed_keyed(
-                "node_container", ["id", "route_node_id"], sorted(rel_container_ids)
-            ).items()
-        }
+        sink.lookup("node_container", ["id", "route_node_id"], "id", rel_container_ids)
     )
 
     nc_cols = [c for c, _ in TABLE_COLUMNS["node_container"]]
     term_cols = [c for c, _ in TABLE_COLUMNS["service_termination"]]
-    nc_states = seed_keyed("node_container", nc_cols, nc_ids)
-    term_states = seed_keyed("service_termination", term_cols, term_ids)
+    nc_states = {
+        r[0]: dict(zip(nc_cols, r))
+        for r in sink.lookup("node_container", nc_cols, "id", nc_ids)
+    }
+    term_states = {
+        r[0]: dict(zip(term_cols, r))
+        for r in sink.lookup("service_termination", term_cols, "id", term_ids)
+    }
 
     interest_final: dict[str, list | None] = {}
     cable_final: dict[str, list | None] = {}
 
     # ---- ordered replay ---------------------------------------------------
-    for seq, etype, p in sorted(parsed, key=lambda e: e[0]):
+    for _seq, etype, p in parsed:
         if etype == "NodeContainerSpecificationAdded":
             s = p["specification"]
             nc_specs[s["id"]] = (s.get("name"), s.get("category"))
         elif etype == "NodeContainerPlacedInRouteNetwork":
             c = p["container"]
             relation[c["id"]] = c.get("routeNodeId")
-            if c["id"] in nc_states or c["id"] in (nc_ids or []):
+            if c["id"] in nc_states or c["id"] in nc_keys:
                 name, cat = nc_specs.get(c.get("specificationId"), (None, None))
                 nc_states[c["id"]] = {
                     "id": c["id"],
@@ -702,20 +622,20 @@ def replay_rel_batch(
             i = p["interest"]
             walk = _dedup_keep_order(i.get("routeNetworkElementRefs"))
             walk_reg[i["id"]] = walk
-            if i["id"] in (interest_ids or []):
+            if i["id"] in interest_keys:
                 interest_final[i["id"]] = walk
         elif etype == "WalkOfInterestRouteNetworkElementsModified":
             iid = p["interestId"]
             walk = _dedup_keep_order(p.get("routeNetworkElementIds"))
             walk_reg[iid] = walk
-            if iid in (interest_ids or []):
+            if iid in interest_keys:
                 interest_final[iid] = walk
         elif etype == "InterestUnregistered":
             # a tombstone VERSION of the interest table only — the walk
             # registry keeps the last reg/mod (the cable as-of ignores
             # unregistrations, projections/core.py:374)
             iid = p.get("interestId")
-            if iid in (interest_ids or []):
+            if iid in interest_keys:
                 interest_final[iid] = None
         elif etype == "SpanEquipmentSpecificationAdded":
             s = p["specification"]
@@ -743,16 +663,15 @@ def replay_rel_batch(
                         subtract_hops_py, walk, p.get("newUtilityHopList")
                     )
 
-    # ---- deltas -----------------------------------------------------------
-    out: dict[str, tuple] = {}
+    # ---- writes -----------------------------------------------------------
+    out: dict[str, tuple[list[str], object]] = {}
     if nc_ids:
         rows = [nc_states[i] for i in nc_ids if i in nc_states]
-        gone = [i for i in nc_ids if i not in nc_states]
-        out["node_container"] = ("keyed", _arrow(rows, nc_cols, {}), gone)
+        out["node_container"] = (nc_ids, _arrow(rows, nc_cols, {}))
     if term_ids:
         rows = [term_states[i] for i in term_ids if i in term_states]
-        gone = [i for i in term_ids if i not in term_states]
-        out["service_termination"] = ("keyed", _arrow(rows, term_cols, {}), gone)
+        out["service_termination"] = (term_ids, _arrow(rows, term_cols, {}))
+    rel_cols = ["route_network_element_id", "seq_no"]
     if interest_ids:
         rows = [
             {"interest_id": iid, "route_network_element_id": el, "seq_no": n + 1}
@@ -760,30 +679,18 @@ def replay_rel_batch(
             for n, el in enumerate(interest_final.get(iid) or [])
         ]
         out["rel_interest_to_route_element"] = (
-            "group",
-            list(interest_ids),
-            _arrow(
-                rows,
-                ["interest_id", "route_network_element_id", "seq_no"],
-                {"seq_no": "int32"},
-            ),
+            interest_ids,
+            _arrow(rows, ["interest_id", *rel_cols], {"seq_no": "int32"}),
         )
-    triggered = sorted(cable_final)
     if cable_ids:
         rows = [
             {"fiber_cable_id": cid, "route_network_element_id": el, "seq_no": n + 1}
-            for cid in triggered
-            if cable_final[cid] is not None
-            for n, el in enumerate(cable_final[cid])
+            for cid, walk in cable_final.items()
+            for n, el in enumerate(walk or [])
         ]
         out["rel_fiber_cable_to_route_element"] = (
-            "group",
-            triggered,
-            _arrow(
-                rows,
-                ["fiber_cable_id", "route_network_element_id", "seq_no"],
-                {"seq_no": "int32"},
-            ),
+            list(cable_final),
+            _arrow(rows, ["fiber_cable_id", *rel_cols], {"seq_no": "int32"}),
         )
     return out
 

@@ -35,19 +35,18 @@ exploit this by splitting one log at random points.
 from __future__ import annotations
 
 import os
+from collections import Counter
 from itertools import chain, islice
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from open_ftth_relational_projector_spark.events.reader import EventLog
 from open_ftth_relational_projector_spark.events.schemas import ENVELOPE_SCHEMA
 from open_ftth_relational_projector_spark.projections import project_all
 from open_ftth_relational_projector_spark.projections.core import slack_ends
-from open_ftth_relational_projector_spark.sinks.ddl import SCHEMA
 from open_ftth_relational_projector_spark.streaming.replay import fold_spec_registry
 from open_ftth_relational_projector_spark.streaming.incremental import (
-    GroupDelta,
-    TableDelta,
     affected_ids_from_rows,
     build_edge_context,
     md5_uuid,
@@ -216,43 +215,37 @@ def dehydrate(envelopes: DataFrame, sink) -> int:
     return watermark
 
 
-def apply_slack_delta(sink, delta: GroupDelta) -> None:
+def apply_slack_delta(sink, keys: list[str], rows) -> None:
     """Node-level re-aggregation of conduit_slack from the aux end set.
 
-    Replace touched equipments' end rows, then recount ONLY route nodes that
-    appear in the old or new end rows — the IVM form of the reference's
-    increment/decrement counters (ProjektorState.cs:473-512), including the
-    delete-at-zero behavior (:505-511).
+    Replace the end rows of equipments ``keys`` with ``rows``, then recount
+    ONLY route nodes that appear in the old or new end rows — the IVM form
+    of the reference's increment/decrement counters (ProjektorState.cs:
+    473-512), including the delete-at-zero behavior (:505-511): a touched
+    node with no end left is a key with no row.
     """
-    eq = delta.group_keys
-    if not eq:
+    if not keys:
         return
-    ph = ", ".join("?" for _ in eq)
-    old_nodes = set(
-        sink.fetch_df(
-            f'SELECT DISTINCT route_node_id FROM {SCHEMA}."_aux_slack_end" '
-            f"WHERE span_equipment_id IN ({ph})",
-            eq,
-        )["route_node_id"]
+    old = sink.lookup("_aux_slack_end", ["route_node_id"], "span_equipment_id", keys)
+    sink.replace_group("_aux_slack_end", keys, rows)
+    touched = {n for (n,) in old} | set(rows.column("route_node_id").to_pylist())
+    counts = Counter(
+        n
+        for (n,) in sink.lookup(
+            "_aux_slack_end", ["route_node_id"], "route_node_id", touched
+        )
     )
-    sink.replace_group("_aux_slack_end", eq, delta.rows)
-    new_nodes = set(delta.rows.column("route_node_id").to_pylist())
-    touched = sorted(old_nodes | new_nodes)
-    if not touched:
-        return
-    ph = ", ".join("?" for _ in touched)
-    counts = sink.fetch_df(
-        f'SELECT route_node_id, CAST(COUNT(*) AS INTEGER) AS number_of_ends '
-        f'FROM {SCHEMA}."_aux_slack_end" WHERE route_node_id IN ({ph}) '
-        f"GROUP BY route_node_id",
+    sink.replace_group(
+        "conduit_slack",
         touched,
+        pa.table(
+            {
+                "id": [md5_uuid(n) for n in counts],
+                "route_node_id": list(counts),
+                "number_of_ends": pa.array(list(counts.values()), pa.int32()),
+            }
+        ),
     )
-    if len(counts):
-        counts["id"] = counts["route_node_id"].map(md5_uuid)
-        sink.merge("conduit_slack", counts)
-    counted = set(counts["route_node_id"])
-    zero = [n for n in touched if n not in counted]
-    sink.delete_keys("conduit_slack", "route_node_id", zero)
 
 
 def _probe_collect(batch_envelopes: DataFrame, cap: int) -> list:
@@ -281,23 +274,15 @@ def _seq_chunks(batch_envelopes: DataFrame, cap: int):
         yield chunk
 
 
-def _write_deltas(sink, deltas: dict[str, TableDelta | GroupDelta]) -> None:
-    for table, delta in deltas.items():
-        if table == "_aux_slack_end":
-            apply_slack_delta(sink, delta)
-        elif isinstance(delta, GroupDelta):
-            sink.replace_group(table, delta.group_keys, delta.rows)
-        else:
-            sink.merge(table, delta.upserts)
-            sink.delete_keys(table, "id", delta.delete_keys)
-
-
 def _apply_driver_chunk(parsed: list[tuple[int, str, dict]], sink) -> None:
-    """Replay one chunk over the sink's current state and write its deltas.
+    """Replay one seq-ordered chunk over the sink's current state and write
+    each table's ``(keys, rows)`` with ``replace_group``.
 
     The replays need sink state == fold(events before the chunk); the
     caller guarantees it by applying non-overlapping chunks in seq order
     inside one transaction, so each chunk reads its predecessors' writes.
+    Every seed read comes before the chunk's first write, so nothing the
+    chunk adds is visible to an earlier event of the same chunk.
     """
     from open_ftth_relational_projector_spark.streaming.replay import (
         replay_lww_tables,
@@ -305,34 +290,19 @@ def _apply_driver_chunk(parsed: list[tuple[int, str, dict]], sink) -> None:
     )
 
     ids = affected_ids_from_rows(parsed)
-    edge_ctx = build_edge_context(parsed, ids, sink)
-    deltas: dict[str, TableDelta | GroupDelta] = {}
-    for table, (up, gone) in replay_lww_tables(parsed, ids, sink).items():
-        deltas[table] = TableDelta(upserts=up, delete_keys=gone)
-    for table, res in replay_rel_batch(parsed, ids, sink).items():
-        if res[0] == "keyed":
-            deltas[table] = TableDelta(upserts=res[1], delete_keys=res[2])
-        else:
-            deltas[table] = GroupDelta(group_keys=res[1], rows=res[2])
+    writes = build_edge_context(parsed, ids, sink)
+    writes.update(replay_lww_tables(parsed, ids, sink))
+    writes.update(replay_rel_batch(parsed, ids, sink))
     # spec registries are dimension streams — fold them EVERY chunk (a
     # spec-only chunk must still land in the aux registry for later
-    # placements to resolve against)
+    # chunks' placements to resolve against)
     for name, tbl in fold_spec_registry(parsed).items():
         sink.merge(name, tbl)
-    if edge_ctx is not None:
-        rr = edge_ctx.span_replay
-        deltas["span_equipment"] = TableDelta(
-            upserts=rr.span_upserts, delete_keys=rr.span_deletes
-        )
-        deltas["_aux_slack_end"] = GroupDelta(
-            group_keys=edge_ctx.all_eq, rows=rr.slack_rows
-        )
-        sink.append("_aux_affix_edge", edge_ctx.new_edges)
-        sink.append("_aux_root_segment", edge_ctx.new_registry)
-        sink.append("_aux_detach", edge_ctx.new_detaches)
-        sink.merge("_aux_span_state", rr.state_upserts)
-        sink.delete_keys("_aux_span_state", "id", rr.state_deletes)
-    _write_deltas(sink, deltas)
+    slack = writes.pop("_aux_slack_end", None)
+    for table, (keys, rows) in writes.items():
+        sink.replace_group(table, keys, rows)
+    if slack is not None:
+        apply_slack_delta(sink, *slack)
 
 
 def apply_batch(
@@ -377,7 +347,8 @@ def apply_batch(
         first_per_seq: dict = {}
         for r in probe_rows:
             first_per_seq.setdefault(r.seq, r)
-        chunks = iter([first_per_seq.values()])
+        # the one sort: every replay reads its chunk in seq order
+        chunks = iter([[first_per_seq[s] for s in sorted(first_per_seq)]])
     else:
         chunks = _seq_chunks(batch_envelopes, cap)
     first = parse_envelope_rows(next(chunks))
@@ -385,12 +356,13 @@ def apply_batch(
     batch_max = None
     sink.begin()
     try:
-        if first and min(s for s, _, _ in first) <= prev_wm:
+        if first and first[0][0] <= prev_wm:
             batch_max = _rebuild(full_envelopes, sink)
         else:
             for parsed in chain([first], map(parse_envelope_rows, chunks)):
                 # chunks arrive in seq order: the last one holds the batch max
-                batch_max = max((s for s, _, _ in parsed), default=batch_max)
+                if parsed:
+                    batch_max = parsed[-1][0]
                 _apply_driver_chunk(parsed, sink)
         if batch_id is not None:
             sink.set_meta("applied_batch", str(batch_id))

@@ -161,17 +161,6 @@ def test_simhash_similar_docs_close(docs):
     assert d13 < d15           # near dup closer than unrelated
 
 
-def test_cosine_similarity(spark):
-    df = spark.createDataFrame(
-        [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0]), ([1.0, 1.0], [1.0, 0.0])],
-        "a array<double>, b array<double>",
-    )
-    sims = [r["s"] for r in df.select(S.cosine(F.col("a"), F.col("b")).alias("s")).collect()]
-    assert abs(sims[0] - 1.0) < 1e-12
-    assert abs(sims[1]) < 1e-12
-    assert abs(sims[2] - 1 / math.sqrt(2)) < 1e-12
-
-
 def test_knn_bruteforce_exact(spark):
     vecs = [
         (0, [1.0, 0.0, 0.0]),

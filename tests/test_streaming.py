@@ -12,6 +12,7 @@ from __future__ import annotations
 import random
 import shutil
 import tempfile
+from collections import Counter
 
 import pytest
 
@@ -23,7 +24,11 @@ from open_ftth_relational_projector_spark.events.reader import EventLog
 from open_ftth_relational_projector_spark.events.schemas import ENVELOPE_SCHEMA
 from open_ftth_relational_projector_spark.projections import project_all
 from open_ftth_relational_projector_spark.sinks import DuckDBSink
-from open_ftth_relational_projector_spark.sinks.ddl import PROJECTION_TABLES
+from open_ftth_relational_projector_spark.sinks.ddl import (
+    PROJECTION_TABLES,
+    SCHEMA,
+    TABLE_COLUMNS,
+)
 from open_ftth_relational_projector_spark.streaming.runner import (
     ProjectionStream,
     apply_batch,
@@ -62,6 +67,27 @@ def expected_tables(envelopes):
     return {n: tables[n].toPandas() for n in PROJECTION_TABLES}
 
 
+# the 11 private aux tables the driver replay maintains
+AUX_TABLES = [t for t in TABLE_COLUMNS if t.startswith("_aux_")]
+
+
+def _rows(sink, table):
+    """A table's rows as a multiset (lists made hashable)."""
+    cols = ", ".join(f'"{c}"' for c, _ in TABLE_COLUMNS[table])
+    rows = sink.con.execute(f'SELECT {cols} FROM {SCHEMA}."{table}"').fetchall()
+    return Counter(
+        tuple(tuple(v) if isinstance(v, list) else v for v in row) for row in rows
+    )
+
+
+@pytest.fixture(scope="module")
+def expected_aux(envelopes):
+    """The aux tables dehydrate writes for the whole log."""
+    sink = DuckDBSink()
+    dehydrate(envelopes, sink)
+    return {t: _rows(sink, t) for t in AUX_TABLES}
+
+
 def _stream_split(spark, envelopes, bounds, sink):
     dehydrate(envelopes.filter(f"seq <= {bounds[0]}"), sink)
     for i in range(len(bounds) - 1):
@@ -73,7 +99,7 @@ def _stream_split(spark, envelopes, bounds, sink):
 
 @pytest.mark.parametrize("seed,n_cuts", [(42, 3), (7, 5), (1234, 2)])
 def test_streaming_equivalence_random_split(
-    spark, envelopes, expected_tables, seed, n_cuts
+    spark, envelopes, expected_tables, expected_aux, seed, n_cuts
 ):
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     rng = random.Random(seed)
@@ -82,6 +108,10 @@ def test_streaming_equivalence_random_split(
     sink = DuckDBSink()
     _stream_split(spark, envelopes, bounds, sink)
     _assert_sink_matches(sink, expected_tables)
+    # every aux write of the driver replay agrees with the Spark fold
+    assert len(AUX_TABLES) == 11
+    for table in AUX_TABLES:
+        assert _rows(sink, table) == expected_aux[table], table
 
 
 def test_streaming_equivalence_per_event_tail(spark, envelopes, expected_tables):
@@ -125,6 +155,95 @@ def test_sink_to_arrow_failure_propagates():
     with pytest.raises(RuntimeError, match="toArrow failed"):
         sink.overwrite("work_task", frame)
     assert frame.pandas_calls == 0
+
+
+def test_sink_replace_group_is_the_one_keyed_write():
+    """``replace_group(table, keys, rows)`` deletes the rows of ``keys`` on
+    the table's key column (group key, else single primary key) and
+    inserts ``rows``: a key with no new row is a delete, other keys'
+    rows stay, and ``merge`` replaces its rows' own keys."""
+    import pyarrow as pa
+
+    sink = DuckDBSink()
+    sink.ensure_schema()
+
+    def slack(ids, nodes, ends):
+        return pa.table(
+            {
+                "id": ids,
+                "route_node_id": nodes,
+                "number_of_ends": pa.array(ends, pa.int32()),
+            }
+        )
+
+    sink.append("conduit_slack", slack(["a", "b", "c"], ["n1", "n2", "n3"], [1, 2, 3]))
+    # keyed on route_node_id, not id: n1 updated, n2 deleted, n3 kept
+    sink.replace_group("conduit_slack", ["n1", "n2"], slack(["a2"], ["n1"], [5]))
+    assert _rows(sink, "conduit_slack") == Counter(
+        [("a2", "n1", 5), ("c", "n3", 3)]
+    )
+    sink.merge("conduit_slack", slack(["c2"], ["n3"], [4]))
+    assert _rows(sink, "conduit_slack") == Counter(
+        [("a2", "n1", 5), ("c2", "n3", 4)]
+    )
+
+    def rel(interests, elements):
+        return pa.table(
+            {
+                "interest_id": interests,
+                "route_network_element_id": elements,
+                "seq_no": pa.array(range(1, len(elements) + 1), pa.int32()),
+            }
+        )
+
+    table = "rel_interest_to_route_element"
+    sink.append(table, rel(["i1", "i1", "i2", "i3"], ["e1", "e2", "e3", "e4"]))
+    # i1 regrouped, i2 has no new row (deleted), i3 untouched
+    sink.replace_group(table, ["i1", "i2"], rel(["i1"], ["e9"]))
+    assert _rows(sink, table) == Counter([("i1", "e9", 1), ("i3", "e4", 4)])
+    # no keys: a pure insert
+    sink.replace_group(table, [], rel(["i4"], ["e5"]))
+    assert _rows(sink, table)[("i4", "e5", 1)] == 1
+    assert sink.lookup(table, ["interest_id", "seq_no"], "interest_id", ["i3", "x"]) == [
+        ("i3", 4)
+    ]
+
+
+def test_sink_lookup_returns_null_as_none():
+    """The driver replay's one read: NULL comes back as None in numeric,
+    boolean and list columns, never as NaN."""
+    import pyarrow as pa
+
+    sink = DuckDBSink()
+    sink.ensure_schema()
+    sink.append(
+        "_aux_struct_spec",
+        pa.table(
+            {
+                "struct_spec_id": ["s1", "s2"],
+                "outer_diameter": pa.array([40, None], pa.int32()),
+            }
+        ),
+    )
+    sink.append(
+        "_aux_walk",
+        pa.table(
+            {
+                "interest_id": ["i1", "i2"],
+                "seq": pa.array([1, 2], pa.int64()),
+                "walk": pa.array([["e1", "e2"], None], pa.list_(pa.string())),
+            }
+        ),
+    )
+    assert sorted(
+        sink.lookup("_aux_struct_spec", ["struct_spec_id", "outer_diameter"],
+                    "struct_spec_id", {"s1", "s2"})
+    ) == [("s1", 40), ("s2", None)]
+    walks = dict(
+        sink.lookup("_aux_walk", ["interest_id", "walk"], "interest_id", ["i1", "i2"])
+    )
+    assert list(walks["i1"]) == ["e1", "e2"] and walks["i2"] is None
+    assert sink.lookup("_aux_walk", ["interest_id"], "interest_id", []) == []
 
 
 def test_batch_id_replay_skipped(spark, envelopes, expected_tables):
@@ -382,16 +501,19 @@ def test_edge_context_resolves_against_sink_registry(spark):
           "newUtilityHopList": [{"parentAffixes": [{"spanSegmentId": "seg-p2"}]}]}),
     ]
     ids = {"span": ["c1", "c2"], "cable": ["c1", "c2"]}
-    ctx = build_edge_context(parsed, ids, sink)
+    writes = build_edge_context(parsed, ids, sink)
+    _, new_edges = writes["_aux_affix_edge"]
     resolved = sorted(
         zip(
-            ctx.new_edges.column("child_id").to_pylist(),
-            ctx.new_edges.column("parent_id").to_pylist(),
+            new_edges.column("child_id").to_pylist(),
+            new_edges.column("parent_id").to_pylist(),
         )
     )
     # c1 -> p1 resolves; c2's parent was tombstoned before the affix
     assert resolved == [("c1", "p1")]
-    assert set(ctx.all_eq) == {"c1", "c2", "p1"}
+    # the fold keys (touched spans ∪ affix parents) key the slack-end write
+    all_eq, _ = writes["_aux_slack_end"]
+    assert set(all_eq) == {"c1", "c2", "p1"}
 
 
 def test_spec_only_batch_feeds_later_placements(spark, envelopes, expected_tables):
