@@ -70,10 +70,11 @@ CABLE_TRIGGER_TYPES = [
 def parse_envelope_rows(rows) -> list[tuple[int, str, dict]]:
     """(seq, event_type, payload-json-string) rows → parsed tuples — the
     ONE definition of the driver-side batch shape (apply_batch's size-gate
-    probe routes through it)."""
+    probe routes through it). Rows are unpacked by position: a Spark
+    ``Row``'s field access by name costs a lookup per field."""
     import json
 
-    return [(r.seq, r.event_type, json.loads(r.payload)) for r in rows]
+    return [(seq, etype, json.loads(payload)) for seq, etype, payload in rows]
 
 
 def _payload_get(payload: dict, dotted: str):
@@ -172,8 +173,8 @@ def build_edge_context(
     all APPEND-ONLY functions of the log (an edge's parent is frozen at
     edge time; registry rows and detaches are events), so the sink keeps
     them as aux tables: resolve only the chunk's new edges, then read back
-    just the touched parents' edges and their children's detaches — every
-    lookup indexed and ∝ batch neighborhood, zero Spark jobs. Their new
+    just the touched parents' edges and their children's detaches — one
+    key-list lookup (a table scan) per read, zero Spark jobs. Their new
     rows come back with no keys (appends); ``replay_span_batch`` adds the
     span state, ``span_equipment`` and ``_aux_slack_end`` writes, the last
     keyed by every fold key (touched spans ∪ their affix parents).

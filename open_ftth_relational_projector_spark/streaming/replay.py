@@ -12,8 +12,10 @@ Each replay returns ``table → (keys, rows)``: the sink deletes the rows of
 ``keys`` and inserts ``rows`` (``DuckDBSink.replace_group``). A key with
 no row is a delete.
 
-Scale shape: every seed is one indexed ``sink.lookup`` ∝ batch; the replay
-is O(batch events); nothing scans the log. A batch that overlaps the
+Scale shape: every seed is one ``sink.lookup`` of the batch's keys — one
+scan of the table per chunk (DuckDB plans the key-list semi-join as a full
+table scan), so its cost grows with sink size; the replay is O(batch
+events); nothing scans the log. A batch that overlaps the
 watermark is not replayed: it rebuilds every table, these aux tables
 included, from the accumulated log (runner.compute_deltas).
 
@@ -213,7 +215,7 @@ def replay_span_batch(
     """
     events = [e for e in parsed if e[1] in SPAN_EVENT_TYPES]
 
-    # -- seed state + registries (∝ batch, indexed) -------------------------
+    # -- seed state + registries (one scan per table) ----------------------
     states = {
         row[0]: dict(zip(STATE_COLS, row))
         for row in sink.lookup("_aux_span_state", STATE_COLS, "id", all_eq)
@@ -415,7 +417,7 @@ def replay_lww_tables(
     """Driver-side replay of the join-free LWW tables for one chunk.
 
     The sink's public table IS the full state for these tables — seed the
-    touched ids' rows (indexed, ∝ batch), apply the chunk's events in seq
+    touched ids' rows (one table scan each), apply the chunk's events in seq
     order, return (touched ids, arrow rows) per table. Zero Spark jobs.
     """
     out: dict[str, tuple[list[str], object]] = {}
@@ -464,7 +466,7 @@ def replay_rel_batch(
 
     One pass over the chunk's events in seq order maintains the registries
     (specs, container→node relation, walk versions, cable placements) —
-    seeded from the sink aux tables (∝ batch, indexed) — so every lookup a
+    seeded from the sink aux tables (one scan per table) — so every lookup a
     projection expresses as an as-of join resolves against exactly the
     registry state at that event's position. Returns (keys, arrow rows)
     for node_container, service_termination and the two rel_* tables.
@@ -511,7 +513,7 @@ def replay_rel_batch(
               placement_interests):
         s.discard(None)
 
-    # ---- seeds (all indexed point lookups, ∝ batch) -----------------------
+    # ---- seeds (one key-list lookup, a table scan, per table) -------------
     nc_specs = {
         k: (name, cat)
         for k, name, cat in sink.lookup(

@@ -4,10 +4,13 @@ The reference's Worker (Worker.cs:22-48) replays all history with writes
 suppressed, snapshots every table (truncate + COPY), then polls every
 2000 ms applying per-event DML. Spark-first:
 
-* ``dehydrate`` — batch job: ``compute_deltas`` runs all 8 projections,
-  the slack-end pre-aggregation and the aux seed tables over the full log
-  in Spark; every table is overwritten and the watermark recorded in one
-  sink transaction (T2 bootstrap).
+* ``dehydrate`` — the fold of the full log, in one sink transaction (T2
+  bootstrap). A log that fits the bounded probe empties every table and
+  replays on the driver through the same fold a catch-up batch runs (the
+  reference's own bootstrap, Worker.cs:22-48); a larger one takes
+  ``compute_deltas``, the Spark fold of all 8 projections, the slack-end
+  pre-aggregation and the aux seed tables, and overwrites every table.
+  Either way the watermark is the log's max seq.
 * ``apply_batch`` — one micro-batch of incremental maintenance, wrapped in
   a sink transaction keyed by batch_id (T5: re-delivered batches are
   skipped). Two paths: a batch above the watermark replays on the driver
@@ -19,11 +22,15 @@ suppressed, snapshots every table (truncate + COPY), then polls every
   ``readStream`` over an envelope directory, ``foreachBatch`` into
   ``apply_batch``, default trigger processingTime=2s matching the
   reference's poll loop (Worker.cs:47), ``availableNow`` for drain-and-stop
-  runs. Bronze accumulation is deduped on ``seq`` so a crash between bronze
-  append and sink commit re-applies cleanly. The batch itself is deduped
-  inside ``apply_batch``: driver-side on the collected probe rows, in Spark
-  by the chunk source — a probe-sized batch costs no shuffle, and no
-  driver-path job reads the accumulated log.
+  runs. A trigger probes its batch once: an empty probe ends it, a
+  probe-sized batch is appended to bronze by the driver from the probe
+  rows and applied from them — one Spark job per trigger. Bronze is read
+  only by an overlapping batch's rebuild, whose fold counts each ``seq``
+  once, so a crash between bronze append and sink commit re-applies
+  cleanly. The batch itself is deduped inside ``apply_batch``:
+  driver-side on the collected probe rows, in Spark by the chunk source —
+  a probe-sized batch costs no shuffle, and no driver-path job reads the
+  accumulated log.
 
 Batch-order independence: the final sink state depends only on the set of
 applied events, not the batch boundaries — the driver replay folds events
@@ -35,22 +42,36 @@ exploit this by splitting one log at random points.
 from __future__ import annotations
 
 import os
+import uuid
 from collections import Counter
+from collections.abc import Callable
 from itertools import chain, islice
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from open_ftth_relational_projector_spark.events.reader import EventLog
 from open_ftth_relational_projector_spark.events.schemas import ENVELOPE_SCHEMA
 from open_ftth_relational_projector_spark.projections import project_all
 from open_ftth_relational_projector_spark.projections.core import slack_ends
+from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
 from open_ftth_relational_projector_spark.streaming.replay import fold_spec_registry
 from open_ftth_relational_projector_spark.streaming.incremental import (
     affected_ids_from_rows,
     build_edge_context,
     md5_uuid,
 )
+
+# every table the fold writes (the 8 projections, the slack-end set and
+# the aux seed tables) → its sink columns; the meta table is bookkeeping
+_FOLD_TABLES = {
+    name: [c for c, _ in cols]
+    for name, cols in TABLE_COLUMNS.items()
+    if name != "_projector_meta"
+}
+_BRONZE_SCHEMA = to_arrow_schema(ENVELOPE_SCHEMA)
 
 
 def aux_seed_frames(
@@ -146,7 +167,8 @@ def compute_deltas(envelopes: DataFrame) -> tuple[dict[str, "pyarrow.Table"], in
     8 projections, the slack-end pre-aggregation and the aux seed tables)
     as Arrow in sink column order, and the log's max seq (0 if empty). It
     returns all rows of each table — the delta against an empty sink — so
-    a caller applies it by overwriting.
+    a caller applies it by overwriting. A seq that occurs in several rows
+    is folded once, as on the driver path.
 
     The projection plans → Arrow step fans out concurrently: the tables are
     independent jobs over the shared cached log, span state and edge set.
@@ -158,9 +180,8 @@ def compute_deltas(envelopes: DataFrame) -> tuple[dict[str, "pyarrow.Table"], in
     )
     from open_ftth_relational_projector_spark.plans.concurrency import run_concurrent
     from open_ftth_relational_projector_spark.sinks.duckdb_sink import _to_arrow
-    from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
 
-    log = EventLog.from_envelopes(envelopes).persisted()
+    log = EventLog.from_envelopes(envelopes.dropDuplicates(["seq"])).persisted()
     state = _span_state(log).persist()
     state.count()  # prime the shared fold once, before the fan-out
     # one edge fold feeds conduit_slack, the slack-end aux set, AND the aux
@@ -172,9 +193,7 @@ def compute_deltas(envelopes: DataFrame) -> tuple[dict[str, "pyarrow.Table"], in
     tables.update(aux_seed_frames(log, state=state, edges=edges))
     arrow = run_concurrent(
         {
-            name: (
-                lambda d=df, c=[col for col, _ in TABLE_COLUMNS[name]]: _to_arrow(d, c)
-            )
+            name: (lambda d=df, c=_FOLD_TABLES[name]: _to_arrow(d, c))
             for name, df in tables.items()
         }
     )
@@ -187,11 +206,13 @@ def compute_deltas(envelopes: DataFrame) -> tuple[dict[str, "pyarrow.Table"], in
     return arrow, int(row[0]) if row[0] is not None else 0
 
 
-def _rebuild(envelopes: DataFrame, sink) -> int:
+def _rebuild(envelopes: DataFrame | Callable[[], DataFrame], sink) -> int:
     """Overwrite every projection and aux table with the fold of
-    ``envelopes``, inside the caller's sink transaction. Returns the log's
-    max seq."""
-    tables, max_seq = compute_deltas(envelopes)
+    ``envelopes`` (a frame, or a thunk that builds it), inside the caller's
+    sink transaction. Returns the log's max seq."""
+    tables, max_seq = compute_deltas(
+        envelopes() if callable(envelopes) else envelopes
+    )
     for name, table in tables.items():
         sink.overwrite(name, table)
     return max_seq
@@ -200,13 +221,30 @@ def _rebuild(envelopes: DataFrame, sink) -> int:
 def dehydrate(envelopes: DataFrame, sink) -> int:
     """Full replay → bulk snapshot (T2 phase 1). Returns the watermark seq.
 
-    Every table and the watermark are written in one sink transaction, so
-    a failed dehydrate leaves the sink as it was.
+    The log is sized with the bounded probe ``apply_batch`` gates on. A log
+    that fits empties every projection and aux table and replays on the
+    driver as one chunk over the empty sink — the fold catch-up runs, as
+    in the reference (Worker.cs:22-48); a larger one is overwritten with
+    the Spark fold, ``compute_deltas``. Every table and the watermark are
+    written in one sink transaction, so a failed dehydrate leaves the sink
+    as it was.
     """
+    from open_ftth_relational_projector_spark.streaming.incremental import (
+        MAX_DRIVER_BATCH_ROWS,
+    )
+
+    probe_rows = _probe_collect(envelopes, MAX_DRIVER_BATCH_ROWS)
     sink.ensure_schema()
     sink.begin()
     try:
-        watermark = _rebuild(envelopes, sink)
+        if len(probe_rows) <= MAX_DRIVER_BATCH_ROWS:
+            for name, cols in _FOLD_TABLES.items():
+                sink.overwrite(name, pa.table({c: [] for c in cols}))
+            parsed = _probe_chunk(probe_rows)
+            _apply_driver_chunk(parsed, sink)
+            watermark = parsed[-1][0] if parsed else 0
+        else:
+            watermark = _rebuild(envelopes, sink)
         sink.set_meta("watermark", str(watermark))
         sink.commit()
     except Exception:
@@ -259,6 +297,20 @@ def _probe_collect(batch_envelopes: DataFrame, cap: int) -> list:
     )
 
 
+def _probe_chunk(probe_rows: list) -> list[tuple[int, str, dict]]:
+    """A probe-sized batch as its one parsed chunk: the first row per seq,
+    in seq order — the one sort; every replay reads its chunk in seq
+    order."""
+    from open_ftth_relational_projector_spark.streaming.incremental import (
+        parse_envelope_rows,
+    )
+
+    first_per_seq: dict = {}
+    for row in probe_rows:
+        first_per_seq.setdefault(row[0], row)
+    return parse_envelope_rows([first_per_seq[s] for s in sorted(first_per_seq)])
+
+
 def _seq_chunks(batch_envelopes: DataFrame, cap: int):
     """Chunk source for a batch the probe found oversized: the batch,
     deduped on seq, streamed to the driver in seq order ``cap`` rows at a
@@ -306,10 +358,11 @@ def _apply_driver_chunk(parsed: list[tuple[int, str, dict]], sink) -> None:
 
 
 def apply_batch(
-    full_envelopes: DataFrame,
+    full_envelopes: DataFrame | Callable[[], DataFrame],
     batch_envelopes: DataFrame,
     sink,
     batch_id: int | None = None,
+    probe_rows: list | None = None,
 ) -> bool:
     """Apply one micro-batch incrementally. Returns False if skipped
     (already-applied batch_id — T5 exactly-once).
@@ -326,7 +379,11 @@ def apply_batch(
       first chunk shows the overlap, every table is overwritten with
       ``compute_deltas(full_envelopes)``, dehydrate's Spark fold, and no
       further chunk is read. The watermark becomes the larger of its old
-      value and the highest seq in ``full_envelopes``.
+      value and the highest seq in ``full_envelopes``, which may be a
+      zero-argument callable: it is called only here.
+
+    ``probe_rows`` is the batch's ``_probe_collect`` result when the
+    caller already holds it, so the batch is not probed twice.
 
     Either path runs in one sink transaction, so a failed batch leaves the
     sink unchanged; ``batch_id`` and the watermark are written at commit.
@@ -342,16 +399,13 @@ def apply_batch(
     )
 
     cap = MAX_DRIVER_BATCH_ROWS
-    probe_rows = _probe_collect(batch_envelopes, cap)
+    if probe_rows is None:
+        probe_rows = _probe_collect(batch_envelopes, cap)
     if len(probe_rows) <= cap:
-        first_per_seq: dict = {}
-        for r in probe_rows:
-            first_per_seq.setdefault(r.seq, r)
-        # the one sort: every replay reads its chunk in seq order
-        chunks = iter([[first_per_seq[s] for s in sorted(first_per_seq)]])
+        chunks = iter([_probe_chunk(probe_rows)])
     else:
-        chunks = _seq_chunks(batch_envelopes, cap)
-    first = parse_envelope_rows(next(chunks))
+        chunks = map(parse_envelope_rows, _seq_chunks(batch_envelopes, cap))
+    first = next(chunks)
     prev_wm = int(sink.get_meta("watermark") or 0)
     batch_max = None
     sink.begin()
@@ -359,7 +413,7 @@ def apply_batch(
         if first and first[0][0] <= prev_wm:
             batch_max = _rebuild(full_envelopes, sink)
         else:
-            for parsed in chain([first], map(parse_envelope_rows, chunks)):
+            for parsed in chain([first], chunks):
                 # chunks arrive in seq order: the last one holds the batch max
                 if parsed:
                     batch_max = parsed[-1][0]
@@ -373,6 +427,19 @@ def apply_batch(
         sink.rollback()
         raise
     return True
+
+
+def _append_bronze(rows: list, bronze_dir: str) -> None:
+    """Append probe rows to bronze as one parquet file with
+    ENVELOPE_SCHEMA's types, written under a dot-prefixed name (which
+    Spark's reader skips) and renamed into place, so a reader sees the
+    whole file or none of it."""
+    table = pa.table(dict(zip(_BRONZE_SCHEMA.names, zip(*rows))), schema=_BRONZE_SCHEMA)
+    os.makedirs(bronze_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(bronze_dir, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(bronze_dir, name))
 
 
 class ProjectionStream:
@@ -404,19 +471,31 @@ class ProjectionStream:
         self.max_files_per_trigger = max_files_per_trigger
         self.query = None
 
+    def _bronze(self) -> DataFrame:
+        # a crash between bronze append and sink commit leaves a batch in
+        # bronze twice; the fold counts each seq once. The pinned schema
+        # spares a parquet footer read per file.
+        return self.spark.read.schema(ENVELOPE_SCHEMA).parquet(self.bronze_dir)
+
     def _process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch_df.write.mode("append").parquet(self.bronze_dir)
-        # seq-dedup guards the crash window between append and sink commit;
-        # the pinned schema spares a parquet footer read per batch. The
-        # batch is deduped inside apply_batch.
-        full = (
-            self.spark.read.schema(ENVELOPE_SCHEMA)
-            .parquet(self.bronze_dir)
-            .dropDuplicates(["seq"])
+        """One trigger: probe the batch; append it to bronze before the
+        sink commit — from the probe rows when it fits, else in Spark —
+        and apply it. Bronze is read only if the batch overlaps the
+        watermark. The batch is deduped inside apply_batch."""
+        from open_ftth_relational_projector_spark.streaming.incremental import (
+            MAX_DRIVER_BATCH_ROWS,
         )
-        apply_batch(full, batch_df, self.sink, batch_id=batch_id)
+
+        probe_rows = _probe_collect(batch_df, MAX_DRIVER_BATCH_ROWS)
+        if not probe_rows:
+            return
+        if len(probe_rows) <= MAX_DRIVER_BATCH_ROWS:
+            _append_bronze(probe_rows, self.bronze_dir)
+        else:
+            batch_df.write.mode("append").parquet(self.bronze_dir)
+        apply_batch(
+            self._bronze, batch_df, self.sink, batch_id=batch_id, probe_rows=probe_rows
+        )
 
     def start(self, available_now: bool = False, trigger_seconds: float = 2.0):
         reader = self.spark.readStream.schema(ENVELOPE_SCHEMA)

@@ -9,9 +9,11 @@ its per-event DML.
 
 from __future__ import annotations
 
+import os
 import random
 import shutil
 import tempfile
+import uuid
 from collections import Counter
 
 import pytest
@@ -20,6 +22,7 @@ from open_ftth_relational_projector_spark.events.generator import (
     generate,
     to_envelope_rows,
 )
+from open_ftth_relational_projector_spark.events.oracle import FoldOracle
 from open_ftth_relational_projector_spark.events.reader import EventLog
 from open_ftth_relational_projector_spark.events.schemas import ENVELOPE_SCHEMA
 from open_ftth_relational_projector_spark.projections import project_all
@@ -54,8 +57,13 @@ def _assert_sink_matches(sink, expected):
 
 
 @pytest.fixture(scope="module")
-def envelopes(spark):
-    rows = to_envelope_rows(generate(seed=11, scale=4))
+def events():
+    return generate(seed=11, scale=4)
+
+
+@pytest.fixture(scope="module")
+def envelopes(spark, events):
+    rows = to_envelope_rows(events)
     df = spark.createDataFrame(rows, ENVELOPE_SCHEMA).cache()
     df.count()
     return df
@@ -942,5 +950,202 @@ def test_projection_stream_checkpoint_restart(spark, envelopes, expected_tables)
         # continue, they don't reset to 0 and re-apply run 1's data)
         assert sink.get_meta("applied_batch") != applied_before
         _assert_sink_matches(sink, expected_tables)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _oracle_rows(events):
+    """The 8 public tables of the Python fold oracle, as multisets."""
+    oracle = FoldOracle()
+    oracle.run(events)
+    return {name: Counter(rows) for name, rows in oracle.tables().items()}
+
+
+def _public_rows(sink, table):
+    """A public table's rows in the oracle's columns (it omits
+    conduit_slack's id, a hash of route_node_id)."""
+    cols = ", ".join(
+        f'"{c}"' for c, _ in TABLE_COLUMNS[table] if (table, c) != ("conduit_slack", "id")
+    )
+    return Counter(
+        sink.con.execute(f'SELECT {cols} FROM {SCHEMA}."{table}"').fetchall()
+    )
+
+
+def _assert_sink_matches_oracle(sink, oracle):
+    for table in PROJECTION_TABLES:
+        assert _public_rows(sink, table) == oracle[table], table
+
+
+@pytest.mark.parametrize(
+    "seed,dup_every", [(3, None), (17, None), (29, None), (41, 7)],
+    ids=["seed3", "seed17", "seed29", "seed41-every7th-twice"],
+)
+def test_dehydrate_gate_both_ways(spark, monkeypatch, seed, dup_every):
+    """dehydrate sizes the log with the bounded probe: a log that fits is
+    folded on the driver over emptied tables, a larger one by the Spark
+    fold. Forced each way (the cap left alone, then monkeypatched below the
+    log size), both leave all 19 fold tables and the watermark equal as
+    multisets, and the 8 public tables equal the Python fold oracle — also
+    for a log holding every ``dup_every``-th row twice."""
+    import open_ftth_relational_projector_spark.streaming.incremental as I
+    import open_ftth_relational_projector_spark.streaming.runner as R
+
+    events = generate(seed=seed, scale=3)
+    rows = to_envelope_rows(events)
+    if dup_every:
+        rows += rows[::dup_every]
+    env = spark.createDataFrame(rows, ENVELOPE_SCHEMA).cache()
+    real_fold, folds = R.compute_deltas, []
+
+    def counted_fold(full):
+        folds.append(full)
+        return real_fold(full)
+
+    monkeypatch.setattr(R, "compute_deltas", counted_fold)
+    driver = DuckDBSink()
+    assert dehydrate(env, driver) == len(events)
+    assert folds == []
+    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", len(rows) - 1)
+    spark_fold = DuckDBSink()
+    assert dehydrate(env, spark_fold) == len(events)
+    assert len(folds) == 1
+
+    assert len(TABLE_COLUMNS) == 20  # the 19 fold tables + the meta table
+    for table in TABLE_COLUMNS:
+        assert _rows(driver, table) == _rows(spark_fold, table), table
+    oracle = _oracle_rows(events)
+    _assert_sink_matches_oracle(driver, oracle)
+    _assert_sink_matches_oracle(spark_fold, oracle)
+    env.unpersist()
+
+
+def test_dehydrate_empty_log(spark):
+    """An empty log takes the driver fold: every table is emptied and the
+    watermark is 0."""
+    sink = DuckDBSink()
+    envelopes = spark.createDataFrame(to_envelope_rows(generate(seed=3, scale=1)), ENVELOPE_SCHEMA)
+    dehydrate(envelopes, sink)
+    assert dehydrate(spark.createDataFrame([], ENVELOPE_SCHEMA), sink) == 0
+    assert sink.get_meta("watermark") == "0"
+    for table in TABLE_COLUMNS:
+        if table != "_projector_meta":
+            assert sink.read_table(table).empty, table
+
+
+def _jobs_run(spark, fn):
+    """The number of Spark jobs ``fn`` runs, counted under a job group of
+    its own."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4()}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spark_jobs_per_dehydrate_and_trigger(spark, envelopes, expected_tables):
+    """A driver-sized dehydrate runs at most 2 Spark jobs (the Spark fold
+    ran 92 on perfbench's log), and a probe-sized catch-up trigger exactly
+    1: the probe. The probe's ``limit`` scans one partition, then up to 4
+    more, so a log of 4 partitions — perfbench's on a 4-core host — takes
+    2 jobs; a landed file is one partition."""
+    max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
+    cut = max_seq // 2
+    tmp = tempfile.mkdtemp(prefix="ofrp_jobs_")
+    try:
+        sink = DuckDBSink()
+        prefix = envelopes.filter(f"seq <= {cut}").coalesce(4)
+        assert _jobs_run(spark, lambda: dehydrate(prefix, sink)) <= 2
+        path = write_envelope_batch(envelopes.filter(f"seq > {cut}"), f"{tmp}/in", 0)
+        batch = spark.read.schema(ENVELOPE_SCHEMA).json(path)
+        stream = ProjectionStream(spark, f"{tmp}/in", sink, f"{tmp}/bronze", f"{tmp}/cp")
+        assert _jobs_run(spark, lambda: stream._process(batch, 0)) == 1
+        _assert_sink_matches(sink, expected_tables)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_driver_written_bronze(spark, envelopes, events):
+    """A probe-sized trigger appends its rows to bronze from the driver:
+    one parquet file that Spark reads back with ENVELOPE_SCHEMA as the
+    batch, with no dot-prefixed temp file left behind; an empty trigger
+    writes nothing. A sink failure at commit, after the append, leaves the
+    rows in bronze and the sink unchanged, and the re-run trigger — the
+    stream's retry after a crash in that window — yields the oracle
+    tables. Bronze is read only by an overlapping batch's rebuild, which
+    folds it (duplicates included) to the oracle tables again."""
+    max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
+    cut, mid = max_seq // 3, 2 * max_seq // 3
+    oracle = _oracle_rows(events)
+    tmp = tempfile.mkdtemp(prefix="ofrp_bronze_")
+    landing, bronze = f"{tmp}/in", f"{tmp}/bronze"
+    try:
+        sink = DuckDBSink()
+        prefix = envelopes.filter(f"seq <= {cut}")
+        dehydrate(prefix, sink)
+        prefix.write.parquet(bronze)
+        stream = ProjectionStream(spark, landing, sink, bronze, f"{tmp}/cp")
+        real_bronze, bronze_reads = stream._bronze, []
+
+        def counted_bronze():
+            bronze_reads.append(1)
+            return real_bronze()
+
+        stream._bronze = counted_bronze
+
+        def parts():
+            return sorted(f for f in os.listdir(bronze) if f.endswith(".parquet"))
+
+        def dot_files():
+            return [f for f in os.listdir(bronze) if f.startswith(".")
+                    and not f.endswith(".crc")]
+
+        def landed(lo, hi, n):
+            path = write_envelope_batch(
+                envelopes.filter(f"seq > {lo} AND seq <= {hi}"), landing, n
+            )
+            return spark.read.schema(ENVELOPE_SCHEMA).json(path)
+
+        spark_parts = parts()
+        first = landed(cut, mid, 0)
+        stream._process(first, 0)
+        (new,) = set(parts()) - set(spark_parts)
+        assert dot_files() == []
+        back = spark.read.schema(ENVELOPE_SCHEMA).parquet(f"{bronze}/{new}")
+        assert Counter(back.collect()) == Counter(first.collect())
+
+        stream._process(spark.createDataFrame([], ENVELOPE_SCHEMA), 1)
+        assert len(parts()) == len(spark_parts) + 1
+        assert sink.get_meta("applied_batch") == "0"
+
+        second = landed(mid, max_seq, 1)
+        real_commit = sink.commit
+
+        def failing_commit():
+            raise RuntimeError("sink failure at commit")
+
+        sink.commit = failing_commit
+        with pytest.raises(RuntimeError, match="sink failure at commit"):
+            stream._process(second, 2)
+        sink.commit = real_commit
+        assert sink.get_meta("watermark") == str(mid)
+        assert len(parts()) == len(spark_parts) + 2
+        everything = spark.read.schema(ENVELOPE_SCHEMA).parquet(bronze)
+        assert everything.filter(f"seq > {mid}").count() == max_seq - mid
+
+        stream._process(second, 2)
+        assert sink.get_meta("watermark") == str(max_seq)
+        _assert_sink_matches_oracle(sink, oracle)
+        assert bronze_reads == []
+
+        # re-delivered: overlaps the watermark, rebuilds from bronze
+        stream._process(first, 3)
+        assert bronze_reads == [1]
+        assert sink.get_meta("watermark") == str(max_seq)
+        _assert_sink_matches_oracle(sink, oracle)
+        assert dot_files() == []
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
