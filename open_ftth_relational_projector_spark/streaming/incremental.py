@@ -11,7 +11,7 @@ streaming/replay.py produce the rest. Every write is ``table → (keys,
 rows)`` for ``DuckDBSink.replace_group``, and every seed read is one
 ``DuckDBSink.lookup``. No job reads the accumulated log. (A batch that
 overlaps the watermark is not maintained incrementally: it rebuilds every
-table from the accumulated log through dehydrate's fold,
+table from the accumulated log through the Spark fold,
 ``runner.compute_deltas``.)
 
 conduit_slack — the one cross-entity aggregate — is maintained through the

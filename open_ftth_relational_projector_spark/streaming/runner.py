@@ -5,19 +5,19 @@ suppressed, snapshots every table (truncate + COPY), then polls every
 2000 ms applying per-event DML. Spark-first:
 
 * ``dehydrate`` — the fold of the full log, in one sink transaction (T2
-  bootstrap). A log that fits the bounded probe empties every table and
-  replays on the driver through the same fold a catch-up batch runs (the
-  reference's own bootstrap, Worker.cs:22-48); a larger one takes
-  ``compute_deltas``, the Spark fold of all 8 projections, the slack-end
-  pre-aggregation and the aux seed tables, and overwrites every table.
-  Either way the watermark is the log's max seq.
+  bootstrap): every table is emptied and the log replays on the driver
+  through the fold a catch-up batch runs, as the reference dehydrates by
+  running its catch-up fold (Worker.cs:22-48) — as one chunk when it fits
+  the bounded probe, else in seq-ordered chunks. The watermark is the
+  log's max seq.
 * ``apply_batch`` — one micro-batch of incremental maintenance, wrapped in
   a sink transaction keyed by batch_id (T5: re-delivered batches are
   skipped). Two paths: a batch above the watermark replays on the driver
   over sink-seeded state (streaming/replay.py), in seq-ordered chunks when
   it outgrows the probe; a batch that overlaps the watermark rebuilds
-  every table from the accumulated log through dehydrate's fold, which is
-  idempotent by construction — re-applying any batch yields the same rows.
+  every table from the accumulated log through ``compute_deltas``, the
+  Spark fold, which is idempotent by construction — re-applying any batch
+  yields the same rows.
 * ``ProjectionStream`` — Structured Streaming wiring: file-source
   ``readStream`` over an envelope directory, ``foreachBatch`` into
   ``apply_batch``, default trigger processingTime=2s matching the
@@ -46,6 +46,7 @@ import uuid
 from collections import Counter
 from collections.abc import Callable
 from itertools import chain, islice
+from urllib.parse import urlsplit
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -207,7 +208,7 @@ def compute_deltas(envelopes: DataFrame) -> tuple[dict[str, "pyarrow.Table"], in
 
 
 def _rebuild(envelopes: DataFrame | Callable[[], DataFrame], sink) -> int:
-    """Overwrite every projection and aux table with the fold of
+    """Overwrite every projection and aux table with the Spark fold of
     ``envelopes`` (a frame, or a thunk that builds it), inside the caller's
     sink transaction. Returns the log's max seq."""
     tables, max_seq = compute_deltas(
@@ -221,11 +222,11 @@ def _rebuild(envelopes: DataFrame | Callable[[], DataFrame], sink) -> int:
 def dehydrate(envelopes: DataFrame, sink) -> int:
     """Full replay → bulk snapshot (T2 phase 1). Returns the watermark seq.
 
-    The log is sized with the bounded probe ``apply_batch`` gates on. A log
-    that fits empties every projection and aux table and replays on the
-    driver as one chunk over the empty sink — the fold catch-up runs, as
-    in the reference (Worker.cs:22-48); a larger one is overwritten with
-    the Spark fold, ``compute_deltas``. Every table and the watermark are
+    Every projection and aux table is emptied, then the log replays on the
+    driver over the empty sink — the fold catch-up runs, as in the
+    reference (Worker.cs:22-48) — read as ``apply_batch`` reads a batch:
+    the bounded probe is the one chunk of a log that fits, a larger log
+    streams in seq-ordered chunks. Every table and the watermark are
     written in one sink transaction, so a failed dehydrate leaves the sink
     as it was.
     """
@@ -237,14 +238,10 @@ def dehydrate(envelopes: DataFrame, sink) -> int:
     sink.ensure_schema()
     sink.begin()
     try:
-        if len(probe_rows) <= MAX_DRIVER_BATCH_ROWS:
-            for name, cols in _FOLD_TABLES.items():
-                sink.overwrite(name, pa.table({c: [] for c in cols}))
-            parsed = _probe_chunk(probe_rows)
-            _apply_driver_chunk(parsed, sink)
-            watermark = parsed[-1][0] if parsed else 0
-        else:
-            watermark = _rebuild(envelopes, sink)
+        for name, cols in _FOLD_TABLES.items():
+            sink.overwrite(name, pa.table({c: [] for c in cols}))
+        last = _apply_chunks(_driver_chunks(envelopes, probe_rows), sink)
+        watermark = 0 if last is None else last
         sink.set_meta("watermark", str(watermark))
         sink.commit()
     except Exception:
@@ -289,9 +286,14 @@ def apply_slack_delta(sink, keys: list[str], rows) -> None:
 def _probe_collect(batch_envelopes: DataFrame, cap: int) -> list:
     """Bounded size-gate probe: pull at most ``cap + 1`` RAW envelope rows
     (seq, event_type, payload — payload stays an unparsed JSON string).
-    A batch that fits is applied from these rows as one chunk."""
+    A batch that fits is applied from these rows as one chunk.
+
+    The input is read as one partition: ``limit`` then scans it in one
+    job whatever the input's partitioning (over several partitions it
+    runs a job per scale-up round), and stops after ``cap + 1`` rows."""
     return (
         batch_envelopes.select("seq", "event_type", "payload")
+        .coalesce(1)
         .limit(cap + 1)
         .collect()
     )
@@ -324,6 +326,33 @@ def _seq_chunks(batch_envelopes: DataFrame, cap: int):
     )
     while chunk := list(islice(rows, cap)):
         yield chunk
+
+
+def _driver_chunks(batch_envelopes: DataFrame, probe_rows: list):
+    """The batch as parsed, seq-ordered chunks of at most
+    ``MAX_DRIVER_BATCH_ROWS`` rows: the probe's one chunk when the batch
+    fits, else the batch streamed by ``_seq_chunks``."""
+    from open_ftth_relational_projector_spark.streaming.incremental import (
+        MAX_DRIVER_BATCH_ROWS,
+        parse_envelope_rows,
+    )
+
+    if len(probe_rows) <= MAX_DRIVER_BATCH_ROWS:
+        return iter([_probe_chunk(probe_rows)])
+    return map(
+        parse_envelope_rows, _seq_chunks(batch_envelopes, MAX_DRIVER_BATCH_ROWS)
+    )
+
+
+def _apply_chunks(chunks, sink) -> int | None:
+    """Replay seq-ordered chunks in order, each over the state its
+    predecessors left. Returns the highest seq applied, None if none."""
+    last = None
+    for parsed in chunks:
+        if parsed:
+            last = parsed[-1][0]
+        _apply_driver_chunk(parsed, sink)
+    return last
 
 
 def _apply_driver_chunk(parsed: list[tuple[int, str, dict]], sink) -> None:
@@ -377,10 +406,15 @@ def apply_batch(
       sink state its predecessors left. ``full_envelopes`` is never read.
     * overlap (a re-delivered or late batch) — a rebuild: as soon as the
       first chunk shows the overlap, every table is overwritten with
-      ``compute_deltas(full_envelopes)``, dehydrate's Spark fold, and no
-      further chunk is read. The watermark becomes the larger of its old
-      value and the highest seq in ``full_envelopes``, which may be a
-      zero-argument callable: it is called only here.
+      ``compute_deltas(full_envelopes)``, the Spark fold, and no further
+      chunk is read. The watermark becomes the larger of its old value
+      and the highest seq in ``full_envelopes``.
+
+    ``full_envelopes`` is the accumulated log, as a zero-argument callable
+    that builds it — called only by the rebuild, so a driver-path batch
+    never lists the log's files (``ProjectionStream``'s bronze) — or as a
+    frame, for callers that already hold the log (bench.py, the catalog's
+    projector query, perfbench, the tests).
 
     ``probe_rows`` is the batch's ``_probe_collect`` result when the
     caller already holds it, so the batch is not probed twice.
@@ -395,29 +429,19 @@ def apply_batch(
 
     from open_ftth_relational_projector_spark.streaming.incremental import (
         MAX_DRIVER_BATCH_ROWS,
-        parse_envelope_rows,
     )
 
-    cap = MAX_DRIVER_BATCH_ROWS
     if probe_rows is None:
-        probe_rows = _probe_collect(batch_envelopes, cap)
-    if len(probe_rows) <= cap:
-        chunks = iter([_probe_chunk(probe_rows)])
-    else:
-        chunks = map(parse_envelope_rows, _seq_chunks(batch_envelopes, cap))
+        probe_rows = _probe_collect(batch_envelopes, MAX_DRIVER_BATCH_ROWS)
+    chunks = _driver_chunks(batch_envelopes, probe_rows)
     first = next(chunks)
     prev_wm = int(sink.get_meta("watermark") or 0)
-    batch_max = None
     sink.begin()
     try:
         if first and first[0][0] <= prev_wm:
             batch_max = _rebuild(full_envelopes, sink)
         else:
-            for parsed in chain([first], chunks):
-                # chunks arrive in seq order: the last one holds the batch max
-                if parsed:
-                    batch_max = parsed[-1][0]
-                _apply_driver_chunk(parsed, sink)
+            batch_max = _apply_chunks(chain([first], chunks), sink)
         if batch_id is not None:
             sink.set_meta("applied_batch", str(batch_id))
         if batch_max is not None:
@@ -443,7 +467,13 @@ def _append_bronze(rows: list, bronze_dir: str) -> None:
 
 
 class ProjectionStream:
-    """Structured-Streaming catch-up loop (T1: 2 s trigger = Worker.cs:47)."""
+    """Structured-Streaming catch-up loop (T1: 2 s trigger = Worker.cs:47).
+
+    ``bronze_dir`` must be a path on the driver's local filesystem: the
+    driver appends probe-sized batches to it with plain file writes
+    (``_append_bronze``), so a URI (``file:``, ``hdfs:``, ``s3a:``) is
+    rejected rather than split into a local directory named after its
+    scheme and a Hadoop one the rebuild reads."""
 
     def __init__(
         self,
@@ -454,6 +484,10 @@ class ProjectionStream:
         checkpoint_dir: str,
         max_files_per_trigger: int | None = 64,
     ):
+        if urlsplit(bronze_dir).scheme:
+            raise ValueError(
+                f"bronze_dir must be a local path, not a URI: {bronze_dir}"
+            )
         self.spark = spark
         self.events_dir = events_dir
         self.sink = sink

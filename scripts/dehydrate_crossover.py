@@ -1,14 +1,15 @@
 #!/usr/bin/env python3
-"""Sweep of dehydrate's gate: the driver fold against the Spark fold.
+"""Sweep of the two folds: dehydrate's driver fold against the Spark fold.
 
     python3 scripts/dehydrate_crossover.py [--seed 1] [--logs 8 32 128] \\
         [--scale 25]
 
-Run from the repository root. For each size it dehydrates
+Run from the repository root. For each size it folds
 ``perfbench.projector.build_log(seed, logs, scale)`` into a fresh DuckDB
 sink twice per side, in a process of its own per side: the driver fold
-(the probe cap left alone) and the Spark fold (the cap set to 0, so every
-log is oversized). The first dehydrate warms the JVM; the second is timed.
+(``runner.dehydrate``) and the Spark fold (``runner._rebuild``, the
+``compute_deltas`` fold an overlapping batch's rebuild writes, in one
+sink transaction). The first fold warms the JVM; the second is timed.
 Each side's output is checked against the Python fold oracle. One JSON
 line per (size, side) with the event count, the timed wall seconds and
 the process tree's peak RSS; then one line with the driver/Spark time
@@ -31,21 +32,18 @@ PERFBENCH = os.path.join(ROOT, "perfbench")
 
 
 def measure(seed: int, logs: int, scale: int, side: str) -> dict:
-    """Dehydrate one log twice on ``side`` in this process; time the
-    second."""
+    """Fold one log twice on ``side`` in this process; time the second."""
     sys.path[:0] = [PERFBENCH, ROOT]
     import run
     from projector import build_log, envelopes_frame, mismatched_tables, oracle_tables
 
     from open_ftth_relational_projector_spark.sinks import DuckDBSink
-    from open_ftth_relational_projector_spark.streaming import incremental, runner
+    from open_ftth_relational_projector_spark.streaming import runner
 
     work = tempfile.mkdtemp(prefix="dehydrate-crossover-")
     run.prepare_environment(work)
     spark = run.start_spark(work, trace=False)
     try:
-        if side == "spark":
-            incremental.MAX_DRIVER_BATCH_ROWS = 0
         events = build_log(seed, logs, scale)
         expected, _ = oracle_tables(events)
         envelopes = envelopes_frame(spark, events)
@@ -53,7 +51,13 @@ def measure(seed: int, logs: int, scale: int, side: str) -> dict:
         for _ in range(2):
             sink = DuckDBSink()
             t0 = time.perf_counter()
-            runner.dehydrate(envelopes, sink)
+            if side == "driver":
+                runner.dehydrate(envelopes, sink)
+            else:
+                sink.ensure_schema()
+                sink.begin()
+                runner._rebuild(envelopes, sink)
+                sink.commit()
             walls.append(time.perf_counter() - t0)
             bad = mismatched_tables(sink, expected)
             sink.close()

@@ -88,11 +88,23 @@ def _rows(sink, table):
     )
 
 
+def _spark_fold(envelopes):
+    """A sink holding the Spark fold of ``envelopes`` and its watermark —
+    what an overlapping batch's rebuild writes."""
+    from open_ftth_relational_projector_spark.streaming.runner import _rebuild
+
+    sink = DuckDBSink()
+    sink.ensure_schema()
+    sink.begin()
+    sink.set_meta("watermark", str(_rebuild(envelopes, sink)))
+    sink.commit()
+    return sink
+
+
 @pytest.fixture(scope="module")
 def expected_aux(envelopes):
-    """The aux tables dehydrate writes for the whole log."""
-    sink = DuckDBSink()
-    dehydrate(envelopes, sink)
+    """The aux tables the Spark fold writes for the whole log."""
+    sink = _spark_fold(envelopes)
     return {t: _rows(sink, t) for t in AUX_TABLES}
 
 
@@ -633,10 +645,10 @@ def test_apply_batch_oversized_batch_replays_in_chunks(spark, monkeypatch):
     def no_recompute(*_args, **_kwargs):
         raise AssertionError("compute_deltas ran on the driver path")
 
-    monkeypatch.setattr(R, "_probe_collect", bounded_probe)
-    monkeypatch.setattr(R, "_seq_chunks", bounded_chunks)
     sink = DuckDBSink()
     dehydrate(env.filter(f"seq <= {cut}"), sink)
+    monkeypatch.setattr(R, "_probe_collect", bounded_probe)
+    monkeypatch.setattr(R, "_seq_chunks", bounded_chunks)
     monkeypatch.setattr(R, "compute_deltas", no_recompute)
     batch = env.filter(f"seq > {cut}")
     # uncoalesced, the deduped batch spans several shuffle partitions, so
@@ -982,12 +994,14 @@ def _assert_sink_matches_oracle(sink, oracle):
     ids=["seed3", "seed17", "seed29", "seed41-every7th-twice"],
 )
 def test_dehydrate_gate_both_ways(spark, monkeypatch, seed, dup_every):
-    """dehydrate sizes the log with the bounded probe: a log that fits is
-    folded on the driver over emptied tables, a larger one by the Spark
-    fold. Forced each way (the cap left alone, then monkeypatched below the
-    log size), both leave all 19 fold tables and the watermark equal as
-    multisets, and the 8 public tables equal the Python fold oracle — also
-    for a log holding every ``dup_every``-th row twice."""
+    """dehydrate sizes the log with the bounded probe and folds it on the
+    driver over emptied tables either way: as the probe's one chunk when
+    it fits (the cap left alone), in seq-ordered chunks when the cap is
+    monkeypatched below the log size. The Spark fold never runs, and both
+    leave all 19 fold tables and the watermark equal, as multisets, to the
+    Spark fold an overlapping batch's rebuild writes; the 8 public tables
+    equal the Python fold oracle — also for a log holding every
+    ``dup_every``-th row twice."""
     import open_ftth_relational_projector_spark.streaming.incremental as I
     import open_ftth_relational_projector_spark.streaming.runner as R
 
@@ -996,27 +1010,36 @@ def test_dehydrate_gate_both_ways(spark, monkeypatch, seed, dup_every):
     if dup_every:
         rows += rows[::dup_every]
     env = spark.createDataFrame(rows, ENVELOPE_SCHEMA).cache()
-    real_fold, folds = R.compute_deltas, []
+    reference = _spark_fold(env)
 
-    def counted_fold(full):
-        folds.append(full)
-        return real_fold(full)
+    def no_fold(*_args, **_kwargs):
+        raise AssertionError("dehydrate ran the Spark fold")
 
-    monkeypatch.setattr(R, "compute_deltas", counted_fold)
-    driver = DuckDBSink()
-    assert dehydrate(env, driver) == len(events)
-    assert folds == []
-    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", len(rows) - 1)
-    spark_fold = DuckDBSink()
-    assert dehydrate(env, spark_fold) == len(events)
-    assert len(folds) == 1
+    real_chunks, chunks = R._seq_chunks, []
+
+    def counted_chunks(batch_envelopes, c):
+        for chunk in real_chunks(batch_envelopes, c):
+            chunks.append(len(chunk))
+            yield chunk
+
+    monkeypatch.setattr(R, "compute_deltas", no_fold)
+    monkeypatch.setattr(R, "_seq_chunks", counted_chunks)
+    one_chunk = DuckDBSink()
+    assert dehydrate(env, one_chunk) == len(events)
+    assert chunks == []
+    cap = len(events) // 3
+    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", cap)
+    chunked = DuckDBSink()
+    assert dehydrate(env, chunked) == len(events)
+    assert len(chunks) >= 3 and max(chunks) <= cap and sum(chunks) == len(events)
 
     assert len(TABLE_COLUMNS) == 20  # the 19 fold tables + the meta table
     for table in TABLE_COLUMNS:
-        assert _rows(driver, table) == _rows(spark_fold, table), table
+        assert _rows(one_chunk, table) == _rows(reference, table), table
+        assert _rows(chunked, table) == _rows(reference, table), table
     oracle = _oracle_rows(events)
-    _assert_sink_matches_oracle(driver, oracle)
-    _assert_sink_matches_oracle(spark_fold, oracle)
+    _assert_sink_matches_oracle(one_chunk, oracle)
+    _assert_sink_matches_oracle(chunked, oracle)
     env.unpersist()
 
 
@@ -1047,18 +1070,24 @@ def _jobs_run(spark, fn):
 
 
 def test_spark_jobs_per_dehydrate_and_trigger(spark, envelopes, expected_tables):
-    """A driver-sized dehydrate runs at most 2 Spark jobs (the Spark fold
-    ran 92 on perfbench's log), and a probe-sized catch-up trigger exactly
-    1: the probe. The probe's ``limit`` scans one partition, then up to 4
-    more, so a log of 4 partitions — perfbench's on a 4-core host — takes
-    2 jobs; a landed file is one partition."""
+    """A driver-sized dehydrate runs 1 Spark job (the Spark fold ran 92 on
+    perfbench's log), and so does a probe-sized catch-up trigger: the
+    probe. The probe reads its input as one partition, so the count holds
+    for an input of the session's default partitioning and of 16
+    partitions alike."""
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     cut = max_seq // 2
     tmp = tempfile.mkdtemp(prefix="ofrp_jobs_")
     try:
+        prefix = envelopes.filter(f"seq <= {cut}")
+        wide = spark.createDataFrame(
+            spark.sparkContext.parallelize(prefix.collect(), 16), ENVELOPE_SCHEMA
+        )
+        assert wide.rdd.getNumPartitions() == 16
         sink = DuckDBSink()
-        prefix = envelopes.filter(f"seq <= {cut}").coalesce(4)
-        assert _jobs_run(spark, lambda: dehydrate(prefix, sink)) <= 2
+        assert _jobs_run(spark, lambda: dehydrate(wide, sink)) == 1
+        sink = DuckDBSink()
+        assert _jobs_run(spark, lambda: dehydrate(prefix, sink)) == 1
         path = write_envelope_batch(envelopes.filter(f"seq > {cut}"), f"{tmp}/in", 0)
         batch = spark.read.schema(ENVELOPE_SCHEMA).json(path)
         stream = ProjectionStream(spark, f"{tmp}/in", sink, f"{tmp}/bronze", f"{tmp}/cp")
@@ -1076,7 +1105,8 @@ def test_driver_written_bronze(spark, envelopes, events):
     rows in bronze and the sink unchanged, and the re-run trigger — the
     stream's retry after a crash in that window — yields the oracle
     tables. Bronze is read only by an overlapping batch's rebuild, which
-    folds it (duplicates included) to the oracle tables again."""
+    folds it (duplicates included) to the oracle tables again. A bronze
+    URI is rejected: the driver writes bronze as a local path."""
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     cut, mid = max_seq // 3, 2 * max_seq // 3
     oracle = _oracle_rows(events)
@@ -1087,6 +1117,8 @@ def test_driver_written_bronze(spark, envelopes, events):
         prefix = envelopes.filter(f"seq <= {cut}")
         dehydrate(prefix, sink)
         prefix.write.parquet(bronze)
+        with pytest.raises(ValueError, match="local path"):
+            ProjectionStream(spark, landing, sink, f"file://{bronze}", f"{tmp}/cp")
         stream = ProjectionStream(spark, landing, sink, bronze, f"{tmp}/cp")
         real_bronze, bronze_reads = stream._bronze, []
 
