@@ -290,8 +290,8 @@ def _has_child_final(log: EventLog, edges: DataFrame | None = None) -> DataFrame
     cleared on detach, ProjektorState.cs:398-417). Last event wins.
 
     ``edges`` lets a caller that already materialized ``_parent_edges``
-    (``runner.compute_deltas``, which also seeds ``_aux_affix_edge`` from
-    it) share one computation. The driver replay folds the same timeline
+    (``runner.spark_fold``, which also seeds ``_aux_affix_edge`` from it)
+    share one computation. The driver replay folds the same timeline
     over the sink's aux tables (incremental._fold_has_child).
     """
     if edges is None:
@@ -556,7 +556,7 @@ def slack_ends(
     (span_equipment_id, route_node_id, end_kind) per slack end. The sink
     keeps this set as ``_aux_slack_end`` so the driver replay can replace
     one equipment's ends and re-aggregate only touched nodes;
-    ``compute_deltas`` passes its shared ``state`` and ``has_child``.
+    ``runner.spark_fold`` passes its shared ``state`` and ``has_child``.
     """
     if state is None:
         state = _span_state(log)
@@ -687,8 +687,9 @@ def project_all(
     envelope scan and the folded span-equipment state are cached and primed
     so the 8 plans don't each re-read the source and re-fold the span
     timeline — the local analogue of materializing typed bronze + a silver
-    state table at scale. A caller that passes ``state`` (``compute_deltas``)
-    has cached its inputs itself and passes ``persist=False``.
+    state table at scale. A caller that passes ``state``
+    (``runner.spark_fold``) has cached its inputs itself and passes
+    ``persist=False``.
     """
     from concurrent.futures import ThreadPoolExecutor
 

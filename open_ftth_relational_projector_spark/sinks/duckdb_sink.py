@@ -13,9 +13,8 @@ own keys, and an empty ``keys`` makes it an append. A key set is bound
 as one list parameter and matched with one semi-join, for deletes and
 for ``lookup``, the driver replay's one read.
 
-Rows arrive as ``pyarrow.Table``s (``compute_deltas`` fans its Spark fold
-out to Arrow, the driver replay builds Arrow directly) or as Spark
-DataFrames, moved with ``toArrow``.
+Rows arrive as ``pyarrow.Table``s (the driver replay builds Arrow
+directly) or as Spark DataFrames, moved with ``toArrow``.
 """
 
 from __future__ import annotations

@@ -4,12 +4,10 @@ Streaming + incremental view maintenance over a relational sink."""
 from open_ftth_relational_projector_spark.streaming.runner import (
     ProjectionStream,
     apply_batch,
-    compute_deltas,
     dehydrate,
 )
 
 __all__ = [
-    "compute_deltas",
     "ProjectionStream",
     "apply_batch",
     "dehydrate",

@@ -10,8 +10,7 @@ root-segment and detach writes against the sink aux tables; the replays in
 streaming/replay.py produce the rest. Every write is ``table → (keys,
 rows)`` for ``DuckDBSink.replace_group``, and every seed read is one
 ``DuckDBSink.lookup``. No job reads the accumulated log. (A batch that
-overlaps the watermark is not maintained incrementally: it rebuilds every
-table from the accumulated log through the Spark fold,
+overlaps the watermark replays the accumulated log over emptied tables,
 ``runner.compute_deltas``.)
 
 conduit_slack — the one cross-entity aggregate — is maintained through the

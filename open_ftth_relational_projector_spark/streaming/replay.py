@@ -15,9 +15,8 @@ no row is a delete.
 Scale shape: every seed is one ``sink.lookup`` of the batch's keys — one
 scan of the table per chunk (DuckDB plans the key-list semi-join as a full
 table scan), so its cost grows with sink size; the replay is O(batch
-events); nothing scans the log. A batch that overlaps the
-watermark is not replayed: it rebuilds every table, these aux tables
-included, from the accumulated log (runner.compute_deltas).
+events); nothing scans the log. A batch that overlaps the watermark
+replays the accumulated log over emptied tables (runner.compute_deltas).
 
 Faithfulness notes (mirroring projections/core.py, NOT events/oracle.py's
 stricter KeyError behavior):

@@ -2,22 +2,20 @@
 
 The reference's Worker (Worker.cs:22-48) replays all history with writes
 suppressed, snapshots every table (truncate + COPY), then polls every
-2000 ms applying per-event DML. Spark-first:
+2000 ms applying per-event DML. Every path here runs one fold, the driver
+replay of seq-ordered chunks over sink state (``_apply_chunks``):
 
-* ``dehydrate`` — the fold of the full log, in one sink transaction (T2
-  bootstrap): every table is emptied and the log replays on the driver
-  through the fold a catch-up batch runs, as the reference dehydrates by
-  running its catch-up fold (Worker.cs:22-48) — as one chunk when it fits
-  the bounded probe, else in seq-ordered chunks. The watermark is the
-  log's max seq.
+* ``dehydrate`` — ``compute_deltas`` of the full log in one sink
+  transaction (T2 bootstrap): every table is emptied and the log replays
+  over the empty sink, as the reference dehydrates by running its catch-up
+  fold (Worker.cs:22-48). The watermark is the log's max seq.
 * ``apply_batch`` — one micro-batch of incremental maintenance, wrapped in
   a sink transaction keyed by batch_id (T5: re-delivered batches are
-  skipped). Two paths: a batch above the watermark replays on the driver
-  over sink-seeded state (streaming/replay.py), in seq-ordered chunks when
-  it outgrows the probe; a batch that overlaps the watermark rebuilds
-  every table from the accumulated log through ``compute_deltas``, the
-  Spark fold, which is idempotent by construction — re-applying any batch
-  yields the same rows.
+  skipped). A batch above the watermark replays over sink-seeded state
+  (streaming/replay.py), in seq-ordered chunks when it outgrows the probe;
+  a batch that overlaps the watermark rebuilds every table through
+  ``compute_deltas`` of the accumulated log, idempotent by construction —
+  re-applying any batch yields the same rows.
 * ``ProjectionStream`` — Structured Streaming wiring: file-source
   ``readStream`` over an envelope directory, ``foreachBatch`` into
   ``apply_batch``, default trigger processingTime=2s matching the
@@ -31,6 +29,8 @@ suppressed, snapshots every table (truncate + COPY), then polls every
   driver-side on the collected probe rows, in Spark by the chunk source —
   a probe-sized batch costs no shuffle, and no driver-path job reads the
   accumulated log.
+
+``spark_fold``, the same fold planned in Spark, is the tests' reference.
 
 Batch-order independence: the final sink state depends only on the set of
 applied events, not the batch boundaries — the driver replay folds events
@@ -80,9 +80,8 @@ def aux_seed_frames(
 ) -> dict[str, DataFrame]:
     """Aux-table seed frames from an accumulated log: the append-only edge
     sets plus the silver span state and spec registries the driver-side
-    micro-batch replay reads. Part of ``compute_deltas``, so dehydrate and
-    an overlapping batch's rebuild leave the aux tables consistent for the
-    next driver-side batch."""
+    micro-batch replay reads, as ``spark_fold`` (the tests' reference fold)
+    computes them."""
     from open_ftth_relational_projector_spark.operators.lww import latest_by_key
     from open_ftth_relational_projector_spark.projections.core import (
         _parent_edges,
@@ -163,13 +162,14 @@ def aux_seed_frames(
     }
 
 
-def compute_deltas(envelopes: DataFrame) -> tuple[dict[str, "pyarrow.Table"], int]:
+def spark_fold(envelopes: DataFrame) -> tuple[dict[str, "pyarrow.Table"], int]:
     """The Spark fold of an event log: every projection and aux table (the
     8 projections, the slack-end pre-aggregation and the aux seed tables)
-    as Arrow in sink column order, and the log's max seq (0 if empty). It
-    returns all rows of each table — the delta against an empty sink — so
-    a caller applies it by overwriting. A seq that occurs in several rows
-    is folded once, as on the driver path.
+    as Arrow in sink column order, and the log's max seq (0 if empty). A
+    seq that occurs in several rows is folded once, as on the driver path.
+
+    No production path calls it: it is the reference the tests compare the
+    driver fold (``compute_deltas``) against, table by table.
 
     The projection plans → Arrow step fans out concurrently: the tables are
     independent jobs over the shared cached log, span state and edge set.
@@ -207,40 +207,40 @@ def compute_deltas(envelopes: DataFrame) -> tuple[dict[str, "pyarrow.Table"], in
     return arrow, int(row[0]) if row[0] is not None else 0
 
 
-def _rebuild(envelopes: DataFrame | Callable[[], DataFrame], sink) -> int:
-    """Overwrite every projection and aux table with the Spark fold of
-    ``envelopes`` (a frame, or a thunk that builds it), inside the caller's
-    sink transaction. Returns the log's max seq."""
-    tables, max_seq = compute_deltas(
-        envelopes() if callable(envelopes) else envelopes
-    )
-    for name, table in tables.items():
-        sink.overwrite(name, table)
-    return max_seq
+def compute_deltas(envelopes: DataFrame, sink) -> int | None:
+    """The fold of a whole log, inside the caller's sink transaction: every
+    projection and aux table is emptied, then the log replays on the driver
+    over the empty sink, read as ``apply_batch`` reads a batch — the bounded
+    probe is the one chunk of a log that fits, a larger log streams in
+    seq-ordered chunks. Returns the log's highest seq, None if it is empty.
+    ``dehydrate`` and an overlapping batch's rebuild both run it.
 
-
-def dehydrate(envelopes: DataFrame, sink) -> int:
-    """Full replay → bulk snapshot (T2 phase 1). Returns the watermark seq.
-
-    Every projection and aux table is emptied, then the log replays on the
-    driver over the empty sink — the fold catch-up runs, as in the
-    reference (Worker.cs:22-48) — read as ``apply_batch`` reads a batch:
-    the bounded probe is the one chunk of a log that fits, a larger log
-    streams in seq-ordered chunks. Every table and the watermark are
-    written in one sink transaction, so a failed dehydrate leaves the sink
-    as it was.
+    The name predates the driver fold: perfbench traces re-delivery time
+    under ``runner.compute_deltas``, so it is kept until the benchmark
+    itself is changed (ROADMAP D2).
     """
     from open_ftth_relational_projector_spark.streaming.incremental import (
         MAX_DRIVER_BATCH_ROWS,
     )
 
     probe_rows = _probe_collect(envelopes, MAX_DRIVER_BATCH_ROWS)
+    for name, cols in _FOLD_TABLES.items():
+        sink.overwrite(name, pa.table({c: [] for c in cols}))
+    return _apply_chunks(_driver_chunks(envelopes, probe_rows), sink)
+
+
+def dehydrate(envelopes: DataFrame, sink) -> int:
+    """Full replay → bulk snapshot (T2 phase 1). Returns the watermark seq.
+
+    The log is folded by ``compute_deltas`` — the fold catch-up runs, as in
+    the reference (Worker.cs:22-48). Every table and the watermark (the
+    log's max seq, 0 for an empty log) are written in one sink
+    transaction, so a failed dehydrate leaves the sink as it was.
+    """
     sink.ensure_schema()
     sink.begin()
     try:
-        for name, cols in _FOLD_TABLES.items():
-            sink.overwrite(name, pa.table({c: [] for c in cols}))
-        last = _apply_chunks(_driver_chunks(envelopes, probe_rows), sink)
+        last = compute_deltas(envelopes, sink)
         watermark = 0 if last is None else last
         sink.set_meta("watermark", str(watermark))
         sink.commit()
@@ -405,10 +405,11 @@ def apply_batch(
       in seq order (``_seq_chunks``). Each chunk is replayed over the
       sink state its predecessors left. ``full_envelopes`` is never read.
     * overlap (a re-delivered or late batch) — a rebuild: as soon as the
-      first chunk shows the overlap, every table is overwritten with
-      ``compute_deltas(full_envelopes)``, the Spark fold, and no further
-      chunk is read. The watermark becomes the larger of its old value
-      and the highest seq in ``full_envelopes``.
+      first chunk shows the overlap, every table is refolded from
+      ``full_envelopes`` by ``compute_deltas``, the fold ``dehydrate``
+      runs, and no further chunk of the batch is read. The watermark
+      becomes the larger of its old value and the highest seq in
+      ``full_envelopes``.
 
     ``full_envelopes`` is the accumulated log, as a zero-argument callable
     that builds it — called only by the rebuild, so a driver-path batch
@@ -439,7 +440,9 @@ def apply_batch(
     sink.begin()
     try:
         if first and first[0][0] <= prev_wm:
-            batch_max = _rebuild(full_envelopes, sink)
+            batch_max = compute_deltas(
+                full_envelopes() if callable(full_envelopes) else full_envelopes, sink
+            )
         else:
             batch_max = _apply_chunks(chain([first], chunks), sink)
         if batch_id is not None:

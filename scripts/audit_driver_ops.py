@@ -53,7 +53,7 @@ ALLOWLIST: dict[str, str] = {
         "batch files (500 rows at sf0.01) + the drained memory-sink result"
     ),
     "plans/checks.py::wholestage_codegen_spans": "test helper: forces AQE final plan",
-    "streaming/runner.py::compute_deltas": "scalar max(seq)",
+    "streaming/runner.py::spark_fold": "scalar max(seq)",
     "functions/boosting.py::adaboost_fit": (
         "bounded: one value from the checkpointed ONE-ROW stump frame "
         "per boosting round — the named weight-exactness (2^53) guard"

@@ -90,13 +90,16 @@ def _rows(sink, table):
 
 def _spark_fold(envelopes):
     """A sink holding the Spark fold of ``envelopes`` and its watermark —
-    what an overlapping batch's rebuild writes."""
-    from open_ftth_relational_projector_spark.streaming.runner import _rebuild
+    the reference the driver fold is compared against."""
+    from open_ftth_relational_projector_spark.streaming.runner import spark_fold
 
+    tables, max_seq = spark_fold(envelopes)
     sink = DuckDBSink()
     sink.ensure_schema()
     sink.begin()
-    sink.set_meta("watermark", str(_rebuild(envelopes, sink)))
+    for name, table in tables.items():
+        sink.overwrite(name, table)
+    sink.set_meta("watermark", str(max_seq))
     sink.commit()
     return sink
 
@@ -611,7 +614,7 @@ def test_fold_has_child_matches_spark_fold(spark):
 def test_apply_batch_oversized_batch_replays_in_chunks(spark, monkeypatch):
     """A batch above MAX_DRIVER_BATCH_ROWS stays on the driver path: after
     the bounded probe (cap + 1 rows) it streams in seq order, at most cap
-    rows per chunk, every row exactly once; the Spark fold never runs; and
+    rows per chunk, every row exactly once; the rebuild never runs; and
     the tables match the batch fold — the bounded-catch-up
     guarantee for a post-downtime backlog batch."""
     import open_ftth_relational_projector_spark.streaming.incremental as I
@@ -671,10 +674,12 @@ def test_overlapping_batch_rebuilds_from_accumulated_log(
     spark, envelopes, expected_tables, monkeypatch
 ):
     """A batch whose smallest seq is at or below the watermark rebuilds
-    every table from the accumulated log through the Spark fold.
+    every table from the accumulated log through the driver fold,
+    ``compute_deltas``; the Spark fold never runs.
 
     * An oversized one (partly re-delivered backlog) runs the fold once,
-      pulls no chunk past the first, and ends at the log's max seq.
+      pulls no chunk of the batch past the first, streams the log in
+      seq-ordered chunks, and ends at the log's max seq.
     * A late event (an unapplied seq under the watermark) lands: the sink
       then equals the fold of the log it arrived into."""
     from pyspark.sql import functions as F
@@ -686,26 +691,29 @@ def test_overlapping_batch_rebuilds_from_accumulated_log(
     cut = max_seq // 2
     monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", 7)
     real_chunks, real_fold = R._seq_chunks, R.compute_deltas
-    pulls, folds = [], []
+    batch = envelopes.filter(f"seq > {cut - 3}")
+    batch_pulls, log_pulls, folds, spark_folds = [], [], [], []
 
     def counted_chunks(batch_envelopes, c):
+        pulls = batch_pulls if batch_envelopes is batch else log_pulls
         for chunk in real_chunks(batch_envelopes, c):
             pulls.append(len(chunk))
             yield chunk
 
-    def counted_fold(full):
+    def counted_fold(full, sink):
         folds.append(full)
-        return real_fold(full)
+        return real_fold(full, sink)
 
     sink = DuckDBSink()
     dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
     monkeypatch.setattr(R, "_seq_chunks", counted_chunks)
     monkeypatch.setattr(R, "compute_deltas", counted_fold)
-    assert apply_batch(
-        envelopes, envelopes.filter(f"seq > {cut - 3}"), sink, batch_id=0
-    ) is True
-    assert pulls == [7]
-    assert len(folds) == 1
+    monkeypatch.setattr(R, "spark_fold", lambda *a: spark_folds.append(a))
+    assert apply_batch(envelopes, batch, sink, batch_id=0) is True
+    assert batch_pulls == [7]
+    assert len(log_pulls) >= 3 and max(log_pulls) <= 7
+    assert len(folds) == 1 and folds[0] is envelopes
+    assert spark_folds == []
     assert sink.get_meta("watermark") == str(max_seq)
     _assert_sink_matches(sink, expected_tables)
 
@@ -999,7 +1007,7 @@ def test_dehydrate_gate_both_ways(spark, monkeypatch, seed, dup_every):
     it fits (the cap left alone), in seq-ordered chunks when the cap is
     monkeypatched below the log size. The Spark fold never runs, and both
     leave all 19 fold tables and the watermark equal, as multisets, to the
-    Spark fold an overlapping batch's rebuild writes; the 8 public tables
+    Spark fold, the tests' reference; the 8 public tables
     equal the Python fold oracle — also for a log holding every
     ``dup_every``-th row twice."""
     import open_ftth_relational_projector_spark.streaming.incremental as I
@@ -1022,7 +1030,7 @@ def test_dehydrate_gate_both_ways(spark, monkeypatch, seed, dup_every):
             chunks.append(len(chunk))
             yield chunk
 
-    monkeypatch.setattr(R, "compute_deltas", no_fold)
+    monkeypatch.setattr(R, "spark_fold", no_fold)
     monkeypatch.setattr(R, "_seq_chunks", counted_chunks)
     one_chunk = DuckDBSink()
     assert dehydrate(env, one_chunk) == len(events)
@@ -1074,7 +1082,9 @@ def test_spark_jobs_per_dehydrate_and_trigger(spark, envelopes, expected_tables)
     perfbench's log), and so does a probe-sized catch-up trigger: the
     probe. The probe reads its input as one partition, so the count holds
     for an input of the session's default partitioning and of 16
-    partitions alike."""
+    partitions alike. The same trigger re-delivered rebuilds from bronze
+    in 2 jobs, the batch's probe and the log's (the Spark fold ran 19
+    under the group, its fan-out threads outside it)."""
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     cut = max_seq // 2
     tmp = tempfile.mkdtemp(prefix="ofrp_jobs_")
@@ -1090,8 +1100,12 @@ def test_spark_jobs_per_dehydrate_and_trigger(spark, envelopes, expected_tables)
         assert _jobs_run(spark, lambda: dehydrate(prefix, sink)) == 1
         path = write_envelope_batch(envelopes.filter(f"seq > {cut}"), f"{tmp}/in", 0)
         batch = spark.read.schema(ENVELOPE_SCHEMA).json(path)
+        prefix.write.parquet(f"{tmp}/bronze")
         stream = ProjectionStream(spark, f"{tmp}/in", sink, f"{tmp}/bronze", f"{tmp}/cp")
         assert _jobs_run(spark, lambda: stream._process(batch, 0)) == 1
+        _assert_sink_matches(sink, expected_tables)
+        assert _jobs_run(spark, lambda: stream._process(batch, 1)) == 2
+        assert sink.get_meta("applied_batch") == "1"
         _assert_sink_matches(sink, expected_tables)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
