@@ -13,6 +13,12 @@ own keys, and an empty ``keys`` makes it an append. A key set is bound
 as one list parameter and matched with one semi-join, for deletes and
 for ``lookup``, the driver replay's one read.
 
+A table that the open transaction emptied (``overwrite``) and has not
+inserted into since is neither read nor key-deleted: ``lookup`` and
+``delete_keys`` answer without a statement, so chunk 1 of a dehydrate or
+rebuild is a bulk load. The sink's own connection is the only writer it
+accounts for; every transaction boundary forgets the emptied set.
+
 Rows arrive as ``pyarrow.Table``s (the driver replay builds Arrow
 directly) or as Spark DataFrames, moved with ``toArrow``.
 """
@@ -56,6 +62,7 @@ class DuckDBSink:
     def __init__(self, path: str = ":memory:"):
         self.con = duckdb.connect(path)
         self.schema = SCHEMA
+        self._emptied: set[str] = set()
 
     # -- S5: DDL bootstrap (RelationalDatabaseProjection.cs:77-88) ----------
     def ensure_schema(self) -> None:
@@ -73,6 +80,7 @@ class DuckDBSink:
         tbl = _to_arrow(df, cols)
         if tbl.num_rows == 0:
             return 0
+        self._emptied.discard(table)
         self.con.register("_stage", tbl)
         collist = ", ".join(f'"{c}"' for c in cols)
         self.con.execute(
@@ -85,6 +93,7 @@ class DuckDBSink:
     # -- S6: truncate + bulk load (PostgresWriter.cs:42-70 pattern) ---------
     def overwrite(self, table: str, df) -> int:
         self.con.execute(f'DELETE FROM {self.schema}."{table}"')
+        self._emptied.add(table)
         return self._insert_df(table, df)
 
     # -- append (aux event-derived sets: rows only ever accumulate) ---------
@@ -93,6 +102,11 @@ class DuckDBSink:
 
     # -- S7/S8: keyed delete (PostgresWriter.cs:100-112 pattern) ------------
     def delete_keys(self, table: str, key_col: str, keys: Collection[str]) -> None:
+        """Delete every row whose ``key_col`` is in ``keys``. A table the
+        open transaction emptied takes no statement: the sink's own
+        connection is the only writer it accounts for."""
+        if table in self._emptied:
+            return
         self.con.execute(
             f'DELETE FROM {self.schema}."{table}" WHERE {_key_in(key_col)}',
             [list(keys)],
@@ -120,6 +134,7 @@ class DuckDBSink:
         return row[0] if row else None
 
     def set_meta(self, key: str, value: str) -> None:
+        self._emptied.discard("_projector_meta")
         self.con.execute(
             f'DELETE FROM {self.schema}."_projector_meta" WHERE "key" = ?', [key]
         )
@@ -136,8 +151,10 @@ class DuckDBSink:
         self, table: str, cols: list[str], key_col: str, keys: Collection[str]
     ) -> list[tuple]:
         """``cols`` of every row whose ``key_col`` is in ``keys``, as tuples
-        with SQL NULL as None — the driver replay's seed read."""
-        if not keys:
+        with SQL NULL as None — the driver replay's seed read. A table the
+        open transaction emptied answers ``[]`` without a statement: the
+        sink's own connection is the only writer it accounts for."""
+        if not keys or table in self._emptied:
             return []
         collist = ", ".join(f'"{c}"' for c in cols)
         df = self.fetch_df(
@@ -160,12 +177,15 @@ class DuckDBSink:
 
     # -- transactions (atomic micro-batch, T5) ------------------------------
     def begin(self) -> None:
+        self._emptied.clear()
         self.con.execute("BEGIN TRANSACTION")
 
     def commit(self) -> None:
+        self._emptied.clear()
         self.con.execute("COMMIT")
 
     def rollback(self) -> None:
+        self._emptied.clear()
         self.con.execute("ROLLBACK")
 
     def close(self) -> None:

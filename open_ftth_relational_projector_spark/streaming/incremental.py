@@ -173,7 +173,8 @@ def build_edge_context(
     edge time; registry rows and detaches are events), so the sink keeps
     them as aux tables: resolve only the chunk's new edges, then read back
     just the touched parents' edges and their children's detaches — one
-    key-list lookup (a table scan) per read, zero Spark jobs. Their new
+    key-list lookup (a table scan; none on a table that the open
+    transaction emptied) per read, zero Spark jobs. Their new
     rows come back with no keys (appends); ``replay_span_batch`` adds the
     span state, ``span_equipment`` and ``_aux_slack_end`` writes, the last
     keyed by every fold key (touched spans ∪ their affix parents).

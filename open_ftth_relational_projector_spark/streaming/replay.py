@@ -13,10 +13,13 @@ Each replay returns ``table → (keys, rows)``: the sink deletes the rows of
 no row is a delete.
 
 Scale shape: every seed is one ``sink.lookup`` of the batch's keys — one
-scan of the table per chunk (DuckDB plans the key-list semi-join as a full
-table scan), so its cost grows with sink size; the replay is O(batch
-events); nothing scans the log. A batch that overlaps the watermark
-replays the accumulated log over emptied tables (runner.compute_deltas).
+scan of a populated table per chunk (DuckDB plans the key-list semi-join
+as a full table scan), so its cost grows with sink size; the replay is
+O(batch events); nothing scans the log. A batch that overlaps the
+watermark replays the accumulated log over emptied tables
+(runner.compute_deltas). A table that the open transaction emptied is
+neither read nor key-deleted, so chunk 1 of a dehydrate or rebuild is a
+bulk load.
 
 Faithfulness notes (mirroring projections/core.py, NOT events/oracle.py's
 stricter KeyError behavior):

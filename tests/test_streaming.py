@@ -337,12 +337,17 @@ def test_failed_apply_batch_leaves_sink_unchanged(
     _assert_sink_matches(sink, expected_tables)
 
 
-def test_failed_dehydrate_leaves_sink_unchanged(spark, envelopes):
+def test_failed_dehydrate_leaves_sink_unchanged(spark, envelopes, events):
     """A sink failure partway through dehydrate rolls every overwrite
     back: re-dehydrating from a different log with the 5th table's write
     failing leaves all tables, aux included, and the watermark as the
-    first dehydrate left them."""
-    from open_ftth_relational_projector_spark.sinks.ddl import TABLE_COLUMNS
+    first dehydrate left them. The rollback also forgets which tables the
+    failed transaction emptied: the restored tables answer lookups again,
+    and applying the rest of the log then equals the Python fold oracle."""
+    from open_ftth_relational_projector_spark.sinks.ddl import (
+        TABLE_COLUMNS,
+        key_column,
+    )
 
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     cut = max_seq // 2
@@ -372,6 +377,14 @@ def test_failed_dehydrate_leaves_sink_unchanged(spark, envelopes):
         assert _canon(exp, cols).equals(_canon(got, cols)), (
             f"{name} changed by a failed dehydrate"
         )
+    for name in written[:4]:
+        key = key_column(name)
+        cols = [c for c, _ in TABLE_COLUMNS[name]]
+        assert len(sink.lookup(name, cols, key, set(before[name][key]))) == len(
+            before[name]
+        ), f"{name} reads empty after the rollback"
+    assert apply_batch(envelopes, envelopes.filter(f"seq > {cut}"), sink)
+    _assert_sink_matches_oracle(sink, _oracle_rows(events))
 
 
 def test_driver_path_never_reads_accumulated_log(
@@ -995,6 +1008,67 @@ def _public_rows(sink, table):
 def _assert_sink_matches_oracle(sink, oracle):
     for table in PROJECTION_TABLES:
         assert _public_rows(sink, table) == oracle[table], table
+
+
+class _StatementLog:
+    """A sink connection that records every statement it executes."""
+
+    def __init__(self, con):
+        self._con = con
+        self.sql: list[str] = []
+
+    def execute(self, sql, *args):
+        self.sql.append(" ".join(sql.split()))
+        return self._con.execute(sql, *args)
+
+    def __getattr__(self, name):
+        return getattr(self._con, name)
+
+
+def test_dehydrate_bulk_loads_emptied_tables(spark, monkeypatch):
+    """dehydrate empties every fold table inside its transaction, and the
+    sink neither reads nor key-deletes a table the open transaction
+    emptied: a one-chunk dehydrate into a fresh sink runs no keyed DELETE
+    and no seed SELECT, except ``apply_slack_delta``'s re-count, which
+    follows the chunk's own slack-end insert. With a small cap, chunks 2
+    and later read what earlier chunks wrote. A second dehydrate, of a
+    shorter log into the populated sink, equals the Python fold oracle."""
+    import open_ftth_relational_projector_spark.streaming.incremental as I
+
+    events = generate(seed=5, scale=3)
+    env = spark.createDataFrame(to_envelope_rows(events), ENVELOPE_SCHEMA).cache()
+    slack_insert = f'INSERT INTO {SCHEMA}."_aux_slack_end"'
+    recount = (
+        f'SELECT "route_node_id" FROM {SCHEMA}."_aux_slack_end" '
+        'WHERE "route_node_id" IN'
+    )
+
+    def keyed(log):
+        return [i for i, sql in enumerate(log.sql) if "UNNEST(" in sql]
+
+    sink = DuckDBSink()
+    log = sink.con = _StatementLog(sink.con)
+    assert dehydrate(env, sink) == len(events)
+    reads = keyed(log)
+    assert reads and all(log.sql[i].startswith(recount) for i in reads)
+    first_insert = next(i for i, sql in enumerate(log.sql) if sql.startswith(slack_insert))
+    assert first_insert < reads[0]
+    _assert_sink_matches_oracle(sink, _oracle_rows(events))
+
+    cut = len(events) // 2
+    assert dehydrate(env.filter(f"seq <= {cut}"), sink) == cut
+    _assert_sink_matches_oracle(sink, _oracle_rows(events[:cut]))
+
+    monkeypatch.setattr(I, "MAX_DRIVER_BATCH_ROWS", len(events) // 3)
+    chunked = DuckDBSink()
+    log = chunked.con = _StatementLog(chunked.con)
+    dehydrate(env, chunked)
+    assert any(
+        log.sql[i].startswith("SELECT") and not log.sql[i].startswith(recount)
+        for i in keyed(log)
+    )
+    _assert_sink_matches_oracle(chunked, _oracle_rows(events))
+    env.unpersist()
 
 
 @pytest.mark.parametrize(

@@ -41,4 +41,5 @@ def test_tracer_install_finds_every_wrapped_name_and_uninstall_restores():
         assert owner.__dict__[attr] is original, attr
     names = {attr for _, attr, _ in patched}
     assert {"apply_batch", "build_edge_context", "replay_rel_batch",
-            "replace_group", "fetch_df"} <= names
+            "replace_group", "fetch_df", "delete_keys", "overwrite",
+            "set_meta", "commit"} <= names
