@@ -241,9 +241,8 @@ def _edge_events(log: EventLog) -> DataFrame:
 def _parent_registry_versions(log: EventLog) -> DataFrame:
     """Root-segment registry versions (root_segment_id, seq, parent_id):
     placements register the root segment, removals tombstone it with a NULL
-    parent (ProjektorState.cs:146, 285). Append-only in seq — a batch only
-    ever ADDS versions, which is what makes the registry incrementally
-    maintainable as a sink aux table."""
+    parent (ProjektorState.cs:146, 285). Its latest non-tombstone version
+    per root is the driver's root-segment map (``runner.aux_seed_frames``)."""
     placed = log.of("SpanEquipmentPlacedInRouteNetwork").selectExpr(
         "seq",
         "equipment.id AS id",
@@ -291,8 +290,8 @@ def _has_child_final(log: EventLog, edges: DataFrame | None = None) -> DataFrame
 
     ``edges`` lets a caller that already materialized ``_parent_edges``
     (``runner.spark_fold``, which also seeds ``_aux_affix_edge`` from it)
-    share one computation. The driver replay folds the same timeline
-    over the sink's aux tables (incremental._fold_has_child).
+    share one computation. The driver replay keeps the flag itself, as
+    ``_aux_span_state.has_child`` (streaming/replay.replay_span_batch).
     """
     if edges is None:
         edges = _parent_edges(log)

@@ -84,21 +84,16 @@ TABLE_COLUMNS: dict[str, list[tuple[str, str]]] = {
         ("route_node_id", "VARCHAR(36)"),
         ("end_kind", "VARCHAR(4)"),  # 'from' | 'to'
     ],
-    # append-only event-derived sets for incremental has-child/slack
-    # maintenance: per-batch cost stays ∝ batch, not ∝ accumulated log.
+    # the reference's parent/child state (ProjektorState.cs:122, 358-417):
+    # each live root segment's span, and the parents each child has been
+    # affixed to since its last detach; a parent's flag is has_child below
     "_aux_affix_edge": [
         ("child_id", "VARCHAR(36)"),
-        ("seq", "BIGINT"),
         ("parent_id", "VARCHAR(36)"),
     ],
     "_aux_root_segment": [
         ("root_segment_id", "VARCHAR(36)"),
-        ("seq", "BIGINT"),
-        ("parent_id", "VARCHAR(36)"),  # NULL = tombstone (equipment removed)
-    ],
-    "_aux_detach": [
-        ("child_id", "VARCHAR(36)"),
-        ("seq", "BIGINT"),
+        ("parent_id", "VARCHAR(36)"),
     ],
     # silver state + spec registries for the driver-side micro-batch replay:
     # a poll-interval batch seeds from these and replays in seq order (the
@@ -118,6 +113,7 @@ TABLE_COLUMNS: dict[str, list[tuple[str, str]]] = {
         ("root_segment_id", "VARCHAR(36)"),
         ("root_has_from_conn", "BOOLEAN"),
         ("root_has_to_conn", "BOOLEAN"),
+        ("has_child", "BOOLEAN"),
     ],
     "_aux_span_spec": [
         ("spec_id", "VARCHAR(36)"),
@@ -168,6 +164,7 @@ TABLE_PRIMARY_KEYS: dict[str, list[str]] = {
     "installation": ["id"],
     "_projector_meta": ["key"],
     "_aux_span_state": ["id"],
+    "_aux_root_segment": ["root_segment_id"],
     "_aux_span_spec": ["spec_id"],
     "_aux_struct_spec": ["struct_spec_id"],
     "_aux_nc_spec": ["spec_id"],
@@ -182,6 +179,7 @@ TABLE_GROUP_KEYS: dict[str, str] = {
     "rel_interest_to_route_element": "interest_id",
     "rel_fiber_cable_to_route_element": "fiber_cable_id",
     "_aux_slack_end": "span_equipment_id",
+    "_aux_affix_edge": "child_id",
 }
 
 
@@ -207,7 +205,9 @@ PROJECTION_TABLES = [
 ]
 
 # secondary indexes on lookup-side FKs (PostgresWriter.cs:33-38, 124-129,
-# 217, 312, 421, 540) — they encode the downstream read patterns.
+# 217, 312, 421, 540) — they encode the downstream read patterns. The
+# private tables have none: the projector reads them by key list, which
+# DuckDB plans as a scan and a hash semi-join whatever the indexes.
 SECONDARY_INDEXES: dict[str, list[str]] = {
     "rel_interest_to_route_element": ["route_network_element_id", "interest_id"],
     "rel_fiber_cable_to_route_element": ["route_network_element_id", "fiber_cable_id"],
@@ -215,11 +215,6 @@ SECONDARY_INDEXES: dict[str, list[str]] = {
     "span_equipment": ["interest_id"],
     "service_termination": ["route_node_id"],
     "conduit_slack": ["route_node_id"],
-    "_aux_slack_end": ["span_equipment_id", "route_node_id"],
-    "_aux_affix_edge": ["child_id", "parent_id"],
-    "_aux_root_segment": ["root_segment_id", "parent_id"],
-    "_aux_detach": ["child_id"],
-    "_aux_span_state": ["id"],
 }
 
 

@@ -3,11 +3,12 @@
 Every batch above the sink watermark is applied this way (in seq-ordered
 chunks of at most incremental.MAX_DRIVER_BATCH_ROWS rows): seed the
 touched entities' CURRENT state and the registries the chunk resolves
-against from the sink (``_aux_span_state``, the spec, walk and placement
-aux tables, and the public tables that are their own state), replay the
-chunk's events over it in seq order (exactly ProjektorState.cs's dict
-mutations — the semantics are pinned by events/oracle.py and the
-batch-split equivalence tests), and write back only the touched rows.
+against from the sink (``_aux_span_state``, the root-segment map and
+affix edges, the spec, walk and placement aux tables, and the public
+tables that are their own state), replay the chunk's events over it in
+seq order (exactly ProjektorState.cs's dict mutations — the semantics
+are pinned by events/oracle.py and the batch-split equivalence tests),
+and write back only the touched rows.
 Each replay returns ``table → (keys, rows)``: the sink deletes the rows of
 ``keys`` and inserts ``rows`` (``DuckDBSink.replace_group``). A key with
 no row is a delete.
@@ -28,7 +29,10 @@ stricter KeyError behavior):
   * is_customer_conduit is frozen at placement (SpanEquipmentState.cs:53)
     and NULL when the placement had no resolvable spec;
   * updates to never-created or removed ids are dropped (the reference's
-    guarded ContainsKey no-ops, ProjektorState.cs:551).
+    guarded ContainsKey no-ops, ProjektorState.cs:551);
+  * parent/child state follows events/oracle.py's transitions, not the
+    Spark fold's has-child timeline: a re-placed span starts with
+    has_child false, where the timeline keeps its earlier edges.
 """
 
 from __future__ import annotations
@@ -43,6 +47,8 @@ SPAN_EVENT_TYPES = {
     "SpanEquipmentMoved",
     "SpanEquipmentMerged",
     "SpanEquipmentRemoved",
+    "SpanEquipmentAffixedToParent",
+    "SpanEquipmentDetachedFromParent",
     "SpanEquipmentSpecificationChanged",
     "SpanEquipmentAddressInfoChanged",
     "SpanEquipmentSpecificationAdded",
@@ -184,6 +190,22 @@ def _root_segment_id(eq: dict):
     return None
 
 
+def affix_segments(etype: str, p: dict) -> tuple[str | None, list[str]]:
+    """(child id, root segment ids its parent affixes name) of a placement
+    (its embedded hops, ProjektorState.cs:162-167) or an affix event."""
+    if etype == "SpanEquipmentPlacedInRouteNetwork":
+        eq = p.get("equipment") or {}
+        child, hops = eq.get("id"), eq.get("utilityNetworkHops")
+    else:
+        child, hops = p.get("spanEquipmentId"), p.get("newUtilityHopList")
+    segs = [
+        affix.get("spanSegmentId")
+        for hop in hops or []
+        for affix in (hop or {}).get("parentAffixes") or []
+    ]
+    return child, [s for s in segs if s is not None]
+
+
 def _arrow(rows: list[dict], cols: list[str], types: dict):
     import pyarrow as pa
 
@@ -198,6 +220,7 @@ _STATE_TYPES = {
     "is_customer_conduit": "bool",
     "root_has_from_conn": "bool",
     "root_has_to_conn": "bool",
+    "has_child": "bool",
 }
 
 
@@ -205,15 +228,21 @@ def replay_span_batch(
     parsed: list[tuple[int, str, dict]],
     span_ids: list[str],
     all_eq: list[str],
-    has_child: dict[str, bool],
+    roots: dict[str, str],
+    parents: dict[str, list[str]],
     sink,
 ) -> dict[str, tuple[list[str], object]]:
     """Replay one chunk's span/spec events over sink-seeded state.
 
-    ``span_ids`` — entities the chunk touches (the span state and
-    ``span_equipment`` keys); ``all_eq`` — span_ids ∪ their affix parents
-    (the ``_aux_slack_end`` keys); ``has_child`` — folded flags from the
-    edge neighborhood (incremental.build_edge_context), keys ⊆ all_eq.
+    ``span_ids`` — entities the chunk touches (the ``span_equipment``
+    keys); ``all_eq`` — span_ids ∪ the parents the seeded rows name (the
+    ``_aux_span_state`` and ``_aux_slack_end`` keys); ``roots`` — the
+    root segment → span rows of the chunk's affix segments; ``parents`` —
+    child → affixed parents for every child that affixes or detaches
+    (incremental.build_edge_context). Affix and detach follow
+    ``FoldOracle``: an affix flags each parent its segments resolve to and
+    lists it under the child, a detach clears the child's list and each
+    listed parent's flag.
     """
     events = [e for e in parsed if e[1] in SPAN_EVENT_TYPES]
 
@@ -265,6 +294,18 @@ def replay_span_batch(
         name, ssid = hit
         return name, struct_specs.get(ssid)
 
+    touched_roots: set[str] = set()
+
+    def affix(child, segs):
+        """ProjektorState.cs:358-371: flag each live parent a segment
+        names and list it under the child."""
+        for seg in segs:
+            parent = roots.get(seg)
+            if parent is not None:
+                if parent in states:
+                    states[parent]["has_child"] = True
+                parents[child].append(parent)
+
     for seq, etype, p in events:
         if etype == "SpanEquipmentSpecificationAdded":
             s = p["specification"]
@@ -277,6 +318,7 @@ def replay_span_batch(
             eq = p["equipment"]
             addr = eq.get("addressInfo") or {}
             spec_name, outer = resolve_spec(eq.get("specificationId"))
+            root = _root_segment_id(eq)
             states[eq["id"]] = {
                 "id": eq["id"],
                 "name": eq.get("name"),
@@ -291,10 +333,24 @@ def replay_span_batch(
                 "is_customer_conduit": (
                     ("ø12" in spec_name.lower()) if spec_name is not None else None
                 ),
-                "root_segment_id": _root_segment_id(eq),
+                "root_segment_id": root,
                 "root_has_from_conn": _any_conn(eq, "from"),
                 "root_has_to_conn": _any_conn(eq, "to"),
+                "has_child": False,
             }
+            if root is not None:
+                roots[root] = eq["id"]
+                touched_roots.add(root)
+            affix(*affix_segments(etype, p))
+        elif etype == "SpanEquipmentAffixedToParent":
+            affix(*affix_segments(etype, p))
+        elif etype == "SpanEquipmentDetachedFromParent":
+            # ProjektorState.cs:398-417: clear the child's list and flags
+            child = p.get("spanEquipmentId")
+            for parent in parents[child]:
+                if parent in states:
+                    states[parent]["has_child"] = False
+            parents[child] = []
         elif etype in ("SpanEquipmentMoved", "SpanEquipmentMerged"):
             st = states.get(p.get("spanEquipmentId"))
             if st is not None:
@@ -315,14 +371,17 @@ def replay_span_batch(
                 st["access_address_id"] = addr.get("accessAddressId")
                 st["unit_address_id"] = addr.get("unitAddressId")
         elif etype == "SpanEquipmentRemoved":
-            states.pop(p.get("spanEquipmentId"), None)
+            st = states.pop(p.get("spanEquipmentId"), None)
+            if st is not None and st["root_segment_id"] is not None:
+                roots.pop(st["root_segment_id"], None)
+                touched_roots.add(st["root_segment_id"])
 
     # -- writes --------------------------------------------------------------
     touched_states = [states[i] for i in span_ids if i in states]
     slack_rows = []
     for i in all_eq:
         st = states.get(i)
-        if st is None or not st.get("is_customer_conduit") or has_child.get(i, False):
+        if st is None or not st.get("is_customer_conduit") or st.get("has_child"):
             continue
         if not st.get("root_has_from_conn"):
             slack_rows.append(
@@ -341,8 +400,25 @@ def replay_span_batch(
                 }
             )
 
+    fold_states = [states[i] for i in all_eq if i in states]
+    root_rows = [
+        {"root_segment_id": r, "parent_id": roots[r]}
+        for r in touched_roots
+        if r in roots
+    ]
+    edge_rows = [
+        {"child_id": c, "parent_id": p} for c, ps in parents.items() for p in ps
+    ]
     return {
-        "_aux_span_state": (span_ids, _arrow(touched_states, STATE_COLS, _STATE_TYPES)),
+        "_aux_root_segment": (
+            list(touched_roots),
+            _arrow(root_rows, ["root_segment_id", "parent_id"], {}),
+        ),
+        "_aux_affix_edge": (
+            list(parents),
+            _arrow(edge_rows, ["child_id", "parent_id"], {}),
+        ),
+        "_aux_span_state": (all_eq, _arrow(fold_states, STATE_COLS, _STATE_TYPES)),
         "span_equipment": (span_ids, _arrow(touched_states, PUBLIC_COLS, _STATE_TYPES)),
         "_aux_slack_end": (
             all_eq,

@@ -76,24 +76,32 @@ _BRONZE_SCHEMA = to_arrow_schema(ENVELOPE_SCHEMA)
 
 
 def aux_seed_frames(
-    log: EventLog, state: DataFrame | None = None, edges: DataFrame | None = None
+    log: EventLog, state: DataFrame, edges: DataFrame, has_child: DataFrame
 ) -> dict[str, DataFrame]:
-    """Aux-table seed frames from an accumulated log: the append-only edge
-    sets plus the silver span state and spec registries the driver-side
+    """Aux-table seed frames from an accumulated log: the parent/child
+    state, the silver span state and the spec registries the driver-side
     micro-batch replay reads, as ``spark_fold`` (the tests' reference fold)
-    computes them."""
+    computes them from its ``_span_state``, ``_parent_edges`` and
+    ``_has_child_final``. The parent/child state is each live root
+    segment's span, the affix edges with no later detach of their child,
+    and the span state's ``has_child``."""
     from open_ftth_relational_projector_spark.operators.lww import latest_by_key
     from open_ftth_relational_projector_spark.projections.core import (
-        _parent_edges,
         _parent_registry_versions,
-        _span_state,
     )
     from open_ftth_relational_projector_spark.streaming.replay import STATE_COLS
 
-    if state is None:
-        state = _span_state(log)
-    if edges is None:
-        edges = _parent_edges(log)
+    roots = latest_by_key(_parent_registry_versions(log), "root_segment_id").filter(
+        "root_segment_id IS NOT NULL AND parent_id IS NOT NULL"
+    )
+    detaches = log.of("SpanEquipmentDetachedFromParent").selectExpr(
+        "spanEquipmentId AS child_id", "seq AS detach_seq"
+    )
+    live_edges = edges.join(
+        detaches,
+        (edges.child_id == detaches.child_id) & (detaches.detach_seq > edges.seq),
+        "left_anti",
+    )
     span_spec = latest_by_key(
         log.of("SpanEquipmentSpecificationAdded").select(
             F.col("specification.id").alias("spec_id"),
@@ -147,12 +155,11 @@ def aux_seed_frames(
         "cable_id",
     ).select("cable_id", "seq", "interest_id")
     return {
-        "_aux_affix_edge": edges.select("child_id", "seq", "parent_id"),
-        "_aux_root_segment": _parent_registry_versions(log),
-        "_aux_detach": log.of("SpanEquipmentDetachedFromParent").select(
-            F.col("spanEquipmentId").alias("child_id"), "seq"
-        ),
-        "_aux_span_state": state.select(*STATE_COLS),
+        "_aux_affix_edge": live_edges.select("child_id", "parent_id"),
+        "_aux_root_segment": roots.select("root_segment_id", "parent_id"),
+        "_aux_span_state": state.join(has_child, "id", "left")
+        .fillna({"has_child": False})
+        .select(*STATE_COLS),
         "_aux_span_spec": span_spec,
         "_aux_struct_spec": struct_spec,
         "_aux_nc_spec": nc_spec,
@@ -191,7 +198,7 @@ def spark_fold(envelopes: DataFrame) -> tuple[dict[str, "pyarrow.Table"], int]:
     has_child = _has_child_final(log, edges=edges)
     tables = project_all(log, persist=False, state=state, has_child=has_child)
     tables["_aux_slack_end"] = slack_ends(log, state=state, has_child=has_child)
-    tables.update(aux_seed_frames(log, state=state, edges=edges))
+    tables.update(aux_seed_frames(log, state, edges, has_child))
     arrow = run_concurrent(
         {
             name: (lambda d=df, c=_FOLD_TABLES[name]: _to_arrow(d, c))
@@ -555,7 +562,8 @@ class ProjectionStream:
 
     def healthy(self) -> bool:
         """T6: the reference touches /tmp/healthy after dehydration
-        (Worker.cs:37); here health = an active, progressing query."""
+        (Worker.cs:37); here health = the query is active (``isActive``).
+        Progress is not checked (ROADMAP D4)."""
         return self.query is not None and self.query.isActive
 
     def await_drained(self, timeout: int = 300) -> None:

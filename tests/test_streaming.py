@@ -75,7 +75,7 @@ def expected_tables(envelopes):
     return {n: tables[n].toPandas() for n in PROJECTION_TABLES}
 
 
-# the 11 private aux tables the driver replay maintains
+# the 10 private aux tables the driver replay maintains
 AUX_TABLES = [t for t in TABLE_COLUMNS if t.startswith("_aux_")]
 
 
@@ -132,7 +132,7 @@ def test_streaming_equivalence_random_split(
     _stream_split(spark, envelopes, bounds, sink)
     _assert_sink_matches(sink, expected_tables)
     # every aux write of the driver replay agrees with the Spark fold
-    assert len(AUX_TABLES) == 11
+    assert len(AUX_TABLES) == 10
     for table in AUX_TABLES:
         assert _rows(sink, table) == expected_aux[table], table
 
@@ -495,61 +495,71 @@ def test_structured_streaming_available_now(spark, envelopes, expected_tables):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_latest_before_strict():
-    from open_ftth_relational_projector_spark.streaming.incremental import (
-        _latest_before,
-    )
+def test_edge_context_resolves_against_sink_registry():
+    """Three chunks over one sink keep the reference's parent/child state
+    (ProjektorState.cs:358-417): an affix resolves through the sink's root
+    row to its live parent, flags it and lists it under the child; a
+    detach clears both; a removal drops the parent's root row, so a later
+    affix to its segment resolves to nothing."""
+    import pyarrow as pa
 
-    versions = [(2, "a"), (5, None), (9, "b")]
-    assert _latest_before(versions, 1) is None
-    assert _latest_before(versions, 2) is None  # strict: vseq < seq
-    assert _latest_before(versions, 3) == (2, "a")
-    assert _latest_before(versions, 6) == (5, None)  # tombstone visible
-    assert _latest_before(versions, 100) == (9, "b")
-
-
-def test_edge_context_resolves_against_sink_registry(spark):
-    """A batch affix referencing a root segment REGISTERED IN AN EARLIER
-    BATCH must resolve through the sink aux registry, and an intervening
-    removal must tombstone it."""
     from open_ftth_relational_projector_spark.streaming.incremental import (
         build_edge_context,
+    )
+    from open_ftth_relational_projector_spark.streaming.replay import (
+        _STATE_TYPES,
+        STATE_COLS,
+        _arrow,
     )
 
     sink = DuckDBSink()
     sink.ensure_schema()
     sink.append(
         "_aux_root_segment",
-        __import__("pyarrow").table(
-            {
-                "root_segment_id": ["seg-p1", "seg-p2", "seg-p2"],
-                "seq": [1, 2, 6],
-                "parent_id": ["p1", "p2", None],  # p2 removed at seq 6
-            }
-        ),
+        pa.table({"root_segment_id": ["seg-p1"], "parent_id": ["p1"]}),
     )
-    parsed = [
-        (10, "SpanEquipmentAffixedToParent",
-         {"spanEquipmentId": "c1",
-          "newUtilityHopList": [{"parentAffixes": [{"spanSegmentId": "seg-p1"}]}]}),
-        (11, "SpanEquipmentAffixedToParent",
-         {"spanEquipmentId": "c2",
-          "newUtilityHopList": [{"parentAffixes": [{"spanSegmentId": "seg-p2"}]}]}),
-    ]
-    ids = {"span": ["c1", "c2"], "cable": ["c1", "c2"]}
-    writes = build_edge_context(parsed, ids, sink)
-    _, new_edges = writes["_aux_affix_edge"]
-    resolved = sorted(
-        zip(
-            new_edges.column("child_id").to_pylist(),
-            new_edges.column("parent_id").to_pylist(),
+    p1 = {c: None for c in STATE_COLS}
+    p1.update(id="p1", root_segment_id="seg-p1", has_child=False)
+    sink.append("_aux_span_state", _arrow([p1], STATE_COLS, _STATE_TYPES))
+
+    def affix(seq, child, seg):
+        return (seq, "SpanEquipmentAffixedToParent",
+                {"spanEquipmentId": child,
+                 "newUtilityHopList": [{"parentAffixes": [{"spanSegmentId": seg}]}]})
+
+    def apply(parsed, spans):
+        writes = build_edge_context(parsed, {"span": spans}, sink)
+        for table, (keys, rows) in writes.items():
+            sink.replace_group(table, keys, rows)
+        return writes
+
+    def state():
+        return (
+            _rows(sink, "_aux_root_segment"),
+            _rows(sink, "_aux_affix_edge"),
+            dict(sink.lookup("_aux_span_state", ["id", "has_child"], "id", ["p1"])),
         )
+
+    # chunk 1: c1 resolves through the seeded root row; seg-x has no row
+    writes = apply([affix(10, "c1", "seg-p1"), affix(11, "c2", "seg-x")], ["c1", "c2"])
+    assert sorted(writes["_aux_affix_edge"][0]) == ["c1", "c2"]
+    # the fold keys (touched spans ∪ parents the rows name) key the slack ends
+    assert set(writes["_aux_slack_end"][0]) == {"c1", "c2", "p1"}
+    assert state() == (Counter({("seg-p1", "p1"): 1}),
+                       Counter({("c1", "p1"): 1}), {"p1": True})
+
+    # chunk 2: the detach empties c1's group and clears p1's flag
+    apply([(12, "SpanEquipmentDetachedFromParent", {"spanEquipmentId": "c1"})], ["c1"])
+    assert state() == (Counter({("seg-p1", "p1"): 1}), Counter(), {"p1": False})
+
+    # chunk 3: the removal deletes p1's root row; the later affix misses
+    writes = apply(
+        [(13, "SpanEquipmentRemoved", {"spanEquipmentId": "p1"}),
+         affix(14, "c3", "seg-p1")],
+        ["p1", "c3"],
     )
-    # c1 -> p1 resolves; c2's parent was tombstoned before the affix
-    assert resolved == [("c1", "p1")]
-    # the fold keys (touched spans ∪ affix parents) key the slack-end write
-    all_eq, _ = writes["_aux_slack_end"]
-    assert set(all_eq) == {"c1", "c2", "p1"}
+    assert writes["_aux_root_segment"][0] == ["seg-p1"]
+    assert state() == (Counter(), Counter(), {})
 
 
 def test_spec_only_batch_feeds_later_placements(spark, envelopes, expected_tables):
@@ -587,41 +597,6 @@ def test_spec_only_batch_feeds_later_placements(spark, envelopes, expected_table
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     _stream_split(spark, envelopes, [10, 30, max_seq], sink)
     _assert_sink_matches(sink, expected_tables)
-
-
-def test_fold_has_child_matches_spark_fold(spark):
-    """The driver-side has-child fold must agree with the Spark
-    _has_child_final over a full generated log's edge/detach sets."""
-    from open_ftth_relational_projector_spark.projections.core import (
-        _has_child_final,
-        _parent_edges,
-    )
-    from open_ftth_relational_projector_spark.streaming.incremental import (
-        _fold_has_child,
-    )
-    from pyspark.sql import functions as F
-
-    env = spark.createDataFrame(
-        to_envelope_rows(generate(seed=7, scale=15)), ENVELOPE_SCHEMA
-    )
-    log = EventLog.from_envelopes(env)
-    edges_df = _parent_edges(log)
-    edges = [
-        (r.child_id, r.seq, r.parent_id)
-        for r in edges_df.select("child_id", "seq", "parent_id").collect()
-    ]
-    detaches = [
-        (r.child_id, r.seq)
-        for r in log.of("SpanEquipmentDetachedFromParent")
-        .select(F.col("spanEquipmentId").alias("child_id"), "seq")
-        .collect()
-    ]
-    spark_rows = {
-        (r.id, r.has_child) for r in _has_child_final(log).collect()
-    }
-    driver_rows = set(_fold_has_child(edges, detaches))
-    assert driver_rows == spark_rows
-    assert len(driver_rows) > 0
 
 
 def test_apply_batch_oversized_batch_replays_in_chunks(spark, monkeypatch):
@@ -1080,7 +1055,7 @@ def test_dehydrate_gate_both_ways(spark, monkeypatch, seed, dup_every):
     driver over emptied tables either way: as the probe's one chunk when
     it fits (the cap left alone), in seq-ordered chunks when the cap is
     monkeypatched below the log size. The Spark fold never runs, and both
-    leave all 19 fold tables and the watermark equal, as multisets, to the
+    leave all 18 fold tables and the watermark equal, as multisets, to the
     Spark fold, the tests' reference; the 8 public tables
     equal the Python fold oracle — also for a log holding every
     ``dup_every``-th row twice."""
@@ -1115,7 +1090,7 @@ def test_dehydrate_gate_both_ways(spark, monkeypatch, seed, dup_every):
     assert dehydrate(env, chunked) == len(events)
     assert len(chunks) >= 3 and max(chunks) <= cap and sum(chunks) == len(events)
 
-    assert len(TABLE_COLUMNS) == 20  # the 19 fold tables + the meta table
+    assert len(TABLE_COLUMNS) == 19  # the 18 fold tables + the meta table
     for table in TABLE_COLUMNS:
         assert _rows(one_chunk, table) == _rows(reference, table), table
         assert _rows(chunked, table) == _rows(reference, table), table
