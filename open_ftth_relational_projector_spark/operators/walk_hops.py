@@ -19,8 +19,10 @@ Because walk elements are unique (the walk is stored deduplicated,
 ProjektorState.cs:101,106), this sequential stack machine is expressible as a
 single left fold over the walk — implemented here with ``F.aggregate``, a
 JVM-side higher-order function: whole-stage-codegen'd, zero Python, zero
-extra shuffle, embarrassingly parallel per row. A pandas-UDF reference
-implementation (``subtract_hops_py``) exists for differential testing only.
+extra shuffle, embarrassingly parallel per row. ``subtract_hops_py`` is the
+same machine in plain Python: the driver replay
+(``streaming/replay.replay_rel_batch``) runs it on every cable placement,
+affix and detach, and the tests compare it with the column fold.
 
 Accumulator: struct(kept array, hop_idx int — next unconsumed hop,
 skip_to string — ToNodeId while inside a hop span, else NULL).
@@ -72,7 +74,8 @@ def subtract_hops(walk: Column, hops: Column) -> Column:
 
 
 def subtract_hops_py(walk: list[str] | None, hops: list | None) -> list[str] | None:
-    """Pure-Python oracle of the same semantics, for differential tests.
+    """The same semantics in plain Python, one walk at a time: the driver
+    replay's cable walks, and the tests' check of ``subtract_hops``.
 
     Literal transcription of the stack machine (ProjektorState.cs:188-215).
     ``hops`` items: anything with from_node_id / to_node_id attributes or keys.

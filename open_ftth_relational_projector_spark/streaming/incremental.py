@@ -69,8 +69,9 @@ CABLE_TRIGGER_TYPES = [
 
 def parse_envelope_rows(rows) -> list[tuple[int, str, dict]]:
     """(seq, event_type, payload-json-string) rows → parsed tuples — the
-    ONE definition of the driver-side batch shape (apply_batch's size-gate
-    probe routes through it). Rows are unpacked by position: a Spark
+    ONE definition of the driver-side batch shape: the size-gate probe's
+    rows (tuples zipped from its Arrow columns) and ``_seq_chunks``' Spark
+    ``Row``s both route through it. Rows are unpacked by position: a
     ``Row``'s field access by name costs a lookup per field."""
     import json
 

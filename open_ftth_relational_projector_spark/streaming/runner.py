@@ -20,15 +20,20 @@ replay of seq-ordered chunks over sink state (``_apply_chunks``):
   ``readStream`` over an envelope directory, ``foreachBatch`` into
   ``apply_batch``, default trigger processingTime=2s matching the
   reference's poll loop (Worker.cs:47), ``availableNow`` for drain-and-stop
-  runs. A trigger probes its batch once: an empty probe ends it, a
-  probe-sized batch is appended to bronze by the driver from the probe
-  rows and applied from them — one Spark job per trigger. Bronze is read
-  only by an overlapping batch's rebuild, whose fold counts each ``seq``
-  once, so a crash between bronze append and sink commit re-applies
-  cleanly. The batch itself is deduped inside ``apply_batch``:
-  driver-side on the collected probe rows, in Spark by the chunk source —
-  a probe-sized batch costs no shuffle, and no driver-path job reads the
-  accumulated log.
+  runs. A trigger probes its batch once, fetched as one Arrow table: an
+  empty probe ends it, a probe-sized batch is appended to bronze by the
+  driver from the probe table and applied from it — one Spark job per
+  trigger. Bronze is read only by an overlapping batch's rebuild, whose
+  fold counts each ``seq`` once, so a crash between bronze append and sink
+  commit re-applies cleanly. The batch itself is deduped inside
+  ``apply_batch``: driver-side on the probe's columns, in Spark by the
+  chunk source — a probe-sized batch costs no shuffle, and no driver-path
+  job reads the accumulated log.
+
+``dehydrate`` and ``apply_batch`` run with Python's cyclic garbage
+collector paused (``_gc_paused``): the fold allocates one dict per payload
+and per row, all acyclic and freed by reference counting, and a collector
+pass would re-scan the whole driver heap for none of them.
 
 ``spark_fold``, the same fold planned in Spark, is the tests' reference.
 
@@ -41,10 +46,12 @@ exploit this by splitting one log at random points.
 
 from __future__ import annotations
 
+import gc
 import os
 import uuid
 from collections import Counter
 from collections.abc import Callable
+from contextlib import contextmanager
 from itertools import chain, islice
 from urllib.parse import urlsplit
 
@@ -73,6 +80,21 @@ _FOLD_TABLES = {
     if name != "_projector_meta"
 }
 _BRONZE_SCHEMA = to_arrow_schema(ENVELOPE_SCHEMA)
+
+
+@contextmanager
+def _gc_paused():
+    """Pause the cyclic garbage collector for the block (or the decorated
+    call), then restore the state it had on entry. Reference counting
+    still frees every acyclic object; a cycle made meanwhile waits for the
+    next collector pass."""
+    enabled = gc.isenabled()
+    gc.disable()
+    try:
+        yield
+    finally:
+        if enabled:
+            gc.enable()
 
 
 def aux_seed_frames(
@@ -230,19 +252,21 @@ def compute_deltas(envelopes: DataFrame, sink) -> int | None:
         MAX_DRIVER_BATCH_ROWS,
     )
 
-    probe_rows = _probe_collect(envelopes, MAX_DRIVER_BATCH_ROWS)
+    probe = _probe_collect(envelopes, MAX_DRIVER_BATCH_ROWS)
     for name, cols in _FOLD_TABLES.items():
         sink.overwrite(name, pa.table({c: [] for c in cols}))
-    return _apply_chunks(_driver_chunks(envelopes, probe_rows), sink)
+    return _apply_chunks(_driver_chunks(envelopes, probe), sink)
 
 
+@_gc_paused()
 def dehydrate(envelopes: DataFrame, sink) -> int:
     """Full replay → bulk snapshot (T2 phase 1). Returns the watermark seq.
 
     The log is folded by ``compute_deltas`` — the fold catch-up runs, as in
-    the reference (Worker.cs:22-48). Every table and the watermark (the
-    log's max seq, 0 for an empty log) are written in one sink
-    transaction, so a failed dehydrate leaves the sink as it was.
+    the reference (Worker.cs:22-48) — with the cyclic garbage collector
+    paused (``_gc_paused``). Every table and the watermark (the log's max
+    seq, 0 for an empty log) are written in one sink transaction, so a
+    failed dehydrate leaves the sink as it was.
     """
     sink.ensure_schema()
     sink.begin()
@@ -290,10 +314,12 @@ def apply_slack_delta(sink, keys: list[str], rows) -> None:
     )
 
 
-def _probe_collect(batch_envelopes: DataFrame, cap: int) -> list:
-    """Bounded size-gate probe: pull at most ``cap + 1`` RAW envelope rows
-    (seq, event_type, payload — payload stays an unparsed JSON string).
-    A batch that fits is applied from these rows as one chunk.
+def _probe_collect(batch_envelopes: DataFrame, cap: int) -> pa.Table:
+    """Bounded size-gate probe: fetch at most ``cap + 1`` RAW envelope rows
+    (seq, event_type, payload — payload stays an unparsed JSON string) as
+    one Arrow table, which the driver decodes a column at a time rather
+    than unpickling a ``Row`` per event. A batch that fits is applied from
+    this table as one chunk.
 
     The input is read as one partition: ``limit`` then scans it in one
     job whatever the input's partitioning (over several partitions it
@@ -302,11 +328,11 @@ def _probe_collect(batch_envelopes: DataFrame, cap: int) -> list:
         batch_envelopes.select("seq", "event_type", "payload")
         .coalesce(1)
         .limit(cap + 1)
-        .collect()
+        .toArrow()
     )
 
 
-def _probe_chunk(probe_rows: list) -> list[tuple[int, str, dict]]:
+def _probe_chunk(probe: pa.Table) -> list[tuple[int, str, dict]]:
     """A probe-sized batch as its one parsed chunk: the first row per seq,
     in seq order — the one sort; every replay reads its chunk in seq
     order."""
@@ -315,7 +341,7 @@ def _probe_chunk(probe_rows: list) -> list[tuple[int, str, dict]]:
     )
 
     first_per_seq: dict = {}
-    for row in probe_rows:
+    for row in zip(*(col.to_pylist() for col in probe.columns)):
         first_per_seq.setdefault(row[0], row)
     return parse_envelope_rows([first_per_seq[s] for s in sorted(first_per_seq)])
 
@@ -335,7 +361,7 @@ def _seq_chunks(batch_envelopes: DataFrame, cap: int):
         yield chunk
 
 
-def _driver_chunks(batch_envelopes: DataFrame, probe_rows: list):
+def _driver_chunks(batch_envelopes: DataFrame, probe: pa.Table):
     """The batch as parsed, seq-ordered chunks of at most
     ``MAX_DRIVER_BATCH_ROWS`` rows: the probe's one chunk when the batch
     fits, else the batch streamed by ``_seq_chunks``."""
@@ -344,8 +370,8 @@ def _driver_chunks(batch_envelopes: DataFrame, probe_rows: list):
         parse_envelope_rows,
     )
 
-    if len(probe_rows) <= MAX_DRIVER_BATCH_ROWS:
-        return iter([_probe_chunk(probe_rows)])
+    if probe.num_rows <= MAX_DRIVER_BATCH_ROWS:
+        return iter([_probe_chunk(probe)])
     return map(
         parse_envelope_rows, _seq_chunks(batch_envelopes, MAX_DRIVER_BATCH_ROWS)
     )
@@ -393,12 +419,13 @@ def _apply_driver_chunk(parsed: list[tuple[int, str, dict]], sink) -> None:
         apply_slack_delta(sink, *slack)
 
 
+@_gc_paused()
 def apply_batch(
     full_envelopes: DataFrame | Callable[[], DataFrame],
     batch_envelopes: DataFrame,
     sink,
     batch_id: int | None = None,
-    probe_rows: list | None = None,
+    probe: pa.Table | None = None,
 ) -> bool:
     """Apply one micro-batch incrementally. Returns False if skipped
     (already-applied batch_id — T5 exactly-once).
@@ -424,11 +451,12 @@ def apply_batch(
     frame, for callers that already hold the log (bench.py, the catalog's
     projector query, perfbench, the tests).
 
-    ``probe_rows`` is the batch's ``_probe_collect`` result when the
-    caller already holds it, so the batch is not probed twice.
+    ``probe`` is the batch's ``_probe_collect`` result when the caller
+    already holds it, so the batch is not probed twice.
 
     Either path runs in one sink transaction, so a failed batch leaves the
     sink unchanged; ``batch_id`` and the watermark are written at commit.
+    Both run with the cyclic garbage collector paused (``_gc_paused``).
     ``batch_envelopes`` may hold duplicate ``seq`` rows (a re-read file, a
     re-delivered source batch): the probe keeps the first row per seq, the
     chunk source dedups in Spark."""
@@ -439,9 +467,9 @@ def apply_batch(
         MAX_DRIVER_BATCH_ROWS,
     )
 
-    if probe_rows is None:
-        probe_rows = _probe_collect(batch_envelopes, MAX_DRIVER_BATCH_ROWS)
-    chunks = _driver_chunks(batch_envelopes, probe_rows)
+    if probe is None:
+        probe = _probe_collect(batch_envelopes, MAX_DRIVER_BATCH_ROWS)
+    chunks = _driver_chunks(batch_envelopes, probe)
     first = next(chunks)
     prev_wm = int(sink.get_meta("watermark") or 0)
     sink.begin()
@@ -463,16 +491,15 @@ def apply_batch(
     return True
 
 
-def _append_bronze(rows: list, bronze_dir: str) -> None:
-    """Append probe rows to bronze as one parquet file with
+def _append_bronze(probe: pa.Table, bronze_dir: str) -> None:
+    """Append the probe table to bronze as one parquet file with
     ENVELOPE_SCHEMA's types, written under a dot-prefixed name (which
     Spark's reader skips) and renamed into place, so a reader sees the
     whole file or none of it."""
-    table = pa.table(dict(zip(_BRONZE_SCHEMA.names, zip(*rows))), schema=_BRONZE_SCHEMA)
     os.makedirs(bronze_dir, exist_ok=True)
     name = f"part-{uuid.uuid4()}.parquet"
     tmp = os.path.join(bronze_dir, f".{name}.tmp")
-    pq.write_table(table, tmp)
+    pq.write_table(probe.cast(_BRONZE_SCHEMA), tmp)
     os.replace(tmp, os.path.join(bronze_dir, name))
 
 
@@ -523,23 +550,21 @@ class ProjectionStream:
 
     def _process(self, batch_df: DataFrame, batch_id: int) -> None:
         """One trigger: probe the batch; append it to bronze before the
-        sink commit — from the probe rows when it fits, else in Spark —
+        sink commit — from the probe table when it fits, else in Spark —
         and apply it. Bronze is read only if the batch overlaps the
         watermark. The batch is deduped inside apply_batch."""
         from open_ftth_relational_projector_spark.streaming.incremental import (
             MAX_DRIVER_BATCH_ROWS,
         )
 
-        probe_rows = _probe_collect(batch_df, MAX_DRIVER_BATCH_ROWS)
-        if not probe_rows:
+        probe = _probe_collect(batch_df, MAX_DRIVER_BATCH_ROWS)
+        if probe.num_rows == 0:
             return
-        if len(probe_rows) <= MAX_DRIVER_BATCH_ROWS:
-            _append_bronze(probe_rows, self.bronze_dir)
+        if probe.num_rows <= MAX_DRIVER_BATCH_ROWS:
+            _append_bronze(probe, self.bronze_dir)
         else:
             batch_df.write.mode("append").parquet(self.bronze_dir)
-        apply_batch(
-            self._bronze, batch_df, self.sink, batch_id=batch_id, probe_rows=probe_rows
-        )
+        apply_batch(self._bronze, batch_df, self.sink, batch_id=batch_id, probe=probe)
 
     def start(self, available_now: bool = False, trigger_seconds: float = 2.0):
         reader = self.spark.readStream.schema(ENVELOPE_SCHEMA)

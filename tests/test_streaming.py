@@ -1169,7 +1169,12 @@ def test_driver_written_bronze(spark, envelopes, events):
     stream's retry after a crash in that window — yields the oracle
     tables. Bronze is read only by an overlapping batch's rebuild, which
     folds it (duplicates included) to the oracle tables again. A bronze
-    URI is rejected: the driver writes bronze as a local path."""
+    URI is rejected: the driver writes bronze as a local path. The
+    driver-written file's parquet schema is ENVELOPE_SCHEMA's."""
+    import pyarrow.parquet as pq
+
+    from open_ftth_relational_projector_spark.streaming.runner import _BRONZE_SCHEMA
+
     max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
     cut, mid = max_seq // 3, 2 * max_seq // 3
     oracle = _oracle_rows(events)
@@ -1209,6 +1214,7 @@ def test_driver_written_bronze(spark, envelopes, events):
         stream._process(first, 0)
         (new,) = set(parts()) - set(spark_parts)
         assert dot_files() == []
+        assert pq.read_schema(f"{bronze}/{new}").equals(_BRONZE_SCHEMA)
         back = spark.read.schema(ENVELOPE_SCHEMA).parquet(f"{bronze}/{new}")
         assert Counter(back.collect()) == Counter(first.collect())
 
@@ -1244,3 +1250,76 @@ def test_driver_written_bronze(spark, envelopes, events):
         assert dot_files() == []
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_probe_collect_matches_collect(spark, envelopes):
+    """The probe fetches the rows a ``collect()`` of the same select
+    returns, as Arrow: over a 16-partition input with duplicated seqs the
+    same (seq, event_type, payload) multiset, decoded to Python ``int``
+    and ``str``; ``cap + 1`` rows of a larger input; none of an empty
+    one."""
+    from open_ftth_relational_projector_spark.streaming.runner import _probe_collect
+
+    rows = envelopes.collect()
+    wide = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows + rows[::3], 16), ENVELOPE_SCHEMA
+    )
+    assert wide.rdd.getNumPartitions() == 16
+    probe = _probe_collect(wide, len(rows) * 2)
+    assert probe.column_names == ["seq", "event_type", "payload"]
+    got = Counter(zip(*(col.to_pylist() for col in probe.columns)))
+    want = Counter(
+        tuple(r) for r in wide.select("seq", "event_type", "payload").collect()
+    )
+    assert got == want and sum(got.values()) == len(rows) + len(rows[::3])
+    assert all(
+        type(seq) is int and type(etype) is str and type(payload) is str
+        for seq, etype, payload in got
+    )
+    assert _probe_collect(wide, 7).num_rows == 8
+    assert _probe_collect(spark.createDataFrame([], ENVELOPE_SCHEMA), 7).num_rows == 0
+
+
+@pytest.mark.parametrize("enabled", [True, False], ids=["gc-on", "gc-off"])
+def test_driver_fold_restores_gc_state(spark, envelopes, monkeypatch, enabled):
+    """``dehydrate`` and ``apply_batch`` fold with Python's cyclic
+    collector paused and leave it as they found it — enabled or disabled
+    by the caller — after a dehydrate, a driver-path batch, and a batch
+    whose sink commit raises. That batch still raises, and the sink is
+    left unchanged."""
+    import gc
+
+    import open_ftth_relational_projector_spark.streaming.runner as R
+
+    real_chunk, paused = R._apply_driver_chunk, []
+
+    def recorded_chunk(parsed, sink):
+        paused.append(not gc.isenabled())
+        return real_chunk(parsed, sink)
+
+    monkeypatch.setattr(R, "_apply_driver_chunk", recorded_chunk)
+    max_seq = envelopes.agg({"seq": "max"}).collect()[0][0]
+    cut, mid = max_seq // 3, 2 * max_seq // 3
+    was = gc.isenabled()
+    (gc.enable if enabled else gc.disable)()
+    try:
+        sink = DuckDBSink()
+        dehydrate(envelopes.filter(f"seq <= {cut}"), sink)
+        assert gc.isenabled() is enabled
+        batch = envelopes.filter(f"seq > {cut} AND seq <= {mid}")
+        assert apply_batch(envelopes, batch, sink, batch_id=0) is True
+        assert gc.isenabled() is enabled
+
+        before = {t: _rows(sink, t) for t in TABLE_COLUMNS}
+
+        def failing_commit():
+            raise RuntimeError("sink failure at commit")
+
+        sink.commit = failing_commit
+        with pytest.raises(RuntimeError, match="sink failure at commit"):
+            apply_batch(envelopes, envelopes.filter(f"seq > {mid}"), sink, batch_id=1)
+        assert gc.isenabled() is enabled
+        assert {t: _rows(sink, t) for t in TABLE_COLUMNS} == before
+    finally:
+        (gc.enable if was else gc.disable)()
+    assert len(paused) == 3 and all(paused)
